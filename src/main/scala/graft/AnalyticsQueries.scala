@@ -1394,7 +1394,9 @@ object AnalyticsQueries {
         .select(col("x"), col("c"),
           (col("x") * ((col("off") + col("runc") - col("c")) * col("c") +
             shiftright(col("c") * (col("c") + 1L), 1))).as("gx"))
-        .agg(sum(col("c")).as("n_users"),
+        // coalesce: count(*) in the oracle gives 0 users on an empty
+        // purchase set, where a bare sum over zero rows is NULL
+        .agg(coalesce(sum(col("c")), lit(0L)).as("n_users"),
           sum(col("x") * col("c")).as("total_cents"),
           sum(col("gx")).as("_ix"))
         .select(col("n_users"), col("total_cents"),

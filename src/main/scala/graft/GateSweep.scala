@@ -22,53 +22,32 @@ import org.apache.spark.sql.SparkSession
   * > [[ColdDeltaSec]] must be attributable to a documented train-once
   * model (the trained-model-literal discipline), not per-query work.
   *
-  * Run: `sbt "runMain graft.GateSweep [sfDir] [outPath]"`.
+  * Run: `sbt "runMain graft.GateSweep [sfDir] [outPath] [gate,gate...]"`.
   */
 object GateSweep {
 
   val FlagSec = 3.0
   val ColdDeltaSec = 10.0
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Harness.withSession(spark => println(run(spark, args)))
+
+  /** Writes the sweep to `outPath` and returns a one-line summary. */
+  def run(spark: SparkSession, args: Array[String]): String = {
+    import Harness.json
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = args.lift(1).getOrElse("tools/bench_all_gates_latest.json")
     // optional 3rd arg: comma-separated gate names to sweep (round 16
     // — the sf1 scale-trend receipt sweeps a named subset)
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    val warmDir = "/root/testdata/sf0.001"
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    Harness.warm(spark, names)
 
     def pass(): Seq[(String, Double)] = names.map { n =>
-      val t0 = System.nanoTime()
-      val sec =
-        try {
-          SparkEntry.queries(n)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[sweep] $n failed: ${e.getMessage}")
-          -1.0
-        }
-      n -> sec
+      n -> Harness.timeOnce(spark, n, sfDir, tag = "sweep").getOrElse(-1.0)
     }
     val cold = pass().toMap
     val warm = pass()
@@ -76,9 +55,6 @@ object GateSweep {
     val coldDeltas = warm
       .map { case (k, w) => (k, cold.getOrElse(k, -1.0) - w) }
       .filter(_._2 > ColdDeltaSec).sortBy(-_._2)
-    def json(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
     val out =
       s"""{"sf":"$sfDir","gates":${warm.size},"flag_sec":$FlagSec,
          |"flagged":${json(flagged)},
@@ -88,7 +64,6 @@ object GateSweep {
     val p = java.nio.file.Paths.get(outPath)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, out.getBytes("UTF-8"))
-    println(s"""{"sweep":"$outPath","gates":${warm.size},"flagged":${flagged.size}}""")
-    spark.stop()
+    s"""{"sweep":"$outPath","gates":${warm.size},"flagged":${flagged.size}}"""
   }
 }

@@ -3,34 +3,26 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
+import scala.jdk.CollectionConverters._
+
 /** Dev profiler (round 17): run one gate warm and report, for the
   * final timed invocation, every Spark job it fired (wall-clock) plus
   * the summed executor task time — separating fixed driver/scheduling
   * overhead (wall >> task time) from real compute (wall ≈ task/cores).
+  * The report is one JSON object.
   *
   * Run: `runMain graft.JobProfile <sfDir> <name> [warmRuns]`.
   */
 object JobProfile {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Harness.withSession(spark => println(run(spark, args)))
+
+  def run(spark: SparkSession, args: Array[String]): String = {
+    import Harness.fmt
     val sfDir = args(0)
     val name = args(1)
     val warm = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    (1 to warm).foreach { _ =>
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
+    (1 to warm).foreach(_ => Harness.materialize(spark, name, sfDir))
 
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobWall = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
@@ -40,7 +32,7 @@ object JobProfile {
     // shuffle write B) — the skew/parallelism attribution the per-job
     // walls can't give (round 18)
     val stage = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long, Long, Long, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobStart.put(j.jobId, j.time)
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
@@ -57,33 +49,35 @@ object JobProfile {
         }
         taskCount.incrementAndGet()
       }
-    })
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    val wall = (System.nanoTime() - t0) / 1e9
-    // listener bus is async — poll until the event stream stabilizes
-    // instead of a fixed sleep that drops late events (ADVICE r17)
-    var seen = -1
-    var spins = 0
-    while (taskCount.get() != seen && spins < 20) {
-      seen = taskCount.get(); spins += 1; Thread.sleep(250)
     }
-    val jobs = jobWall.entrySet().toArray
-      .map(_.asInstanceOf[java.util.Map.Entry[Int, Long]])
-      .sortBy(_.getKey)
-    println(f"query=$name wall=$wall%.3f s jobs=${jobs.length} " +
-      f"taskTimeSum=${taskTime.get() / 1e3}%.3f s tasks=${taskCount.get()}")
-    jobs.foreach(e => println(f"  job ${e.getKey}%3d  wall=${e.getValue / 1e3}%.3f s"))
-    stage.entrySet().toArray
-      .map(_.asInstanceOf[java.util.Map.Entry[Int, (Int, Long, Long, Long, Long)]])
-      .sortBy(_.getKey)
-      .foreach { e =>
-        val (n, sum, mx, sr, sw) = e.getValue
-        println(f"  stage ${e.getKey}%3d tasks=$n%4d sumTask=${sum / 1e3}%8.3f s " +
-          f"maxTask=${mx / 1e3}%8.3f s shufRead=${sr / 1e6}%8.1f MB " +
-          f"shufWrite=${sw / 1e6}%8.1f MB")
-      }
-    spark.stop()
+    spark.sparkContext.addSparkListener(listener)
+    val wall =
+      try {
+        val t0 = System.nanoTime()
+        Harness.materialize(spark, name, sfDir)
+        val sec = (System.nanoTime() - t0) / 1e9
+        // listener bus is async — poll until the event stream stabilizes
+        // instead of a fixed sleep that drops late events (ADVICE r17)
+        var seen = -1
+        var spins = 0
+        while (taskCount.get() != seen && spins < 20) {
+          seen = taskCount.get(); spins += 1; Thread.sleep(250)
+        }
+        sec
+      } finally spark.sparkContext.removeSparkListener(listener)
+
+    val jobs = jobWall.asScala.toSeq.sortBy(_._1).map { case (id, ms) =>
+      s"""{"job":$id,"wall_s":${fmt(ms / 1e3)}}"""
+    }
+    val stages = stage.asScala.toSeq.sortBy(_._1).map {
+      case (id, (n, sum, mx, sr, sw)) =>
+        s"""{"stage":$id,"tasks":$n,"task_s_sum":${fmt(sum / 1e3)},""" +
+          s""""task_s_max":${fmt(mx / 1e3)},"shuffle_read_mb":${fmt(sr / 1e6)},""" +
+          s""""shuffle_write_mb":${fmt(sw / 1e6)}}"""
+    }
+    s"""{"query":"$name","wall_s":${fmt(wall)},"tasks":${taskCount.get()},""" +
+      s""""task_s_sum":${fmt(taskTime.get() / 1e3)},""" +
+      s""""jobs":${jobs.mkString("[", ",", "]")},""" +
+      s""""stages":${stages.mkString("[", ",", "]")}}"""
   }
 }

@@ -37,15 +37,14 @@ import org.apache.spark.sql.functions._
   * Run: `sbt "runMain graft.MakeScaledCorpus <inDir> <outDir> [k]"`.
   */
 object MakeScaledCorpus {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Harness.withSession(spark => println(run(spark, args)))
+
+  /** Writes the k× corpus and returns its row counts as one JSON line. */
+  def run(spark: SparkSession, args: Array[String]): String = {
     val in = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$in/$t.parquet")
     def wr(df: DataFrame, t: String): Unit =
@@ -105,7 +104,6 @@ object MakeScaledCorpus {
     val counts = Seq("customer", "orders", "lineitem", "events",
       "documents", "embeddings").map(t =>
       s""""$t":${spark.read.parquet(s"$out/$t.parquet").count()}""")
-    println(s"""{"scaled":"$out","k":$k,${counts.mkString(",")}}""")
-    spark.stop()
+    s"""{"scaled":"$out","k":$k,${counts.mkString(",")}}"""
   }
 }

@@ -12,20 +12,21 @@ import org.apache.spark.sql.SparkSession
   * no queries → every SparkEntry gate.
   */
 object PlanCensus {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Harness.withSession(spark => println(run(spark, args)))
+
+  /** Writes the census to `outPath` and returns a one-line summary. */
+  def run(spark: SparkSession, args: Array[String]): String = {
     val outPath = args.headOption.getOrElse("tools/plan_audit_latest.json")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE off: executedPlan must be the FULL physical tree —
-      // AdaptiveSparkPlanExec hides its children until execution, so
-      // a census over the wrapper counts zero of everything
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
+    // AQE off: executedPlan must be the FULL physical tree —
+    // AdaptiveSparkPlanExec hides its children until execution, so
+    // a census over the wrapper counts zero of everything
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeWas = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
 
     def census(name: String): String = {
       try {
@@ -59,14 +60,15 @@ object PlanCensus {
       }
     }
 
-    val body = names.map(census).mkString(",\n ")
+    val body =
+      try names.map(census).mkString(",\n ")
+      finally aqeWas.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
     val out = s"""{"queries":{\n $body\n},
       |"notes":"executedPlan node census at sf0.001 (pre-execution, AQE initial plan); cartesian must stay 0 except documented bounded frames; SinglePartition exchanges only on post-agg bounded relations"}"""
       .stripMargin
     val p = java.nio.file.Paths.get(outPath)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, out.getBytes("UTF-8"))
-    println(s"""{"census":"$outPath","queries":${names.size}}""")
-    spark.stop()
+    s"""{"census":"$outPath","queries":${names.size}}"""
   }
 }

@@ -2,67 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev micro-bench (round 17): Bench.runOnce verbatim — construction
+/** Dev micro-bench (round 17): Bench's timed loop — construction
   * (with its eager guard/persist jobs) INSIDE the timed window, full
   * materialization through the noop sink — over a NAMED subset of
   * gates, so a single optimization can be A/B'd in seconds instead of
-  * a 15-minute whole-bench pass. Same session config as Bench; one
-  * warm pass at sf0.001, then `passes` interleaved timed passes at the
-  * target SF, reporting per-query minima.
+  * a 15-minute whole-bench pass. One warm pass at the warm SF, then
+  * `passes` interleaved timed passes at the target SF, reporting
+  * per-query minima as one JSON line.
   *
-  * Run: `runMain graft.QueryBench <sfDir> <passes> <name> [name...]`
-  * (or via java -cp against any classes dir, the BenchAB pattern).
+  * Run: `runMain graft.QueryBench <sfDir> <passes> <name> [name...]`.
   */
 object QueryBench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Harness.withSession(spark => println(run(spark, args)))
+
+  def run(spark: SparkSession, args: Array[String]): String = {
     require(args.length >= 3, "usage: QueryBench <sfDir> <passes> <name>...")
     val sfDir = args(0)
     val passes = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // ADVICE r17: warm dir from the env (defaulting to the smallest
-    // SF next to the target), NonFatal only — an OOM/linkage error in
-    // warm-up must not be swallowed
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    def runOnce(name: String): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[qbench] $name failed: ${e.getMessage}")
-        None
-      }
-    }
-    val results = (1 to passes).map(_ => names.map(n => n -> runOnce(n)).toMap)
-    val mins = names.map { n =>
-      val ts = results.flatMap(_(n))
-      n -> (if (ts.isEmpty) -1.0 else ts.min)
-    }
-    // Locale.ROOT (ADVICE r17): f"%.3f" is default-locale-sensitive —
-    // a comma-decimal locale would emit invalid JSON
-    println(mins.map { case (k, v) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f",
-          java.lang.Double.valueOf(v)) }
-      .mkString("{\"metric\":\"qbench\",", ",", s""","sf":"$sfDir"}"""))
-    spark.stop()
+    Harness.warm(spark, names)
+    val mins = Harness.minOfN(spark, names, sfDir, passes, tag = "qbench")
+    s"""{"metric":"qbench",${Harness.fields(mins)},"sf":"$sfDir"}"""
   }
 }

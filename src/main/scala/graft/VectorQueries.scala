@@ -90,7 +90,7 @@ object VectorQueries {
         m = PqM, k = PqK))
 
   /** Residual codebooks (round 9): same m×k budget, trained on
-    * vec − cell-centroid — the FAISS IVFPQ default. PqStudy (nProbe=4,
+    * vec − cell-centroid — the FAISS IVFPQ default. A round-9 sweep (nProbe=4,
     * recall@5 vs exact L2, sf0.1): residual >= raw at every swept
     * (m,k) — 0.15 vs 0.13 (m=8,k=16), 0.230 vs 0.225 (16,16), 0.375
     * vs 0.365 (16,64) — but raw wins on the 200-vector sf0.01 corpus:

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Harness.withSession(run(_, args))
+
+  /** `<sfDir> <outDir> [query...]` — no queries → every gate. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Thread the gate's data dir into oracle SQL builders that need
     // literal file paths (schema_infer's parquet_schema()) BEFORE any
@@ -12,16 +15,6 @@ object Verify {
     System.setProperty("graft.oracle.sfDir", sfDir)
     // optional trailing args: restrict to named queries (fast iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -47,6 +40,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

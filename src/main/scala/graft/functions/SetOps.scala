@@ -193,6 +193,17 @@ case class BitmapFromSortedExpr(child: Expression, vocab: Array[Long])
 
   override protected def withNewChildInternal(newChild: Expression): BitmapFromSortedExpr =
     copy(child = newChild)
+
+  // A case class compares Array fields by reference, so two equal
+  // vocabularies would defeat semanticEquals/CSE: compare by content.
+  override def equals(other: Any): Boolean = other match {
+    case o: BitmapFromSortedExpr =>
+      child == o.child && java.util.Arrays.equals(vocab, o.vocab)
+    case _ => false
+  }
+
+  private lazy val vocabHash = java.util.Arrays.hashCode(vocab)
+  override def hashCode(): Int = 31 * child.hashCode() + vocabHash
 }
 
 /** Codegen'd popcount-of-AND intersection count over two packed-long

@@ -458,7 +458,7 @@ case class CentroidDistsExpr(child: Expression, centroids: Array[Array[Double]])
   * form `array((array_position(array(sqDist(slice(v,…),c)…)…) - 1)…)`,
   * which re-materialized each subspace slice once PER CENTROID
   * (m·k array copies + m·k separate fold kernels per row: the
-  * dominant serving cost the round-11 AnnCorpusStudy smoke measured —
+  * dominant serving cost the round-11 ANN corpus smoke measured —
   * 39 s of a 40 s ivfpq serve was encode overhead — and an OOM risk
   * when the input vector is itself computed, e.g. the residual path).
   *

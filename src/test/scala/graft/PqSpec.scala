@@ -83,7 +83,7 @@ class PqSpec extends SparkFunSuite {
     val rRaw = recall(PqIndex.topKIvf(corpus, probes, ivf, raw, 5, 4))
     val rRes = recall(PqIndex.topKIvfResidual(corpus, probes, ivf, res, 5, 4))
     // On near-random synthetic data by_residual's advantage is corpus-
-    // dependent: PqStudy at sf0.1 (2000 vecs) measured residual >= raw
+    // dependent: a round-9 sweep at sf0.1 (2000 vecs) measured residual >= raw
     // at every swept (m,k), but at sf0.01 (200 vecs) raw wins — there
     // is no real cluster structure for residuals to exploit. So the
     // spec asserts VALIDITY (far above the ~2.5% chance floor, both

@@ -112,4 +112,16 @@ class RfmPmiHwSpec extends SparkFunSuite {
         s"$tpe drifted off the driver fold")
     }
   }
+
+  test("q_gini on a corpus with no purchases: one row, 0 users, NULL gini") {
+    val dir = java.nio.file.Files.createTempDirectory("gini_empty").toString
+    Tables(spark, sf, "events").where(col("event_type") =!= "purchase")
+      .write.parquet(s"$dir/events.parquet")
+    val rows = AnalyticsQueries.queries("q_gini")(spark, dir).collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.get(r.fieldIndex("n_users")) == 0L)
+    assert(r.isNullAt(r.fieldIndex("total_cents")))
+    assert(r.isNullAt(r.fieldIndex("gini")))
+  }
 }

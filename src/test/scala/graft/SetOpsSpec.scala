@@ -103,4 +103,16 @@ class SetOpsSpec extends SparkFunSuite {
         SetOps.vocabBitmap(col("b"), vocab), lit(0L))).head().getLong(0)
     assert(interp == 2L && codegen == 2L)
   }
+
+  test("bitmap build: equal vocabularies in distinct arrays are semanticEquals") {
+    val at = org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.LongType)
+    val child = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      Seq(1L, 5L), at)
+    val a = graft.functions.BitmapFromSortedExpr(child, Array(1L, 5L, 9L))
+    val b = graft.functions.BitmapFromSortedExpr(child, Array(1L, 5L, 9L))
+    val c = graft.functions.BitmapFromSortedExpr(child, Array(1L, 5L, 11L))
+    assert(a.semanticEquals(b) && a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(c))
+  }
 }
