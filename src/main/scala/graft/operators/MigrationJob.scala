@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.{CatalogDiscovery, SchemaMapper}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import graft.sources.{CatalogDiscovery, ChType, PrimaryKeyInference, SchemaMapper}
 import graft.functions.Coercions
 import graft.sinks.ClickHouseDdl
 
@@ -17,6 +20,10 @@ import graft.sinks.ClickHouseDdl
   * driver-side cursor loop. DDL for the target engine comes from
   * ClickHouseDdl; the data lands as parquet (or through any Spark
   * writer) already conforming to the mapped schema.
+  *
+  * Each table's source is read once: the row count in its report is
+  * observed on the write itself, not counted by a second scan. The
+  * catalog loops run their tables concurrently (see [[concurrently]]).
   */
 object MigrationJob {
 
@@ -25,10 +32,11 @@ object MigrationJob {
   /** Coerce every column of `df` to its mapped target type with
     * null-as-default semantics (main.py:81-104).
     */
-  def conform(df: DataFrame): DataFrame = {
-    val mapped = SchemaMapper.mapSchema(df.schema)
-    df.select(Coercions.coerceRow(mapped): _*)
-  }
+  def conform(df: DataFrame): DataFrame =
+    conform(df, SchemaMapper.mapSchema(df.schema))
+
+  private def conform(df: DataFrame, types: Seq[(String, ChType)]): DataFrame =
+    df.select(Coercions.coerceRow(types): _*)
 
   /** Migrate one table: conform + bounded-batch write (main.py:157-179).
     *
@@ -38,39 +46,127 @@ object MigrationJob {
     * data-confirmed key from the schema naming convention; otherwise
     * the DDL falls back to `tuple()` like the reference with a pk-less
     * table. Composite keys render as `(a, b)`.
+    *
+    * `declaredTypes` overrides the target type mapped from a column's
+    * Spark type, for sources that declare more than their Spark schema
+    * carries (SQLite DATE/DATETIME columns read as text). The conform
+    * and the DDL use the same mapping.
     */
   def migrateTable(df: DataFrame, database: String, table: String,
                    outDir: String, chunkSize: Long = 10000L,
                    primaryKey: Option[String] = None,
-                   inferPk: Boolean = true): TableReport = {
-    val conformed = conform(df)
-    conformed.write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", chunkSize)
-      .parquet(s"$outDir/$table")
+                   inferPk: Boolean = true,
+                   declaredTypes: Map[String, ChType] = Map.empty): TableReport =
+    migrate(df, database, table, primaryKey, inferPk, declaredTypes)(
+      _.option("maxRecordsPerFile", chunkSize).parquet(s"$outDir/$table"))
+
+  /** Conform `df`, hand its writer to `write`, and report the rows the
+    * write saw (a `count(1)` observation: no second scan of the source)
+    * with the DDL for the same mapping.
+    */
+  private def migrate(df: DataFrame, database: String, table: String,
+                      primaryKey: Option[String], inferPk: Boolean,
+                      declaredTypes: Map[String, ChType])(
+                      write: DataFrameWriter[Row] => Unit): TableReport = {
+    val types = SchemaMapper.mapSchema(df.schema).map { case (n, t) =>
+      n -> declaredTypes.getOrElse(n, t)
+    }
+    val observed = Observation()
+    write(conform(df, types).observe(observed, count(lit(1)).as("rows"))
+      .write.mode("overwrite"))
+    val rows = observed.get("rows").asInstanceOf[Long]
     val orderBy = primaryKey.orElse {
-      if (inferPk)
-        graft.sources.PrimaryKeyInference.infer(df, table).map {
-          case Seq(one) => one
-          case many     => many.mkString("(", ", ", ")")
-        }
+      if (inferPk) PrimaryKeyInference.infer(df, table, rows = Some(rows)).flatMap(orderByOf)
       else None
     }
-    val ddl = ClickHouseDdl.createTable(database, table, df.schema, orderBy)
-    TableReport(table, conformed.count(), ddl)
+    TableReport(table, rows,
+      ClickHouseDdl.createTable(database, table, types, orderBy))
+  }
+
+  private def orderByOf(pk: Seq[String]): Option[String] = pk match {
+    case Seq()    => None
+    case Seq(one) => Some(one)
+    case many     => Some(many.mkString("(", ", ", ")"))
+  }
+
+  /** Run `f` on every item, at most min(items, `defaultParallelism`) at
+    * once, and return the results in item order.
+    *
+    * The pool is built for this call, so its threads start with a copy
+    * of the caller's Spark local properties (job group, job tags, any
+    * tracing properties). Every job they submit also carries a tag of
+    * this call's own: on the first failure the other items' jobs are
+    * cancelled through it, items not yet started are dropped, and the
+    * original exception is rethrown once every pool thread has ended.
+    */
+  private[graft] def concurrently[T, R](spark: SparkSession, items: Seq[T])(
+      f: T => R): Seq[R] = {
+    val sc = spark.sparkContext
+    val width = math.min(items.size, sc.defaultParallelism)
+    if (width <= 1) return items.map(f)
+    val tag = s"graft-migrate-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(width, { (r: Runnable) =>
+      val t = new Thread(r, tag)
+      t.setDaemon(true)
+      t
+    })
+    val done = new ExecutorCompletionService[R](pool)
+    val futures = items.map { item =>
+      val task: Callable[R] = () => { sc.addJobTag(tag); f(item) }
+      done.submit(task)
+    }
+    try {
+      items.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case failure: Throwable =>
+        // cancel until every pool thread has ended: a job submitted after
+        // one cancel is caught by the next, or by the last one below
+        sc.cancelJobsWithTag(tag)
+        pool.shutdownNow()
+        while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+          sc.cancelJobsWithTag(tag)
+        sc.cancelJobsWithTag(tag)
+        throw (failure match {
+          case e: ExecutionException if e.getCause != null => e.getCause
+          case other => other
+        })
+    } finally pool.shutdown()
   }
 
   /** Full catalog migration (main.py:157: for table in tables). Tables
-    * are independent — at cluster scale each is its own job and they
-    * can be submitted concurrently; rows stream through executors, the
-    * driver only sees per-table counts.
+    * are independent, so they run concurrently ([[concurrently]]);
+    * rows stream through executors, the driver only sees per-table
+    * counts.
     */
   def migrateAll(spark: SparkSession, srcDir: String, database: String,
                  outDir: String, chunkSize: Long = 10000L): Seq[TableReport] =
-    CatalogDiscovery.listTables(spark, srcDir).map { t =>
+    concurrently(spark, CatalogDiscovery.listTables(spark, srcDir)) { t =>
       val df = spark.read.parquet(s"$srcDir/$t.parquet")
       migrateTable(df, database, t, outDir, chunkSize)
     }
+
+  /** The reference's loop over a REAL SQLite FILE with no JDBC driver
+    * at all (round 12): [[graft.sources.SqliteFile]] reads the
+    * database bytes directly (main.py:140-145 without the sqlite3
+    * module), the declared pk comes from the parsed CREATE TABLE (the
+    * PRAGMA-table_info equivalent, main.py:124), each table reads
+    * partitioned by b-tree subtree, and everything flows through the
+    * same conform → chunked write → DDL path as every other source.
+    * Declared DATE/DATETIME columns are parsed to Date/DateTime
+    * (main.py:18-37) and declared as such in the DDL.
+    */
+  def migrateSqliteFile(spark: SparkSession, dbPath: String,
+                        database: String, outDir: String,
+                        chunkSize: Long = 10000L,
+                        maxPartitions: Int = 32): Seq[TableReport] = {
+    import graft.sources.SqliteFile
+    concurrently(spark, SqliteFile.listTables(dbPath)) { t =>
+      val df = SqliteFile.read(spark, dbPath, t, maxPartitions)
+      migrateTable(df, database, t.name.toLowerCase, outDir, chunkSize,
+        orderByOf(t.primaryKey), declaredTypes = SqliteFile.temporalTypes(t))
+    }
+  }
 
   /** The reference's ACTUAL loop, end-to-end over a live JDBC source
     * (main.py:138-182): discover tables, read each partitioned on its
@@ -81,40 +177,15 @@ object MigrationJob {
     * Derby (JdbcMigrationSpec); identical calls serve SQLite once its
     * driver is on the classpath.
     */
-  /** The reference's loop over a REAL SQLite FILE with no JDBC driver
-    * at all (round 12): [[graft.sources.SqliteFile]] reads the
-    * database bytes directly (main.py:140-145 without the sqlite3
-    * module), the declared pk comes from the parsed CREATE TABLE (the
-    * PRAGMA-table_info equivalent, main.py:124), each table reads
-    * partitioned by b-tree subtree, and everything flows through the
-    * same conform → chunked write → DDL path as every other source.
-    */
-  def migrateSqliteFile(spark: SparkSession, dbPath: String,
-                        database: String, outDir: String,
-                        chunkSize: Long = 10000L,
-                        maxPartitions: Int = 32): Seq[TableReport] =
-    graft.sources.SqliteFile.listTables(dbPath).map { t =>
-      val df = graft.sources.SqliteFile.read(spark, dbPath, t, maxPartitions)
-      val declared = t.primaryKey match {
-        case Seq()    => None
-        case Seq(one) => Some(one)
-        case many     => Some(many.mkString("(", ", ", ")"))
-      }
-      migrateTable(df, database, t.name.toLowerCase, outDir, chunkSize,
-        declared)
-    }
-
   def migrateJdbc(spark: SparkSession, url: String, database: String,
                   outDir: String, chunkSize: Long = 10000L,
                   numPartitions: Int = 8): Seq[TableReport] = {
     import graft.sources.JdbcCatalog
-    JdbcCatalog.listTables(url).map { t =>
-      val pk = JdbcCatalog.primaryKey(url, t)
+    concurrently(spark, JdbcCatalog.listTables(url)) { t =>
       val df = JdbcCatalog.readTable(spark, url, t,
         JdbcCatalog.partitionKey(spark, url, t), numPartitions)
-      val declared = if (pk.isEmpty) None
-        else Some(if (pk.size == 1) pk.head else pk.mkString("(", ", ", ")"))
-      migrateTable(df, database, t.toLowerCase, outDir, chunkSize, declared)
+      migrateTable(df, database, t.toLowerCase, outDir, chunkSize,
+        orderByOf(JdbcCatalog.primaryKey(url, t)))
     }
   }
 
@@ -126,29 +197,25 @@ object MigrationJob {
     * JDBC (`batchsize` = the reference's chunk_size: every executor
     * flushes bounded INSERT batches in parallel — the distributed
     * fetchmany loop). Returns the same TableReports as the staging
-    * path: the ClickHouse DDL carried in each report is what the
-    * identical plan executes against a real cluster; an offline JDBC
-    * engine stands in for ClickHouse exactly as in the dry-run story,
-    * with Spark's target dialect supplying the local CREATE TABLE.
+    * path, from the same observed-count write: the ClickHouse DDL
+    * carried in each report is what the identical plan executes
+    * against a real cluster; an offline JDBC engine stands in for
+    * ClickHouse exactly as in the dry-run story, with Spark's target
+    * dialect supplying the local CREATE TABLE. Only a declared key
+    * orders the DDL here; no key is inferred.
     */
   def migrateJdbcLive(spark: SparkSession, srcUrl: String, dstUrl: String,
                       dstProps: java.util.Properties, database: String,
                       chunkSize: Long = 10000L,
                       numPartitions: Int = 8): Seq[TableReport] = {
     import graft.sources.JdbcCatalog
-    JdbcCatalog.listTables(srcUrl).map { t =>
-      val pk = JdbcCatalog.primaryKey(srcUrl, t)
+    concurrently(spark, JdbcCatalog.listTables(srcUrl)) { t =>
       val df = JdbcCatalog.readTable(spark, srcUrl, t,
         JdbcCatalog.partitionKey(spark, srcUrl, t), numPartitions)
-      val conformed = conform(df)
-      conformed.write.mode("overwrite")
-        .option("batchsize", chunkSize)
-        .jdbc(dstUrl, t.toLowerCase, dstProps)
-      val declared = if (pk.isEmpty) None
-        else Some(if (pk.size == 1) pk.head else pk.mkString("(", ", ", ")"))
-      TableReport(t.toLowerCase, conformed.count(),
-        ClickHouseDdl.createTable(database, t.toLowerCase,
-          conformed.schema, declared))
+      migrate(df, database, t.toLowerCase,
+        orderByOf(JdbcCatalog.primaryKey(srcUrl, t)), inferPk = false,
+        declaredTypes = Map.empty)(
+        _.option("batchsize", chunkSize).jdbc(dstUrl, t.toLowerCase, dstProps))
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.types.StructType
-import graft.sources.SchemaMapper
+import graft.sources.{ChType, SchemaMapper}
 
 /** DDL generation for the ClickHouse side (reference main.py:56-73).
   * Pure string construction from a Spark schema — no connection needed,
@@ -14,10 +14,14 @@ object ClickHouseDdl {
     * the `tuple()` fallback when no primary key is known.
     */
   def createTable(database: String, table: String, schema: StructType,
-                  primaryKey: Option[String] = None): String = {
-    val cols = SchemaMapper.mapSchema(schema)
-      .map { case (n, t) => s"$n ${t.sql}" }
-      .mkString(", ")
+                  primaryKey: Option[String] = None): String =
+    createTable(database, table, SchemaMapper.mapSchema(schema), primaryKey)
+
+  /** The same statement from an explicit (column, target type) list. */
+  def createTable(database: String, table: String,
+                  columns: Seq[(String, ChType)],
+                  primaryKey: Option[String]): String = {
+    val cols = columns.map { case (n, t) => s"$n ${t.sql}" }.mkString(", ")
     val orderBy = primaryKey.filter(_.nonEmpty).getOrElse("tuple()")
     s"CREATE TABLE IF NOT EXISTS $database.$table ($cols) " +
       s"ENGINE = ReplacingMergeTree ORDER BY $orderBy"

@@ -69,13 +69,17 @@ object PrimaryKeyInference {
     * the data) or `maxCols` is hit. Returns None when nothing key-ish
     * exists or no prefix is unique — the DDL then falls back to
     * `tuple()` exactly like the reference with a pk-less table.
+    *
+    * `rows` is `df`'s row count when the caller already knows it (a
+    * migration observes it on its write); otherwise it is counted here.
     */
   def infer(df: DataFrame, table: String, maxCols: Int = 2,
-            confirm: Boolean = true): Option[Seq[String]] = {
+            confirm: Boolean = true,
+            rows: Option[Long] = None): Option[Seq[String]] = {
     val cands = candidates(table, df.schema)
     if (cands.isEmpty || rank(table, cands.head) == 4) return None
     if (!confirm) return Some(Seq(cands.head))
-    val total = df.count()
+    val total = rows.getOrElse(df.count())
     (1 to math.min(maxCols, cands.size)).iterator.map(cands.take)
       .find { prefix =>
         df.select(countDistinct(struct(prefix.map(col): _*)))

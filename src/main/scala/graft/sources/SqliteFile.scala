@@ -866,13 +866,6 @@ object SqliteFile {
 
   // ------------------------------------------------------- Spark layer
 
-  /** Spark schema for a table: the reference's declared-type mapping
-    * (main.py:125-134 via [[SchemaMapper.fromSqliteDecl]]), except
-    * DATE/DATETIME surface as raw STRINGS here — parsing text into
-    * temporal types is the gated parse_datetime/parse_date operators'
-    * contract, applied downstream by the migration, not by the byte
-    * reader.
-    */
   /** BLOB-declared (or undeclared — SQLite's BLOB affinity) columns
     * keep their bytes: the reference's String fallback would mangle
     * binary through str(); BinaryType preserves it for the multimodal
@@ -883,6 +876,13 @@ object SqliteFile {
     d.isEmpty || d.contains("BLOB")
   }
 
+  /** Spark schema for a table: the reference's declared-type mapping
+    * (main.py:125-134 via [[SchemaMapper.fromSqliteDecl]]), except
+    * DATE/DATETIME surface as raw STRINGS here — parsing text into
+    * temporal types is the gated parse_datetime/parse_date operators'
+    * contract, applied downstream by the migration (see
+    * [[temporalTypes]]), not by the byte reader.
+    */
   def schemaOf(table: TableDef): StructType =
     StructType(table.columns.map { c =>
       val dt =
@@ -893,6 +893,15 @@ object SqliteFile {
         }
       StructField(c.name, dt, nullable = !c.rowidAlias)
     })
+
+  /** The declared Date/DateTime target of each column [[schemaOf]]
+    * surfaces as raw text: what a migration parses it to.
+    */
+  def temporalTypes(table: TableDef): Map[String, ChType] =
+    table.columns.collect {
+      case c if c.chType == ChType.Date || c.chType == ChType.DateTime =>
+        c.name -> c.chType
+    }.toMap
 
   private[sources] def coerceValue(v: Any, c: ColumnDef, table: String): Any = {
     def fail(want: String) = throw new IllegalStateException(

@@ -253,6 +253,116 @@ class MigrationJobSpec extends SparkFunSuite {
       assert(spark.read.parquet(f.getAbsolutePath).count() <= 100L)
     }
   }
+
+  import graft.operators.MigrationJob
+  import graft.sources.SqliteFile
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  private val fixture = "src/test/resources/sqlite/fixture.db"
+
+  private def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  private def poolThreadsAlive(): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-migrate-"))
+      .map(_.getName)
+  }
+
+  test("concurrent tables: reports in catalog order, rows equal to the source counts") {
+    withTempDir("graft-mig-order") { out =>
+      val tables = SqliteFile.listTables(fixture)
+      assert(tables.size == 6)
+      val reports = MigrationJob.migrateSqliteFile(spark, fixture, "db", out)
+      assert(reports.map(_.table) == tables.map(_.name.toLowerCase))
+      tables.zip(reports).foreach { case (t, r) =>
+        assert(r.rows == SqliteFile.read(spark, fixture, t).count(), t.name)
+        assert(spark.read.parquet(s"$out/${r.table}").count() == r.rows, t.name)
+      }
+      assert(poolThreadsAlive().isEmpty)
+    }
+  }
+
+  test("a failing table: the caller gets its exception, and no pool thread is left") {
+    withTempDir("graft-mig-fail") { dir =>
+      val src = s"$dir/src"
+      Seq("region", "nation", "supplier").foreach { t =>
+        Tables(spark, sf, t).write.parquet(s"$src/$t.parquet")
+      }
+      // a table whose read throws: its only file is not parquet
+      new java.io.File(s"$src/broken.parquet").mkdirs()
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$src/broken.parquet/part-0.parquet"),
+        "not a parquet file".getBytes("UTF-8"))
+      val alone = intercept[Exception](spark.read.parquet(s"$src/broken.parquet"))
+      val thrown = intercept[Exception](
+        MigrationJob.migrateAll(spark, src, "db", s"$dir/out"))
+      assert(!thrown.isInstanceOf[java.util.concurrent.ExecutionException])
+      assert(thrown.getClass == alone.getClass, thrown)
+      assert(poolThreadsAlive().isEmpty)
+    }
+  }
+
+  test("the first failure cancels the other tables' jobs and is rethrown as is") {
+    val boom = new IllegalStateException("boom")
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      MigrationJob.concurrently(spark, Seq("slow", "failing")) {
+        case "slow" =>
+          started.countDown()
+          // 40 half-second tasks: about 5 s on 4 cores unless cancelled
+          spark.sparkContext.parallelize(1 to 40, 40)
+            .foreach(_ => Thread.sleep(500))
+        case _ =>
+          started.await()
+          Thread.sleep(300)
+          throw boom
+      }
+    }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(thrown eq boom)
+    assert(seconds < 4.0, s"the slow table's job was not cancelled ($seconds s)")
+    assert(poolThreadsAlive().isEmpty)
+  }
+
+  test("migrateTable reads a declared-pk table's source once") {
+    val sc = spark.sparkContext
+    val tag = s"migrate-table-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val tags = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags"))).getOrElse("")
+        if (tags.contains(s"$tag-marker")) marker.countDown()
+        else if (tags.split(",").contains(tag)) jobs.incrementAndGet()
+      }
+    }
+    withTempDir("graft-mig-jobs") { out =>
+      sc.addSparkListener(listener)
+      try {
+        sc.addJobTag(tag)
+        val rep = try MigrationJob.migrateTable(
+          SqliteFile.read(spark, fixture, "big"), "db", "big", out,
+          primaryKey = Some("id"))
+        finally sc.removeJobTag(tag)
+        assert(rep.rows == 6000L)
+        // listener events arrive in order: once the marker job is seen,
+        // every job of the migration has been counted
+        sc.addJobTag(s"$tag-marker")
+        try spark.range(1).collect()
+        finally sc.removeJobTag(s"$tag-marker")
+        assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(listener)
+    }
+    // the parquet write is the only job: no count() re-scan after it
+    assert(jobs.get == 1, s"${jobs.get} jobs")
+  }
 }
 
 class EtlQueriesSpec extends SparkFunSuite {

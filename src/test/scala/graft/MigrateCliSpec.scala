@@ -103,6 +103,33 @@ class MigrateCliSpec extends SparkFunSuite {
     }
   }
 
+  test("main() parses declared DATE/DATETIME columns and declares them " +
+      "Date/DateTime, like the reference (main.py:18-37)") {
+    val out = java.nio.file.Files.createTempDirectory("graft_cli_temporal").toString
+    val stdout = new java.io.ByteArrayOutputStream()
+    try {
+      Console.withOut(new java.io.PrintStream(stdout)) {
+        Migrate.main(Array(
+          "--sqlite", "src/test/resources/sqlite/fixture.db",
+          "--clickhouse-database", "db", "--out", out))
+      }
+      val ddl = stdout.toString.linesIterator
+        .find(_.startsWith("CREATE TABLE IF NOT EXISTS db.typed ")).get
+      assert(ddl.contains("dt DateTime, d Date)"), ddl)
+      import org.apache.spark.sql.types.{DateType, TimestampType}
+      val typed = spark.read.parquet(s"$out/typed").orderBy("id")
+      assert(typed.schema("dt").dataType == TimestampType)
+      assert(typed.schema("d").dataType == DateType)
+      // the fixture's third row holds NULL in both: parsed to NULL
+      val got = typed.selectExpr("cast(dt AS string)", "cast(d AS string)")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(got == Seq(("2024-03-01 12:34:56", "2024-03-01"),
+        ("1999-12-31 23:59:59", "1999-12-31"), (null, null)))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    }
+  }
+
   test("main() migrates a LIVE WAL-mode SQLite file — un-checkpointed " +
       "-wal sibling read, not refused (round 13)") {
     val out = java.nio.file.Files.createTempDirectory("graft_cli_wal").toString
