@@ -98,12 +98,14 @@ object MigrationJob {
     * this call's own: on the first failure the other items' jobs are
     * cancelled through it, items not yet started are dropped, and the
     * original exception is rethrown once every pool thread has ended.
+    * An item cancelled partway through is left as far as it got: when
+    * `f` overwrites an output, that output may be cleared or partly
+    * written, while items not yet started keep their previous output.
     */
   private[graft] def concurrently[T, R](spark: SparkSession, items: Seq[T])(
       f: T => R): Seq[R] = {
     val sc = spark.sparkContext
-    val width = math.min(items.size, sc.defaultParallelism)
-    if (width <= 1) return items.map(f)
+    val width = math.max(1, math.min(items.size, sc.defaultParallelism))
     val tag = s"graft-migrate-${java.util.UUID.randomUUID()}"
     val pool = Executors.newFixedThreadPool(width, { (r: Runnable) =>
       val t = new Thread(r, tag)
@@ -137,7 +139,9 @@ object MigrationJob {
   /** Full catalog migration (main.py:157: for table in tables). Tables
     * are independent, so they run concurrently ([[concurrently]]);
     * rows stream through executors, the driver only sees per-table
-    * counts.
+    * counts. Each table's output is overwritten: if one table fails,
+    * the tables writing at the same time are cancelled and their
+    * output directories may be left empty or partly written.
     */
   def migrateAll(spark: SparkSession, srcDir: String, database: String,
                  outDir: String, chunkSize: Long = 10000L): Seq[TableReport] =
@@ -154,7 +158,8 @@ object MigrationJob {
     * partitioned by b-tree subtree, and everything flows through the
     * same conform → chunked write → DDL path as every other source.
     * Declared DATE/DATETIME columns are parsed to Date/DateTime
-    * (main.py:18-37) and declared as such in the DDL.
+    * (main.py:18-37) and declared as such in the DDL. A failure leaves
+    * the other tables' outputs as [[migrateAll]] describes.
     */
   def migrateSqliteFile(spark: SparkSession, dbPath: String,
                         database: String, outDir: String,
@@ -175,7 +180,8 @@ object MigrationJob {
     * one fall through to [[graft.sources.PrimaryKeyInference]]'s
     * heuristic inside migrateTable. Proven in-sandbox against embedded
     * Derby (JdbcMigrationSpec); identical calls serve SQLite once its
-    * driver is on the classpath.
+    * driver is on the classpath. A failure leaves the other tables'
+    * outputs as [[migrateAll]] describes.
     */
   def migrateJdbc(spark: SparkSession, url: String, database: String,
                   outDir: String, chunkSize: Long = 10000L,
@@ -202,7 +208,10 @@ object MigrationJob {
     * against a real cluster; an offline JDBC engine stands in for
     * ClickHouse exactly as in the dry-run story, with Spark's target
     * dialect supplying the local CREATE TABLE. Only a declared key
-    * orders the DDL here; no key is inferred.
+    * orders the DDL here; no key is inferred. Each target table is
+    * overwritten (dropped or truncated, then filled): if one table
+    * fails, the tables writing at the same time are cancelled and may
+    * be left empty or partly filled on the target.
     */
   def migrateJdbcLive(spark: SparkSession, srcUrl: String, dstUrl: String,
                       dstProps: java.util.Properties, database: String,

@@ -330,6 +330,21 @@ class MigrationJobSpec extends SparkFunSuite {
     assert(poolThreadsAlive().isEmpty)
   }
 
+  test("concurrently: no items give no results; one item runs on a pool " +
+      "thread that sees the caller's local properties") {
+    assert(MigrationJob.concurrently(spark, Seq.empty[Int])(identity).isEmpty)
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.test.caller", "set")
+    try {
+      val Seq((thread, seen)) = MigrationJob.concurrently(spark, Seq(1)) { _ =>
+        (Thread.currentThread.getName, sc.getLocalProperty("graft.test.caller"))
+      }
+      assert(thread.startsWith("graft-migrate-"))
+      assert(seen == "set")
+    } finally sc.setLocalProperty("graft.test.caller", null)
+    assert(poolThreadsAlive().isEmpty)
+  }
+
   test("migrateTable reads a declared-pk table's source once") {
     val sc = spark.sparkContext
     val tag = s"migrate-table-jobs-${java.util.UUID.randomUUID()}"

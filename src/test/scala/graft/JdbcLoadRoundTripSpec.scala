@@ -72,15 +72,18 @@ class JdbcLoadRoundTripSpec extends SparkFunSuite {
     assert(reports.find(_.table == "ledger").get.rows == 750L)
 
     // the DDL in each report is EXACTLY what ClickHouseDdl generates
-    // for the conformed schema + declared pk (the cluster-side half)
+    // for the source schema's type mapping + declared pk (the
+    // cluster-side half)
     val accDdl = reports.find(_.table == "accounts").get.ddl
     assert(accDdl == ClickHouseDdl.createTable("db", "accounts",
-      MigrationJob.conform(spark.read.jdbc(srcUrl, "accounts",
-        new java.util.Properties())).schema, Some("a_id")))
+      spark.read.jdbc(srcUrl, "accounts", new java.util.Properties()).schema,
+      Some("a_id")))
     assert(accDdl.contains("ReplacingMergeTree"))
     assert(accDdl.contains("ORDER BY a_id"))
-    assert(reports.find(_.table == "ledger").get.ddl
-      .contains("ORDER BY (l_acct, l_seq)"))
+    assert(reports.find(_.table == "ledger").get.ddl ==
+      ClickHouseDdl.createTable("db", "ledger",
+        spark.read.jdbc(srcUrl, "ledger", new java.util.Properties()).schema,
+        Some("(l_acct, l_seq)")))
 
     // read BACK from the live target and compare to the conformed
     // source row for row (pk-sorted) — count/content parity on the
@@ -113,5 +116,28 @@ class JdbcLoadRoundTripSpec extends SparkFunSuite {
           "WHERE CAST(\"a_note\" AS VARCHAR(64)) = ''")
       assert(rs2.next() && rs2.getLong(1) == 100L) // i % 7 == 0
     } finally c.close()
+  }
+
+  test("the report DDL keeps the source's INT width; the target gets the conformed rows") {
+    // DuckDB's driver surfaces INTEGER as unsigned (read as a Long), so
+    // a signed INT column needs a source that reports it as such: Derby
+    val dir = java.nio.file.Files.createTempDirectory("graft_rt_int").toString
+    val src = s"jdbc:derby:$dir/src;create=true"
+    val c = DriverManager.getConnection(src)
+    try {
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE COUNTS (C_ID BIGINT NOT NULL PRIMARY KEY, C_N INT)")
+      st.executeUpdate("INSERT INTO COUNTS VALUES (1, 7), (2, NULL), (3, -2)")
+    } finally c.close()
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    val Seq(report) = MigrationJob.migrateJdbcLive(
+      spark, src, s"jdbc:derby:$dir/dst;create=true", props, "db")
+    assert(report.rows == 3L)
+    assert(report.ddl == "CREATE TABLE IF NOT EXISTS db.counts " +
+      "(C_ID Int64, C_N Int32) ENGINE = ReplacingMergeTree ORDER BY C_ID")
+    val landed = spark.read.jdbc(s"jdbc:derby:$dir/dst", "counts", props)
+      .orderBy("C_ID").collect().map(r => r.getLong(1)).toSeq
+    assert(landed == Seq(7L, 0L, -2L))
   }
 }
