@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Engine-agnostic JDBC catalog discovery and partitioned extract —
-  * [[SqliteSource]] (reference main.py:138-145) generalized to ANY
+  * the reference's SQLite extract (main.py:138-145) generalized to ANY
   * JDBC database through `java.sql.DatabaseMetaData`, so the
   * migration's extract side is provable END-TO-END in-sandbox against
   * the embedded Derby that ships on Spark's classpath, and runs

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types._
   *
   * Spark sources rarely carry a declared key, so this layers three
   * sources of truth, strongest first:
-  *   1. DECLARED — caller-supplied (e.g. the JDBC path's
-  *      `PRAGMA table_info` once a SQLite driver is on the classpath;
-  *      [[SqliteSource.primaryKeyPragma]] emits the statement);
+  *   1. DECLARED — caller-supplied (the JDBC path's
+  *      `DatabaseMetaData.getPrimaryKeys` via [[JdbcCatalog.primaryKey]],
+  *      or the SQLite file's parsed CREATE TABLE via
+  *      [[SqliteFile.TableDef.primaryKey]]);
   *   2. NAME HEURISTIC — rank orderable columns by key-ish naming
   *      (`id`, `<table>_id`, `*key`, `*id`, `*number`), the
   *      documented convention of every table this engine ships

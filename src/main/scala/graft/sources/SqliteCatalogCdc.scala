@@ -87,12 +87,7 @@ object SqliteCatalogCdc {
       first = false
       jsonStr(sb, c.name)
       sb.append(':')
-      val raw =
-        if (c.rowidAlias) rowid
-        else if (recIdx(i) < vals.size)
-          SqliteFile.coerceValue(vals(recIdx(i)), c, table.name)
-        else null
-      raw match {
+      SqliteFile.columnValue(table.name, c, recIdx(i), rowid, vals) match {
         case null => sb.append("null")
         case l: Long => sb.append(l)
         case d: Double => sb.append(java.lang.Double.toString(d))
@@ -290,8 +285,7 @@ private[sources] final class SqliteCatalogCdcStream(path: String,
         val roots = SqliteFile.subtreeRanges(path, t)
           .filter { case (_, rLo, rHi) => rHi > loMark && rLo < hiMark }
           .map(_._1)
-        roots.grouped(
-            math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
+        SqliteFile.groupSubtrees(roots, maxPartitions)
           .map(SqliteCatalogSlice(t, _, h, loMark, hiMark))
       }
     }.toArray

@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .load()
   * }}}
   *
-  * What V2 buys over the static `SqliteFile.read`:
+  * This is the one batch scan over the file: `SqliteFile.read`, the
+  * migration's reader, is its front door. What it does:
   *  - **Column pruning reaches the byte decoder**: Catalyst pushes the
   *    required schema down (`SupportsPushDownRequiredColumns`), and
   *    the record decoder then skips MATERIALIZING unneeded values —
@@ -60,9 +61,11 @@ final class SqliteDataSource extends TableProvider
         throw new IllegalArgumentException(
           "sqlite source requires .option(\"table\", \"name\") - or " +
             ".option(\"tables\", \"*\") for the catalog-CDC envelope"))
-    val t = SqliteFile.listTables(path).find(_.name == table).getOrElse(
+    val tables = SqliteFile.listTables(path)
+    val t = tables.find(_.name == table).getOrElse(
       throw new IllegalArgumentException(
-        s"table '$table' not found in $path"))
+        s"table '$table' not found in $path (have: " +
+          s"${tables.map(_.name).mkString(", ")})"))
     (path, t)
   }
 
@@ -684,8 +687,7 @@ private[sources] final class SqliteScan(path: String,
           .filter { case (_, lo, hi) => hi > minEx && lo <= maxInc }
           .map(_._1)
         if (roots.isEmpty) Array.empty
-        else roots.grouped(
-            math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
+        else SqliteFile.groupSubtrees(roots, maxPartitions)
           .map(SqliteSubtrees(_, h, minEx, maxInc)).toArray
       // WITHOUT ROWID: the "index" IS the table — descend it directly
       case Some(IndexEq(_, v)) if tdef.withoutRowid =>
@@ -712,10 +714,8 @@ private[sources] final class SqliteScan(path: String,
       case Some(IndexCompositeRange(idx, eq, r)) =>
         Array(SqliteIndexProbePartition(idx, r, tdef.rootPage, h, eq))
       case None =>
-        val roots = SqliteFile.subtreeRoots(path, tdef)
-        roots.grouped(
-            math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
-          .map(SqliteSubtrees(_, h)).toArray
+        SqliteFile.groupSubtrees(SqliteFile.subtreeRoots(path, tdef),
+          maxPartitions).map(SqliteSubtrees(_, h)).toArray
     }
   }
 
@@ -812,8 +812,7 @@ private[sources] final class SqliteCdcStream(path: String,
     val roots = SqliteFile.subtreeRanges(path, tdef)
       .filter { case (_, rLo, rHi) => rHi > lo && rLo < hi }
       .map(_._1)
-    roots.grouped(
-        math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
+    SqliteFile.groupSubtrees(roots, maxPartitions)
       .map(SqliteSubtrees(_, h, lo, hi)).toArray
   }
 
@@ -913,10 +912,8 @@ private[sources] final class SqliteReaderFactory(path: String,
         var j = 0
         while (j < slots.length) {
           val (i, c) = slots(j)
-          out(j) = toCatalyst(
-            if (c.rowidAlias) rowid
-            else if (i < vals.size) SqliteFile.coerceValue(vals(i), c, table)
-            else null)
+          out(j) =
+            toCatalyst(SqliteFile.columnValue(table, c, i, rowid, vals))
           j += 1
         }
         new org.apache.spark.sql.catalyst.expressions

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Pure-Scala READ-ONLY reader for the SQLite database FILE FORMAT
@@ -42,18 +42,22 @@ import org.apache.spark.sql.types._
   * columns in declared order, interior pages carry full records too
   * (not just routing keys), and the overflow spill threshold differs
   * from table leaves (X = ((U-12)*64/255)-23, not U-35). The walker
-  * emits interior-cell records inline, [[read]] permutes record
+  * emits interior-cell records inline, [[columnValue]] permutes record
   * order back to declared order, and partitioning adds one
   * cells-only slice for the root's own records.
   *
-  * Distribution model: the driver opens the file once to parse the
-  * header + `sqlite_master` and to collect the root b-tree's level-1
-  * subtrees; each Spark partition then walks its own subtrees through
-  * its own file handle. Like every local-file source, executors must
-  * see the same path (shared FS on a real cluster) — the exact
-  * constraint sqlite-jdbc itself would have. Within a subtree the
-  * walk is sequential b-tree order, the same access pattern as the
-  * reference's single cursor, but one cursor PER SUBTREE.
+  * Distribution model: this object holds the file format (header,
+  * pages, records, b-tree walks, `sqlite_master`); the one Spark scan
+  * over it is the `sqlite` DataSource V2 ([[SqliteDataSource]]), and
+  * [[read]] is that scan's batch front door. The driver opens the file
+  * to parse the header + `sqlite_master` and to collect the root
+  * b-tree's level-1 subtrees; each Spark partition then walks its own
+  * subtrees through its own file handle. Like every local-file source,
+  * executors must see the same path (shared FS on a real cluster) —
+  * the exact constraint sqlite-jdbc itself would have. Within a
+  * subtree the walk is sequential b-tree order, the same access
+  * pattern as the reference's single cursor, but one cursor PER
+  * SUBTREE.
   *
   * Values decode faithfully: integers (all six widths + the 0/1
   * constants) → Long, IEEE754 → Double, text → String, blob →
@@ -369,15 +373,22 @@ object SqliteFile {
     }
   }
 
-  /** Assemble a cell payload, following the overflow chain when the
-    * local part is truncated (fileformat2 §1.6 spill rules: table
-    * leaves spill past X = U-35, index pages past X = ((U-12)*64/255)
-    * - 23; both share M = ((U-12)*32/255)-23, K = M+((P-M)%(U-4))).
+  /** Assemble the payload of a cell on page `pageNo`, following the
+    * overflow chain when the local part is truncated (fileformat2 §1.6
+    * spill rules: table leaves spill past X = U-35, index pages past
+    * X = ((U-12)*64/255) - 23; both share M = ((U-12)*32/255)-23,
+    * K = M+((P-M)%(U-4))). The chain is read until the payload is
+    * full, so a cyclic chain cannot loop; a chain that ends early or
+    * runs on past the payload, or a size no file of this many pages
+    * could hold, is a corrupt file and fails naming the page.
     */
-  private[sources] def payload(pf: PageFile, page: Array[Byte], cellOff: Int,
+  private[sources] def payload(pf: PageFile, pageNo: Int, page: Array[Byte],
                       p: Long, afterVarints: Int,
                       index: Boolean = false): Array[Byte] = {
     val u = pf.h.usable
+    if (p < 0 || p > pf.h.pageCount.toLong * u)
+      throw new IllegalStateException(s"page $pageNo: cell payload of " +
+        s"$p bytes cannot fit in ${pf.h.pageCount} pages - corrupt file")
     val x = if (index) ((u - 12) * 64) / 255 - 23 else u - 35
     if (p <= x) // fully local
       return java.util.Arrays.copyOfRange(page, afterVarints,
@@ -387,16 +398,22 @@ object SqliteFile {
     val local = if (k <= x) k else m
     val out = new Array[Byte](p.toInt)
     System.arraycopy(page, afterVarints, out, 0, local)
+    var prev = pageNo
     var next = be(page, afterVarints + local, 4).toInt
     var got = local
-    while (next != 0) {
+    while (got < p) {
+      if (next == 0) throw new IllegalStateException(s"page $prev: " +
+        s"overflow chain ended after $got of $p bytes - corrupt file")
       val op = pf.page(next)
+      prev = next
       next = be(op, 0, 4).toInt
       val take = math.min(u - 4, p.toInt - got)
       System.arraycopy(op, 4, out, got, take)
       got += take
     }
-    require(got == p, s"overflow chain ended early: $got of $p bytes")
+    if (next != 0) throw new IllegalStateException(s"page $prev: " +
+      s"overflow chain links on to page $next past the payload's $p " +
+      "bytes - cyclic or corrupt chain")
     out
   }
 
@@ -407,8 +424,10 @@ object SqliteFile {
     * inline (index interiors carry full rows, fileformat2 §2.3;
     * emission order is per-page, not globally key-sorted — DataFrames
     * are unordered and the order is still deterministic). A NEGATIVE
-    * root means "cells of page |root| only, no descent" — how [[read]]
-    * slices an index ROOT's own records into their own partition.
+    * root means "cells of page |root| only, no descent" — how the scan
+    * ([[subtreeRoots]]) slices an index ROOT's own records into their
+    * own partition. Records stay raw; every reader maps them to
+    * declared columns through [[columnValue]].
     * One open file handle per iterator; closed when exhausted (or via
     * close()).
     *
@@ -474,7 +493,7 @@ object SqliteFile {
               val (p, n1) = varint(pg, c)
               val (rowid, n2) = varint(pg, c + n1)
               if (rowid > minEx && rowid <= maxInc)
-                Some((rowid, record(payload(pf, pg, c, p, c + n1 + n2), cs)))
+                Some((rowid, record(payload(pf, n, pg, p, c + n1 + n2), cs)))
               else None
             }
           case 0x02 => // interior index: records in cells + children
@@ -490,7 +509,7 @@ object SqliteFile {
             cells = (0 until k).iterator.map { i =>
               val c = be(pg, off + 12 + 2 * i, 2).toInt
               val (p, n1) = varint(pg, c + 4) // 4-byte child ptr first
-              (0L, record(payload(pf, pg, c, p, c + 4 + n1, index = true), cs))
+              (0L, record(payload(pf, n, pg, p, c + 4 + n1, index = true), cs))
             }
           case 0x0a => // leaf index
             require(!bounded, s"page $n: rowid bounds on an index " +
@@ -499,7 +518,7 @@ object SqliteFile {
             cells = (0 until k).iterator.map { i =>
               val c = be(pg, off + 8 + 2 * i, 2).toInt
               val (p, n1) = varint(pg, c)
-              (0L, record(payload(pf, pg, c, p, c + n1, index = true), cs))
+              (0L, record(payload(pf, n, pg, p, c + n1, index = true), cs))
             }
           case other =>
             throw new IllegalStateException(
@@ -539,6 +558,14 @@ object SqliteFile {
     } finally pf.close()
   }
 
+  /** Subtree roots packed into at most `maxPartitions` runs of
+    * neighbouring roots: one run per Spark task.
+    */
+  private[sources] def groupSubtrees(roots: Seq[Int],
+                                     maxPartitions: Int): Seq[Seq[Int]] =
+    roots.grouped(
+      math.max(1, (roots.size + maxPartitions - 1) / maxPartitions)).toSeq
+
   /** The largest rowid in a rowid table — the incremental-read
     * watermark. O(tree depth): follows the rightmost pointer spine to
     * the last leaf cell, sqlite's own `SELECT max(rowid)` shape. None
@@ -554,34 +581,8 @@ object SqliteFile {
     * same committed WAL/journal overlay even under a concurrent
     * writer (round-16 ADVICE fix — the SqliteSubtrees discipline).
     */
-  def maxRowid(path: String, h: Header, table: TableDef): Option[Long] = {
-    require(!table.withoutRowid,
-      s"${table.name} is WITHOUT ROWID - no rowid watermark exists; " +
-        "incremental reads need a rowid table")
-    val pf = new PageFile(path, h)
-    try {
-      var n = table.rootPage
-      while (true) {
-        val pg = pf.page(n)
-        val off = if (n == 1) 100 else 0
-        val tpe = pg(off) & 0xff
-        val k = be(pg, off + 3, 2).toInt
-        tpe match {
-          case 0x05 => n = be(pg, off + 8, 4).toInt // rightmost child
-          case 0x0d =>
-            if (k == 0) return None
-            // leaf cells are rowid-ordered; the last one is the max
-            val c = be(pg, off + 8 + 2 * (k - 1), 2).toInt
-            val n1 = varint(pg, c)._2
-            return Some(varint(pg, c + n1)._1)
-          case other => throw new IllegalStateException(
-            s"${table.name}: page $n has b-tree type $other, not a " +
-              "table page - corrupt rootpage or an index tree")
-        }
-      }
-      None
-    } finally pf.close()
-  }
+  def maxRowid(path: String, h: Header, table: TableDef): Option[Long] =
+    spineRowid(path, h, table, rightmost = true)
 
   /** Smallest rowid — the LEFTMOST spine walk, O(depth) pages (the
     * mirror of [[maxRowid]]; round 15, serves the MIN(rowid-alias)
@@ -591,26 +592,37 @@ object SqliteFile {
     minRowid(path, header(path), table)
 
   /** Caller-snapshotted-header variant; see [[maxRowid]]. */
-  def minRowid(path: String, h: Header, table: TableDef): Option[Long] = {
+  def minRowid(path: String, h: Header, table: TableDef): Option[Long] =
+    spineRowid(path, h, table, rightmost = false)
+
+  /** The rowid of the last (or first) leaf cell, reached down the
+    * rightmost (or leftmost) child pointers. A spine visits each page
+    * at most once, so a walk still on an interior page after
+    * `pageCount` pages follows a cyclic pointer and fails naming it.
+    */
+  private def spineRowid(path: String, h: Header, table: TableDef,
+                         rightmost: Boolean): Option[Long] = {
     require(!table.withoutRowid,
-      s"${table.name} is WITHOUT ROWID - no rowid exists")
+      s"${table.name} is WITHOUT ROWID - no rowid watermark exists; " +
+        "incremental reads need a rowid table")
     val pf = new PageFile(path, h)
     try {
       var n = table.rootPage
-      while (true) {
+      while (pf.reads < h.pageCount) {
         val pg = pf.page(n)
         val off = if (n == 1) 100 else 0
         val tpe = pg(off) & 0xff
         val k = be(pg, off + 3, 2).toInt
         tpe match {
           case 0x05 =>
-            // leftmost child: cell 0's child pointer (rightmost-only
+            // rightmost child, or cell 0's child pointer (rightmost-only
             // when the interior page is cell-less)
-            n = if (k == 0) be(pg, off + 8, 4).toInt
+            n = if (rightmost || k == 0) be(pg, off + 8, 4).toInt
                 else be(pg, be(pg, off + 12, 2).toInt, 4).toInt
           case 0x0d =>
             if (k == 0) return None
-            val c = be(pg, off + 8, 2).toInt
+            // leaf cells are rowid-ordered
+            val c = be(pg, off + 8 + 2 * (if (rightmost) k - 1 else 0), 2).toInt
             val n1 = varint(pg, c)._2
             return Some(varint(pg, c + n1)._1)
           case other => throw new IllegalStateException(
@@ -618,7 +630,9 @@ object SqliteFile {
               "table page - corrupt rootpage or an index tree")
         }
       }
-      None
+      throw new IllegalStateException(s"${table.name}: rowid spine walk " +
+        s"still descends to page $n after all ${h.pageCount} pages - " +
+        "cyclic child pointer, corrupt file")
     } finally pf.close()
   }
 
@@ -679,51 +693,6 @@ object SqliteFile {
       while (w.hasNext) { w.next(); n += 1 }
       (n, w.pagesRead)
     } finally w.close()
-  }
-
-  /** Incremental read: rows of a rowid table with rowid in
-    * (minExclusive, maxInclusive] — the watermark shape every
-    * incremental-sync run takes (`rowid > last_seen`, optionally
-    * capped at a consistent `maxInclusive` snapshot point so rows
-    * committed DURING the run land in the next one). Subtrees whose
-    * interval misses the bound are pruned at PLAN time; surviving
-    * walks prune interior-cell-by-interior-cell. Composes with the
-    * WAL/journal overlay in [[header]], so a live WAL database yields
-    * its newest committed rows. WITHOUT ROWID refuses (see
-    * [[maxRowid]]).
-    */
-  def readRange(spark: SparkSession, path: String, table: TableDef,
-                minExclusive: Long, maxInclusive: Long = Long.MaxValue,
-                maxPartitions: Int = 32): DataFrame = {
-    val h = header(path)
-    val schema = schemaOf(table)
-    val cols = table.columns.toIndexedSeq
-    val recIdx = table.recordIndex
-    val tname = table.name
-    val roots = subtreeRanges(path, table)
-      .filter { case (_, lo, hi) => hi > minExclusive && lo < maxInclusive }
-      .map(_._1)
-    if (roots.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-    val groups = roots.grouped(
-      math.max(1, (roots.size + maxPartitions - 1) / maxPartitions)).toSeq
-    val rdd = spark.sparkContext
-      .parallelize(groups, math.max(1, groups.size))
-      .flatMap { subtrees =>
-        subtrees.iterator.flatMap { root =>
-          new TableWalk(path, h, root, minExclusive, maxInclusive).map {
-            case (rowid, vals) =>
-              Row.fromSeq(cols.zipWithIndex.map { case (c, i) =>
-                val src = recIdx(i)
-                if (c.rowidAlias) rowid
-                else if (src < vals.size) coerceValue(vals(src), c, tname)
-                else null
-              })
-          }
-        }
-      }
-    spark.createDataFrame(rdd, schema)
   }
 
   // ----------------------------------------------------- sqlite_master
@@ -903,7 +872,7 @@ object SqliteFile {
         c.name -> c.chType
     }.toMap
 
-  private[sources] def coerceValue(v: Any, c: ColumnDef, table: String): Any = {
+  private def coerceValue(v: Any, c: ColumnDef, table: String): Any = {
     def fail(want: String) = throw new IllegalStateException(
       s"$table.${c.name}: cannot coerce ${v.getClass.getSimpleName} " +
         s"value to $want (declared '${c.decl}')")
@@ -933,45 +902,35 @@ object SqliteFile {
     }
   }
 
-  /** Read one table as a DataFrame, one Spark partition per root
-    * subtree (capped by `maxPartitions` via grouping). The rowid
-    * alias column takes the cell rowid; rows written before an ALTER
-    * TABLE ADD COLUMN pad missing trailing columns with NULL (the
-    * same answer sqlite itself gives).
+  /** Declared column `c`'s value in a record read from `table`: the
+    * rowid alias takes the cell rowid, a record with no value at
+    * `recPos` (written before an ALTER TABLE ADD COLUMN) pads NULL, the
+    * same answer sqlite itself gives, and every other value meets its
+    * declared type through [[coerceValue]]. `recPos` is the column's
+    * [[TableDef.recordIndex]] entry. The one record → column
+    * projection: the scan, the catalog CDC envelope and the index
+    * point lookup all map records through it.
+    */
+  private[sources] def columnValue(table: String, c: ColumnDef, recPos: Int,
+                                   rowid: Long, vals: IndexedSeq[Any]): Any =
+    if (c.rowidAlias) rowid
+    else if (recPos < vals.size) coerceValue(vals(recPos), c, table)
+    else null
+
+  /** Read one table as a DataFrame: the batch front door to the
+    * `sqlite` DataSource V2 ([[SqliteDataSource]]), the one scan, so a
+    * filter or projection on the result reaches its probes and column
+    * pruning. One Spark partition per run of root subtrees, at most
+    * `maxPartitions` ([[groupSubtrees]]).
     */
   def read(spark: SparkSession, path: String, table: TableDef,
-           maxPartitions: Int = 32): DataFrame = {
-    val h = header(path)
-    val schema = schemaOf(table)
-    val cols = table.columns.toIndexedSeq
-    val recIdx = table.recordIndex
-    val tname = table.name
-    val roots = subtreeRoots(path, table)
-    val groups = roots.grouped(
-      math.max(1, (roots.size + maxPartitions - 1) / maxPartitions)).toSeq
-    val rdd = spark.sparkContext
-      .parallelize(groups, math.max(1, groups.size))
-      .flatMap { subtrees =>
-        subtrees.iterator.flatMap { root =>
-          new TableWalk(path, h, root).map { case (rowid, vals) =>
-            Row.fromSeq(cols.zipWithIndex.map { case (c, i) =>
-              val src = recIdx(i)
-              if (c.rowidAlias) rowid
-              else if (src < vals.size) coerceValue(vals(src), c, tname)
-              else null
-            })
-          }
-        }
-      }
-    spark.createDataFrame(rdd, schema)
-  }
+           maxPartitions: Int = 32): DataFrame =
+    spark.read.format("sqlite").option("path", path)
+      .option("table", table.name)
+      .option("maxPartitions", maxPartitions.toLong).load()
 
   /** Convenience: read by table name. */
-  def read(spark: SparkSession, path: String, tableName: String): DataFrame = {
-    val t = listTables(path).find(_.name == tableName).getOrElse(
-      throw new IllegalArgumentException(
-        s"table '$tableName' not found in $path (have: " +
-          s"${listTables(path).map(_.name).mkString(", ")})"))
-    read(spark, path, t)
-  }
+  def read(spark: SparkSession, path: String, tableName: String): DataFrame =
+    spark.read.format("sqlite").option("path", path)
+      .option("table", tableName).load()
 }

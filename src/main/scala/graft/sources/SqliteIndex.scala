@@ -954,7 +954,8 @@ object SqliteIndex {
             val c = be(f.pg, f.off + 8 + 2 * f.i, 2).toInt
             f.i += 1
             val (p, n1) = varint(f.pg, c)
-            val rec = record(payload(pf, f.pg, c, p, c + n1, index = true), cs)
+            val rec =
+              record(payload(pf, f.pageNo, f.pg, p, c + n1, index = true), cs)
             if (pastEnd(rec)) f.stopped = true
             if (containsRec(rec)) nextRec = rec
           } else stack.removeLast()
@@ -969,7 +970,8 @@ object SqliteIndex {
             val child = be(f.pg, c, 4).toInt
             val (p, n1) = varint(f.pg, c + 4)
             val rec =
-              record(payload(pf, f.pg, c, p, c + 4 + n1, index = true), cs)
+              record(payload(pf, f.pageNo, f.pg, p, c + 4 + n1,
+                index = true), cs)
             f.pending = rec
             if (!beforeStart(rec)) // child max >= start hull
               stack.append(new Frame(child))
@@ -1174,8 +1176,8 @@ object SqliteIndex {
 
   /** Equality point lookup: index probe + per-rowid bounded table
     * fetch. Returns (rows as raw (rowid, record values), index pages,
-    * table pages) — callers map records through the TableDef exactly
-    * like [[SqliteFile.read]] does.
+    * table pages) — callers map records to declared columns through
+    * [[SqliteFile.columnValue]], like the scan does.
     */
   def lookupRaw(path: String, table: TableDef, idx: IndexDef,
                 value: Any): (Seq[(Long, IndexedSeq[Any])], Int, Int) = {
@@ -1209,13 +1211,8 @@ object SqliteIndex {
     val cols = table.columns.toIndexedSeq
     val recIdx = table.recordIndex
     raw.map { case (rowid, vals) =>
-      org.apache.spark.sql.Row.fromSeq(cols.zipWithIndex.map {
-        case (c, i) =>
-          val src = recIdx(i)
-          if (c.rowidAlias) rowid
-          else if (src < vals.size) coerceValue(vals(src), c, table.name)
-          else null
-      })
+      org.apache.spark.sql.Row.fromSeq(cols.indices.map(i =>
+        columnValue(table.name, cols(i), recIdx(i), rowid, vals)))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.sources.SqliteFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites. */
@@ -22,4 +23,14 @@ object SparkSuite {
 abstract class SparkFunSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
   val sf: String = SparkSuite.sf
+
+  /** Every row of a SQLite table, collected from [[SqliteFile.read]]
+    * and re-wrapped as a local DataFrame of the same schema. A filter
+    * on it runs in Spark and never reaches a sqlite probe, so it is the
+    * full-scan reference the pushdown specs compare their probes with.
+    */
+  def scanReference(db: String, table: SqliteFile.TableDef): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(SqliteFile.read(spark, db, table).collect(): _*),
+      SqliteFile.schemaOf(table))
 }

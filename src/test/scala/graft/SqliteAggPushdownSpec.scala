@@ -33,8 +33,7 @@ class SqliteAggPushdownSpec extends SparkFunSuite {
     val f = dsv2.filter("k = 42").agg(max("id"))
     assert(!f.queryExecution.executedPlan.toString.contains("agg-spine"))
     assert(f.collect()(0).getLong(0) ==
-      SqliteFile.read(spark, db,
-        SqliteFile.listTables(db).find(_.name == "t").get)
+      scanReference(db, SqliteFile.listTables(db).find(_.name == "t").get)
         .filter("k = 42").agg(max("id")).collect()(0).getLong(0))
     val g = dsv2.groupBy("k").agg(max("id"))
     assert(!g.queryExecution.executedPlan.toString.contains("agg-spine"))

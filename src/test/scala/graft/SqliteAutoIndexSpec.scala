@@ -19,7 +19,7 @@ class SqliteAutoIndexSpec extends SparkFunSuite {
 
   private def scanIds(table: String, pred: String): Seq[Long] = {
     val t = SqliteFile.listTables(db).find(_.name == table).get
-    SqliteFile.read(spark, db, t).filter(pred)
+    scanReference(db, t).filter(pred)
       .collect().map(_.getLong(0)).sorted.toSeq
   }
 
@@ -69,7 +69,7 @@ class SqliteAutoIndexSpec extends SparkFunSuite {
     val (ids, _) = SqliteIndex.indexRowids(db, h,
       idx("sqlite_autoindex_pk_1"), "pk-00042")
     val t = SqliteFile.listTables(db).find(_.name == "pk").get
-    val rows = SqliteFile.read(spark, db, t)
+    val rows = scanReference(db, t)
       .filter("x = 'pk-00042'").collect()
     assert(ids.size == 1 && rows.length == 1)
     assert(rows(0).getLong(1) == 42L * 7)

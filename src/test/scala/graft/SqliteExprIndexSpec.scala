@@ -47,7 +47,7 @@ class SqliteExprIndexSpec extends SparkFunSuite {
       idx("e_lower"), "word-00777")
     assert(ids == Seq(777L))
     assert(pages < 12, s"expression point probe touched $pages pages")
-    val scan = SqliteFile.read(spark, db, table)
+    val scan = scanReference(db, table)
       .filter("lower(s) = 'word-00777'")
       .collect().map(_.getLong(0)).toSeq
     assert(ids == scan)
@@ -59,7 +59,7 @@ class SqliteExprIndexSpec extends SparkFunSuite {
       KeyRange(Some("word-01000"), loInc = true,
         Some("word-01010"), hiInc = false))
     assert(ids.size == 10 && ids.sum == 10045L)
-    assert(ids.sorted == SqliteFile.read(spark, db, table)
+    assert(ids.sorted == scanReference(db, table)
       .filter("lower(s) >= 'word-01000' AND lower(s) < 'word-01010'")
       .collect().map(_.getLong(0)).sorted.toSeq)
   }

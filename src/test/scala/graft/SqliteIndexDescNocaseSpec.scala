@@ -17,8 +17,10 @@ class SqliteIndexDescNocaseSpec extends SparkFunSuite {
   private def idx(name: String) = indexes.find(_.name == name).get
   private lazy val h = SqliteFile.header(db)
 
+  private lazy val reference = scanReference(db, table)
+
   private def scanIds(pred: String): Seq[Long] =
-    SqliteFile.read(spark, db, table).filter(pred)
+    reference.filter(pred)
       .collect().map(_.getLong(0)).sorted.toSeq
 
   test("specs parse DESC and COLLATE NOCASE modifiers per column") {

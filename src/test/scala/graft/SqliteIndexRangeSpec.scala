@@ -18,8 +18,10 @@ class SqliteIndexRangeSpec extends SparkFunSuite {
     SqliteIndex.listIndexes(db).find(_.name == "ix_s").get
   private lazy val h = SqliteFile.header(db)
 
+  private lazy val reference = scanReference(db, table)
+
   private def scanIds(pred: String): Seq[Long] =
-    SqliteFile.read(spark, db, table).filter(pred)
+    reference.filter(pred)
       .collect().map(_.getLong(0)).sorted.toSeq
 
   private def rangeIds(idx: SqliteIndex.IndexDef, r: KeyRange): Seq[Long] =

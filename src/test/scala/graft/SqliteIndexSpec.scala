@@ -13,6 +13,7 @@ class SqliteIndexSpec extends SparkFunSuite {
 
   private val db = "src/test/resources/sqlite/index_fixture.db"
   private lazy val table = SqliteFile.listTables(db).find(_.name == "t").get
+  private lazy val reference = scanReference(db, table)
   private lazy val indexes = SqliteIndex.listIndexes(db)
   private def idx(name: String) = indexes.find(_.name == name).get
 
@@ -61,10 +62,20 @@ class SqliteIndexSpec extends SparkFunSuite {
 
   test("the probe agrees with a full-scan filter row for row " +
       "(all columns, not just ids)") {
-    val scanned = SqliteFile.read(spark, db, table)
-      .filter("k = 42").orderBy("id").collect().toSeq
+    val scanned = reference.filter("k = 42").orderBy("id").collect().toSeq
     val probed = SqliteIndex.lookup(db, table, idx("ix_k"), 42L)
     assert(probed == scanned)
+  }
+
+  test("the full-scan reference filters in Spark; read pushes the " +
+      "same filter into the probe") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+    assert(scans(reference.filter("k = 42")).isEmpty)
+    val pushed = scans(SqliteFile.read(spark, db, table).filter("k = 42"))
+    assert(pushed.size == 1 &&
+      pushed.head.scan.description.contains("probe=ix_k:42"))
   }
 
   test("text probes: ASCII and multibyte UTF-8 keys (memcmp " +
@@ -94,8 +105,7 @@ class SqliteIndexSpec extends SparkFunSuite {
     // were skipped, some key's rowid set would come up short. Check
     // every key in one pass over a few.
     for (k <- Seq(0L, 1L, 50L, 96L)) {
-      val expect = SqliteFile.read(spark, db, table)
-        .filter(s"k = $k").count()
+      val expect = reference.filter(s"k = $k").count()
       val (rowids, _) = SqliteIndex.indexRowids(db, idx("ix_k"), k)
       assert(rowids.size.toLong == expect, s"k=$k")
       assert(rowids.distinct.size == rowids.size, s"k=$k dup rowids")
@@ -131,8 +141,7 @@ class SqliteIndexSpec extends SparkFunSuite {
   test("DSv2 pushdown: residual predicates still apply on top of the " +
       "probe; non-indexed equalities fall back to a full scan") {
     val mixed = dsv2.filter("k = 42 AND id > 2000").collect()
-    val expect = SqliteFile.read(spark, db, table)
-      .filter("k = 42 AND id > 2000").count()
+    val expect = reference.filter("k = 42 AND id > 2000").count()
     assert(mixed.length.toLong == expect && mixed.nonEmpty)
     // round 15: u's TEXT UNIQUE autoindex now SERVES this equality
     val viaAuto = dsv2.filter("u = 'uniq-000500'")

@@ -17,8 +17,10 @@ class SqlitePartialIndexSpec extends SparkFunSuite {
     SqliteIndex.listIndexes(db).find(_.name == "pt_hot").get
   private lazy val h = SqliteFile.header(db)
 
+  private lazy val reference = scanReference(db, table)
+
   private def scanIds(pred: String): Seq[Long] =
-    SqliteFile.read(spark, db, table).filter(pred)
+    reference.filter(pred)
       .collect().map(_.getLong(0)).sorted.toSeq
 
   test("the predicate parses; contained probes serve, loose ones refuse") {

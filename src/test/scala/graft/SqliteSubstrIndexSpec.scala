@@ -40,7 +40,7 @@ class SqliteSubstrIndexSpec extends SparkFunSuite {
       idx("s_pre"), "pfx-00123")
     assert(ids.size == 4 && ids.sum == 1974L)
     assert(pages < 12, s"substr point probe touched $pages pages")
-    val scan = SqliteFile.read(spark, db, table)
+    val scan = scanReference(db, table)
       .filter("substring(s, 1, 9) = 'pfx-00123'")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(ids.sorted == scan)
@@ -53,7 +53,7 @@ class SqliteSubstrIndexSpec extends SparkFunSuite {
         Some("pfx-00210"), hiInc = false))
     assert(ids.size == 40 && ids.sum == 32780L)
     assert(pages < 16, s"substr range probe touched $pages pages")
-    assert(ids.sorted == SqliteFile.read(spark, db, table)
+    assert(ids.sorted == scanReference(db, table)
       .filter("substring(s, 1, 9) >= 'pfx-00200' AND " +
         "substring(s, 1, 9) < 'pfx-00210'")
       .collect().map(_.getLong(0)).sorted.toSeq)

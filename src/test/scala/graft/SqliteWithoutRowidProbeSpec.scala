@@ -52,7 +52,7 @@ class SqliteWithoutRowidProbeSpec extends SparkFunSuite {
     assert(pages < 15, s"composite probe touched $pages pages " +
       "(file has 433)")
     // row-for-row against the full-scan filter
-    val scan = SqliteFile.read(spark, db, tdef("wr1"))
+    val scan = scanReference(db, tdef("wr1"))
       .filter("a = 42 AND b >= 'b-01000' AND b < 'b-04000'")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       .sortBy(_._2).toSeq
@@ -132,7 +132,7 @@ class SqliteWithoutRowidProbeSpec extends SparkFunSuite {
       s"candidate probe must keep the binary post-filter:\n$plan")
     // the stored variant is 'KEY-00505' only if (505/97)%3 == 1 — it
     // is: the binary filter keeps exactly the matching-case row
-    val scan = SqliteFile.read(spark, db, tdef("wr3"))
+    val scan = scanReference(db, tdef("wr3"))
       .filter("k = 'KEY-00505'").collect().map(_.getLong(1)).toSeq
     assert(q.collect().map(_.getLong(1)).toSeq == scan)
   }
@@ -143,7 +143,7 @@ class SqliteWithoutRowidProbeSpec extends SparkFunSuite {
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("probe="), s"RTRIM pk must not probe:\n$plan")
     assert(q.collect().map(_.getLong(1)).toSeq ==
-      SqliteFile.read(spark, db, tdef("wr4"))
+      scanReference(db, tdef("wr4"))
         .filter("k = 'r-001 '").collect().map(_.getLong(1)).toSeq)
   }
 }
