@@ -27,6 +27,11 @@ import graft.sinks.ClickHouseSink
   * `--clickhouse-host` is given) prints the exact create → insert →
   * optimize statement sequence the reference would run — the only mode
   * exercisable in a sandbox with no ClickHouse server.
+  *
+  * `--num-partitions N` (positive) reads each table in at most N
+  * partitions. A JDBC table takes N key ranges; a SQLite file's table
+  * takes as many as its bytes need under Spark's file split rule
+  * (`MigrationJob.migrateSqliteFile`), at most N.
   */
 object Migrate {
 
@@ -63,6 +68,8 @@ object Migrate {
     val c = loop(args.toList, Config())
     require(c.jdbcUrl.nonEmpty || c.sqlitePath.nonEmpty,
       "one of --sqlite or --jdbc-url is required")
+    require(c.numPartitions > 0,
+      s"--num-partitions must be positive, got ${c.numPartitions}")
     c
   }
 

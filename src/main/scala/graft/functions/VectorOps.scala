@@ -451,6 +451,19 @@ case class CentroidDistsExpr(child: Expression, centroids: Array[Array[Double]])
 
   override protected def withNewChildInternal(newChild: Expression): CentroidDistsExpr =
     copy(child = newChild)
+
+  // A case class compares Array fields by reference, so two equal
+  // centroids arrays would defeat semanticEquals/CSE: compare by content.
+  override def equals(other: Any): Boolean = other match {
+    case o: CentroidDistsExpr =>
+      child == o.child && java.util.Arrays.deepEquals(
+        centroids.asInstanceOf[Array[AnyRef]], o.centroids.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+
+  private lazy val centroidsHash =
+    java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])
+  override def hashCode(): Int = 31 * child.hashCode() + centroidsHash
 }
 
 /** Codegen'd PQ ENCODE (round 11): all `m` subspace codes of a vector
@@ -580,6 +593,19 @@ case class PqCodesExpr(child: Expression, codebooks: Array[Array[Array[Double]]]
 
   override protected def withNewChildInternal(newChild: Expression): PqCodesExpr =
     copy(child = newChild)
+
+  // A case class compares Array fields by reference, so two equal
+  // codebooks arrays would defeat semanticEquals/CSE: compare by content.
+  override def equals(other: Any): Boolean = other match {
+    case o: PqCodesExpr =>
+      child == o.child && java.util.Arrays.deepEquals(
+        codebooks.asInstanceOf[Array[AnyRef]], o.codebooks.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+
+  private lazy val codebooksHash =
+    java.util.Arrays.deepHashCode(codebooks.asInstanceOf[Array[AnyRef]])
+  override def hashCode(): Int = 31 * child.hashCode() + codebooksHash
 }
 
 /** Codegen'd PQ LUT (round 11): the m×k asymmetric-distance table of a
@@ -696,6 +722,19 @@ case class PqLutExpr(child: Expression, codebooks: Array[Array[Array[Double]]])
 
   override protected def withNewChildInternal(newChild: Expression): PqLutExpr =
     copy(child = newChild)
+
+  // A case class compares Array fields by reference, so two equal
+  // codebooks arrays would defeat semanticEquals/CSE: compare by content.
+  override def equals(other: Any): Boolean = other match {
+    case o: PqLutExpr =>
+      child == o.child && java.util.Arrays.deepEquals(
+        codebooks.asInstanceOf[Array[AnyRef]], o.codebooks.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+
+  private lazy val codebooksHash =
+    java.util.Arrays.deepHashCode(codebooks.asInstanceOf[Array[AnyRef]])
+  override def hashCode(): Int = 31 * child.hashCode() + codebooksHash
 }
 
 object VectorOps {

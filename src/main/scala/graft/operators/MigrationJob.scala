@@ -17,7 +17,11 @@ import graft.sinks.ClickHouseDdl
   * Chunking (main.py:106-116, chunk_size=10000 default) maps to
   * `maxRecordsPerFile` on the write: output files are bounded-size
   * batches, produced in parallel by every executor, instead of a single
-  * driver-side cursor loop. DDL for the target engine comes from
+  * driver-side cursor loop. A SQLite table is read in as many tasks as
+  * its bytes need under Spark's file split rule over the whole catalog
+  * (see [[migrateSqliteFile]]), up to the caller's `maxPartitions`, so
+  * a small table is one task and one staged file, not one per b-tree
+  * subtree. DDL for the target engine comes from
   * ClickHouseDdl; the data lands as parquet (or through any Spark
   * writer) already conforming to the mapped schema.
   *
@@ -160,14 +164,33 @@ object MigrationJob {
     * Declared DATE/DATETIME columns are parsed to Date/DateTime
     * (main.py:18-37) and declared as such in the DDL. A failure leaves
     * the other tables' outputs as [[migrateAll]] describes.
+    *
+    * Each table's read is sized by its bytes (leaf pages × page size,
+    * [[graft.sources.SqliteFile.leafPages]]) with Spark's file-source
+    * split rule taken over the whole catalog:
+    * `split = min(maxPartitionBytes, max(openCostInBytes, catalogBytes
+    * / defaultParallelism))` from `spark.sql.files.*`, and a table
+    * reads in `ceil(tableBytes / split)` partitions, at least 1 and at
+    * most `maxPartitions`. With the tables running concurrently, the
+    * catalog makes about one task per core, while a large table still
+    * splits up to `maxPartitionBytes` a task.
     */
   def migrateSqliteFile(spark: SparkSession, dbPath: String,
                         database: String, outDir: String,
                         chunkSize: Long = 10000L,
                         maxPartitions: Int = 32): Seq[TableReport] = {
     import graft.sources.SqliteFile
-    concurrently(spark, SqliteFile.listTables(dbPath)) { t =>
-      val df = SqliteFile.read(spark, dbPath, t, maxPartitions)
+    val h = SqliteFile.header(dbPath)
+    val tables = SqliteFile.listTables(dbPath)
+    val bytes = tables.map(t =>
+      SqliteFile.leafPages(dbPath, h, t.rootPage).toLong * h.pageSize)
+    val conf = spark.sessionState.conf
+    val split = math.max(1L, math.min(conf.filesMaxPartitionBytes,
+      math.max(conf.filesOpenCostInBytes,
+        bytes.sum / spark.sparkContext.defaultParallelism)))
+    concurrently(spark, tables.zip(bytes)) { case (t, b) =>
+      val parts = math.min(maxPartitions, math.max(1L, (b + split - 1) / split))
+      val df = SqliteFile.read(spark, dbPath, t, parts.toInt)
       migrateTable(df, database, t.name.toLowerCase, outDir, chunkSize,
         orderByOf(t.primaryKey), declaredTypes = SqliteFile.temporalTypes(t))
     }

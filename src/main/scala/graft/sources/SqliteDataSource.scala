@@ -84,6 +84,8 @@ final class SqliteDataSource extends TableProvider
     val opts = new CaseInsensitiveStringMap(properties)
     val maxParts =
       Option(opts.get("maxpartitions")).map(_.toInt).getOrElse(32)
+    require(maxParts > 0,
+      s"sqlite source option maxPartitions must be positive, got $maxParts")
     catalogSpec(opts) match {
       case Some(spec) =>
         new SqliteCatalogTable(pathOf(opts), spec, maxParts)

@@ -351,18 +351,26 @@ object SqliteFile {
       * deep tree must touch O(matching leaves + spine), not O(tree)).
       */
     var reads: Int = 0
-    def page(n: Int): Array[Byte] = {
+    def page(n: Int): Array[Byte] = bytes(n, 0, h.pageSize)
+
+    /** Page `n`'s b-tree page type: its header's first byte, read
+      * without the rest of the page.
+      */
+    def pageType(n: Int): Int =
+      bytes(n, if (n == 1) 100 else 0, 1)(0) & 0xff
+
+    private def bytes(n: Int, off: Int, len: Int): Array[Byte] = {
       reads += 1
       require(n >= 1 && n <= h.pageCount,
         s"page $n out of range 1..${h.pageCount}")
-      val b = new Array[Byte](h.pageSize)
+      val b = new Array[Byte](len)
       h.walOverrides.get(n) match {
-        case Some(off) =>
+        case Some(at) =>
           if (walRaf == null)
             walRaf = new java.io.RandomAccessFile(h.walPath, "r")
-          walRaf.seek(off); walRaf.readFully(b)
+          walRaf.seek(at + off); walRaf.readFully(b)
         case None =>
-          raf.seek((n - 1).toLong * h.pageSize)
+          raf.seek((n - 1).toLong * h.pageSize + off)
           raf.readFully(b)
       }
       b
@@ -429,7 +437,9 @@ object SqliteFile {
     * own partition. Records stay raw; every reader maps them to
     * declared columns through [[columnValue]].
     * One open file handle per iterator; closed when exhausted (or via
-    * close()).
+    * close()). A walk reads each tree and overflow page at most once,
+    * so one still reading after `pageCount` pages follows a cyclic
+    * pointer and fails naming the page it was about to read.
     *
     * Rowid-range pruning (round 14, the incremental-read primitive):
     * `minEx`/`maxInc` restrict the walk to rowids in (minEx, maxInc].
@@ -463,6 +473,10 @@ object SqliteFile {
         val n0 = stack.head; stack = stack.tail
         val cellsOnly = n0 < 0
         val n = math.abs(n0)
+        if (pf.reads >= h.pageCount) throw new IllegalStateException(
+          s"page $n: b-tree walk from page ${math.abs(root)} still reads " +
+            s"pages after all ${h.pageCount} - cyclic child pointer, " +
+            "corrupt file")
         val pg = pf.page(n)
         val off = pageHeaderOff(n)
         val tpe = pg(off) & 0xff
@@ -500,12 +514,7 @@ object SqliteFile {
             require(!bounded, s"page $n: rowid bounds on an index " +
               "b-tree (WITHOUT ROWID content) are meaningless - " +
               "incremental reads need a rowid table")
-            if (!cellsOnly) {
-              val ptrs = (0 until k).map { i =>
-                be(pg, be(pg, off + 12 + 2 * i, 2).toInt, 4).toInt
-              } :+ be(pg, off + 8, 4).toInt
-              stack = ptrs.toList ::: stack
-            }
+            if (!cellsOnly) stack = childPointers(pg, off).toList ::: stack
             cells = (0 until k).iterator.map { i =>
               val c = be(pg, off + 12 + 2 * i, 2).toInt
               val (p, n1) = varint(pg, c + 4) // 4-byte child ptr first
@@ -549,11 +558,54 @@ object SqliteFile {
       val tpe = pg(off) & 0xff
       if (tpe == 0x0d || tpe == 0x0a) Seq(n)
       else {
-        val k = be(pg, off + 3, 2).toInt
-        val children = (0 until k).map { i =>
-          be(pg, be(pg, off + 12 + 2 * i, 2).toInt, 4).toInt
-        } :+ be(pg, off + 8, 4).toInt
+        val children = childPointers(pg, off)
         if (tpe == 0x02) children :+ (-n) else children
+      }
+    } finally pf.close()
+  }
+
+  /** An interior b-tree page's child pointers, left to right, the
+    * rightmost pointer last.
+    */
+  private def childPointers(pg: Array[Byte], off: Int): IndexedSeq[Int] = {
+    val k = be(pg, off + 3, 2).toInt
+    (0 until k).map { i =>
+      be(pg, be(pg, off + 12 + 2 * i, 2).toInt, 4).toInt
+    } :+ be(pg, off + 8, 4).toInt
+  }
+
+  /** The number of leaf pages in the b-tree rooted at page `root` (a
+    * table's or an index's), counted from its interior pages: a b-tree
+    * keeps every leaf at one depth, so the page type of one child per
+    * level tells whether the level below is the leaves, and the child
+    * pointers of the lowest interior level count them. No leaf page is
+    * read past its type byte. Leaf pages × page size is the table's
+    * size for read planning (overflow pages are left out). A walk
+    * still reading after `pageCount` pages follows a cyclic pointer
+    * and fails naming the page.
+    */
+  def leafPages(path: String, h: Header, root: Int): Int = {
+    val pf = new PageFile(path, h)
+    def interior(tpe: Int) = tpe == 0x05 || tpe == 0x02
+    def children(n: Int): Seq[Int] = {
+      if (pf.reads >= h.pageCount) throw new IllegalStateException(
+        s"page $n: leaf count of the b-tree at page $root still reads " +
+          s"pages after all ${h.pageCount} - cyclic child pointer, corrupt file")
+      val pg = pf.page(n)
+      val off = if (n == 1) 100 else 0
+      val tpe = pg(off) & 0xff
+      if (!interior(tpe)) throw new IllegalStateException(
+        s"page $n: b-tree type $tpe on an interior level of the b-tree " +
+          s"at page $root - corrupt file")
+      childPointers(pg, off)
+    }
+    try {
+      if (!interior(pf.pageType(root))) 1
+      else {
+        var level = Seq(children(root))
+        while (interior(pf.pageType(level.head.head)))
+          level = level.flatMap(_.map(children))
+        level.map(_.size).sum
       }
     } finally pf.close()
   }

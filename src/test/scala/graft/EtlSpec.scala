@@ -287,6 +287,57 @@ class MigrationJobSpec extends SparkFunSuite {
     }
   }
 
+  private def partFiles(dir: String): Int =
+    new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+
+  test("leafPages counts each b-tree's leaf pages as sqlite's dbstat does") {
+    val h = SqliteFile.header(fixture)
+    val roots = SqliteFile.listTables(fixture).map(t => t.name -> t.rootPage) ++
+      graft.sources.SqliteIndex.listIndexes(fixture).map(i => i.name -> i.rootPage)
+    val leaves = roots.map { case (name, root) =>
+      name -> SqliteFile.leafPages(fixture, h, root)
+    }.toMap
+    // SELECT name, count(*) FROM dbstat WHERE pagetype = 'leaf' GROUP BY name
+    // (big_val is the index on big.val)
+    assert(leaves("big") == 556 && leaves("big_val") == 15 && leaves("wr") == 170,
+      leaves)
+    assert(leaves("typed") == 1)
+  }
+
+  test("migrateSqliteFile sizes reads by bytes: a small catalog stages " +
+      "each table as one file") {
+    withTempDir("graft-mig-split") { out =>
+      val reports = MigrationJob.migrateSqliteFile(spark, fixture, "db", out)
+      SqliteFile.listTables(fixture).zip(reports).foreach { case (t, r) =>
+        assert(partFiles(s"$out/${r.table}") == 1, t.name)
+        assert(r.rows == SqliteFile.read(spark, fixture, t).count(), t.name)
+        assert(spark.read.parquet(s"$out/${r.table}").count() == r.rows, t.name)
+      }
+    }
+  }
+
+  test("migrateSqliteFile still splits a table larger than the split size") {
+    val keys = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    withTempDir("graft-mig-split-big") { out =>
+      try {
+        spark.conf.set(keys(0), "256k")
+        spark.conf.set(keys(1), "64k")
+        val reports = MigrationJob.migrateSqliteFile(spark, fixture, "db", out)
+        assert(partFiles(s"$out/big") > 1)
+        assert(reports.find(_.table == "big").get.rows == 6000L)
+        val staged = spark.read.parquet(s"$out/big")
+        val source = MigrationJob.conform(SqliteFile.read(spark, fixture, "big"))
+        assert(staged.count() == 6000L)
+        assert(staged.exceptAll(source).isEmpty && source.exceptAll(staged).isEmpty)
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("a failing table: the caller gets its exception, and no pool thread is left") {
     withTempDir("graft-mig-fail") { dir =>
       val src = s"$dir/src"

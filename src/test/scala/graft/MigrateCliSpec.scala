@@ -26,6 +26,14 @@ class MigrateCliSpec extends SparkFunSuite {
     intercept[IllegalArgumentException](Migrate.parse(Array[String]()))
   }
 
+  test("--num-partitions must be positive") {
+    Seq("0", "-2").foreach { n =>
+      val e = intercept[IllegalArgumentException](Migrate.parse(
+        Array("--sqlite", "/tmp/x.db", "--num-partitions", n)))
+      assert(e.getMessage.contains("--num-partitions"), e.getMessage)
+    }
+  }
+
   test("main() migrates a live Derby catalog end-to-end in dry-run") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cli_derby").toString
     System.setProperty("derby.stream.error.file", s"$dir/derby.log")

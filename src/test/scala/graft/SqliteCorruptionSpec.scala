@@ -15,7 +15,10 @@ import graft.sources.SqliteFile
   *    root itself (the `maxRowid`/`minRowid` spine walks);
   *  - an overflow chain whose last page links back to its first (every
   *    record walk, the local one and the Spark scan);
-  *  - a chain that ends early, or a payload size larger than the file.
+  *  - a chain that ends early, or a payload size larger than the file;
+  *  - a root whose rightmost child is the root, under a full scan (the
+  *    b-tree walk itself, and so the Spark scan and the migration), and
+  *    one whose leftmost child is the root, under the leaf count.
   * Each body runs on a daemon thread and the test gives up after a
   * fixed budget, so a regression fails here rather than hanging the
   * suite.
@@ -115,6 +118,35 @@ class SqliteCorruptionSpec extends SparkFunSuite {
     }
     val e = failure(SqliteFile.minRowid(db, events))
     assert(e.getMessage.contains(s"page $root"), e.getMessage)
+  }
+
+  test("a full scan over a root whose rightmost child is itself fails: " +
+      "the local walk, the Spark scan and the migration") {
+    val root = events.rootPage
+    val db = corrupted("cdc_v3.db") { p =>
+      p.put32(p.hdr(root) + 8, root)
+    }
+    val cyclic = s"(?s)page \\d+: b-tree walk from page $root still reads .*"
+    val walk = failure(SqliteFile.pagesTouched(db, events))
+    assert(walk.getMessage.matches(cyclic), walk.getMessage)
+    val scan = failure(SqliteFile.read(spark, db, events).count())
+    assert(scan.getMessage.matches(cyclic), scan.getMessage)
+    val out = Files.createTempDirectory("sqlite-corrupt-out")
+    try {
+      val migration = failure(graft.operators.MigrationJob
+        .migrateSqliteFile(spark, db, "db", out.toString))
+      assert(migration.getMessage.matches(cyclic), migration.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+  }
+
+  test("leafPages: a root whose leftmost child is itself fails") {
+    val root = events.rootPage
+    val db = corrupted("cdc_v3.db") { p =>
+      p.put32(p.cell(root, 0, interior = true), root)
+    }
+    val e = failure(SqliteFile.leafPages(db, SqliteFile.header(db), root))
+    assert(e.getMessage.matches(s"(?s)page \\d+: .*b-tree at page $root.*"),
+      e.getMessage)
   }
 
   test("a cyclic overflow chain fails the walk and the Spark scan") {

@@ -176,6 +176,16 @@ class SqliteFileSpec extends SparkFunSuite {
     assert(e2.getMessage.contains("not a SQLite 3 database"))
   }
 
+  test("a non-positive maxPartitions is refused by name") {
+    val big = SqliteFile.listTables(db).find(_.name == "big").get
+    Seq(0, -1).foreach { n =>
+      val e = intercept[IllegalArgumentException](
+        SqliteFile.read(spark, db, big, maxPartitions = n).count())
+      assert(e.getMessage.contains("maxPartitions") &&
+        e.getMessage.contains(s"got $n"), e.getMessage)
+    }
+  }
+
   test("journal siblings (round 14): cold/garbage journals are ignored, " +
       "hot journals REPLAY (SqliteJournalSpec), empty journals read fine") {
     // a journal without the 8-byte magic is COLD — sqlite's own rule:

@@ -149,4 +149,33 @@ class VectorOpsSpec extends SparkFunSuite {
     }.sum
     assert(row.getDouble(1) == exp)
   }
+
+  private val vecChild = org.apache.spark.sql.catalyst.expressions.Literal.create(
+    Seq(1.0, 2.0), org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.DoubleType))
+  private def matrix(last: Double) = Array(Array(0.0, 1.0), Array(2.0, last))
+
+  test("centroid_dists: equal centroids in distinct arrays are semanticEquals") {
+    import graft.functions.CentroidDistsExpr
+    val a = CentroidDistsExpr(vecChild, matrix(3.0))
+    val b = CentroidDistsExpr(vecChild, matrix(3.0))
+    assert(a.semanticEquals(b) && a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(CentroidDistsExpr(vecChild, matrix(4.0))))
+  }
+
+  test("pq_codes: equal codebooks in distinct arrays are semanticEquals") {
+    import graft.functions.PqCodesExpr
+    val a = PqCodesExpr(vecChild, Array(matrix(3.0)))
+    val b = PqCodesExpr(vecChild, Array(matrix(3.0)))
+    assert(a.semanticEquals(b) && a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(PqCodesExpr(vecChild, Array(matrix(4.0)))))
+  }
+
+  test("pq_lut: equal codebooks in distinct arrays are semanticEquals") {
+    import graft.functions.PqLutExpr
+    val a = PqLutExpr(vecChild, Array(matrix(3.0)))
+    val b = PqLutExpr(vecChild, Array(matrix(3.0)))
+    assert(a.semanticEquals(b) && a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(PqLutExpr(vecChild, Array(matrix(4.0)))))
+  }
 }
