@@ -46,11 +46,8 @@ object Tables {
     * default since SPARK-23207) and every gate is hash-checked over
     * the spread path at sf0.01/sf0.1.
     */
-  val SpreadPartitionsKey = "graft.input.spreadPartitions"
-  val SpreadMinBytesKey = "graft.input.spreadMinBytes"
-  val SpreadMaxBytesKey = "graft.input.spreadMaxBytes"
-  private val DefaultSpreadMinBytes = 16L << 10
-  private val DefaultSpreadMaxBytes = 256L << 20
+  private val SpreadMinBytes = 16L << 10
+  private val SpreadMaxBytes = 256L << 20
   private val SpreadTargetBytesPerPartition = 64L << 10
 
   /** (row groups, bytes) summed over files — footer metadata, cached. */
@@ -59,41 +56,33 @@ object Tables {
 
   /** Repartition `df` for parallel downstream expression work iff its
     * source files are under-split (fewer row groups than the session's
-    * parallelism) and small enough that the exchange is trivially
-    * cheap. Identity otherwise — including on every realistically
-    * sized production table.
+    * parallelism) and between 16 KiB and 256 MiB, small enough that
+    * the exchange is trivially cheap. Identity otherwise — including
+    * on every realistically sized production table.
     */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val files = df.inputFiles
     if (files.isEmpty) return df
-    val cores = spark.sparkContext.defaultParallelism
-    val cap = spark.conf.getOption(SpreadPartitionsKey).map(_.toInt)
-      .orElse(sys.env.get("GRAFT_SPREAD_PARTITIONS").map(_.toInt))
-      .getOrElse(cores)
+    val cap = spark.sparkContext.defaultParallelism
     if (cap <= 1) return df
-    val minB = spark.conf.getOption(SpreadMinBytesKey).map(_.toLong)
-      .getOrElse(DefaultSpreadMinBytes)
-    val maxB = spark.conf.getOption(SpreadMaxBytesKey).map(_.toLong)
-      .getOrElse(DefaultSpreadMaxBytes)
     // bounded cache key (hash of the file list, not the multi-MB list
-    // itself) INCLUDING the decision confs, so a partial early-exited
-    // scan is only ever reused under the confs it was valid for
-    // (ADVICE r17)
+    // itself) INCLUDING the cap, so a partial early-exited scan is only
+    // ever reused under the parallelism it was valid for (ADVICE r17)
     val key = {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       files.sorted.foreach(f => md.update(f.getBytes("UTF-8")))
-      java.util.Base64.getEncoder.encodeToString(md.digest()) + s":$cap:$maxB"
+      java.util.Base64.getEncoder.encodeToString(md.digest()) + s":$cap"
     }
     val (rowGroups, bytes) = layoutCache.getOrElseUpdate(key, {
       val conf = spark.sessionState.newHadoopConf()
-      // early exit (ADVICE r17): once rg >= cap or b > maxB the
+      // early exit (ADVICE r17): once rg >= cap or b > SpreadMaxBytes the
       // decision is identity whatever the remaining files hold, so a
       // many-file production table costs O(few) footer reads, not
       // O(#files)
       var rg = 0; var b = 0L
       val it = files.iterator
-      while (it.hasNext && rg < cap && b <= maxB) {
+      while (it.hasNext && rg < cap && b <= SpreadMaxBytes) {
         val p = new org.apache.hadoop.fs.Path(it.next())
         b += p.getFileSystem(conf).getFileStatus(p).getLen
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -104,7 +93,8 @@ object Tables {
     })
     val n = math.min(cap.toLong,
       math.max(2L, bytes / SpreadTargetBytesPerPartition)).toInt
-    if (rowGroups < n && bytes >= minB && bytes <= maxB) df.repartition(n)
+    if (rowGroups < n && bytes >= SpreadMinBytes && bytes <= SpreadMaxBytes)
+      df.repartition(n)
     else df
   }
 

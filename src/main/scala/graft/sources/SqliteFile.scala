@@ -749,11 +749,11 @@ object SqliteFile {
 
   // ----------------------------------------------------- sqlite_master
 
-  /** All rowid TABLES from sqlite_master (root = page 1; columns
-    * type, name, tbl_name, rootpage, sql — fileformat2 §2.6), with
-    * their parsed column definitions. Views/indexes/triggers are
-    * skipped; internal `sqlite_*` tables too (main.py:144 scans
-    * type='table' the same way).
+  /** All TABLES from sqlite_master (root = page 1; columns type,
+    * name, tbl_name, rootpage, sql — fileformat2 §2.6), with their
+    * column definitions as [[SqliteDdl.parseCreateTable]] reads them.
+    * Views/indexes/triggers are skipped; internal `sqlite_*` tables
+    * too (main.py:144 scans type='table' the same way).
     */
   def listTables(path: String): Seq[TableDef] = {
     val h = header(path)
@@ -767,122 +767,13 @@ object SqliteFile {
           (name, root, sql)
       }.filterNot(_._1.startsWith("sqlite_"))
         .map { case (name, root, sql) =>
-          val wr = isWithoutRowid(sql)
-          val cols = parseCreateTable(sql)
-          TableDef(name, root,
-            if (wr) cols.map(_.copy(rowidAlias = false)) else cols,
-            sql, withoutRowid = wr)
+          val t = SqliteDdl.parseCreateTable(sql)
+          val (pk, alias) = (t.pkColumns, t.rowidAlias)
+          TableDef(name, root, t.columns.zipWithIndex.map { case (c, i) =>
+            ColumnDef(c.name, c.decl, pk.indexOf(i) + 1, alias.contains(i))
+          }.toList, sql, t.withoutRowid)
         }.toList
     } finally w.close()
-  }
-
-  // -------------------------------------------------- CREATE TABLE sql
-
-  /** Split s on top-level commas (depth-0 w.r.t. parens, outside any
-    * quoting form SQLite accepts: '', "", [], ``).
-    */
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var i = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) {
-        cur += c
-        if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; cur += c
-        case '[' => quote = ']'; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  private def unquote(t: String): String =
-    if (t.length >= 2 && ((t.head == '"' && t.last == '"') ||
-        (t.head == '\'' && t.last == '\'') ||
-        (t.head == '`' && t.last == '`') ||
-        (t.head == '[' && t.last == ']')))
-      t.substring(1, t.length - 1)
-    else t
-
-  private val ConstraintStart =
-    Set("PRIMARY", "NOT", "NULL", "UNIQUE", "CHECK", "DEFAULT",
-      "COLLATE", "REFERENCES", "GENERATED", "AS")
-  private val TableConstraintStart =
-    Set("PRIMARY", "UNIQUE", "CHECK", "FOREIGN", "CONSTRAINT")
-
-  /** True when the CREATE TABLE statement's trailer (after the column
-    * list's closing paren) declares WITHOUT ROWID — checked there, not
-    * in the whole SQL, so a column named "without rowid" can't trip it.
-    */
-  private[sources] def isWithoutRowid(sql: String): Boolean = {
-    val close = sql.lastIndexOf(')')
-    close >= 0 && sql.substring(close + 1).toUpperCase
-      .replaceAll("\\s+", " ").contains("WITHOUT ROWID")
-  }
-
-  /** Minimal CREATE TABLE parser: column names, declared types, pk
-    * ordinals, the INTEGER-PRIMARY-KEY rowid alias. Covers the SQL
-    * sqlite itself writes into sqlite_master. For WITHOUT ROWID
-    * tables the caller clears rowidAlias (there is no rowid; even an
-    * INTEGER PRIMARY KEY stores its value in the record).
-    */
-  private[sources] def parseCreateTable(sql: String): Seq[ColumnDef] = {
-    val open = sql.indexOf('(')
-    val close = sql.lastIndexOf(')')
-    require(open >= 0 && close > open, s"cannot parse CREATE TABLE: $sql")
-    val body = sql.substring(open + 1, close)
-    val defs = splitTop(body)
-    var cols = scala.collection.mutable.ArrayBuffer.empty[ColumnDef]
-    var tablePk = Seq.empty[String]
-    defs.foreach { d =>
-      val toks = d.split("\\s+").toSeq
-      val first = unquote(toks.head)
-      if (TableConstraintStart(toks.head.toUpperCase)) {
-        val up = d.toUpperCase
-        if (up.startsWith("PRIMARY")) {
-          val o = d.indexOf('('); val c = d.lastIndexOf(')')
-          tablePk = splitTop(d.substring(o + 1, c))
-            .map(x => unquote(x.split("\\s+").head))
-        }
-        // UNIQUE/CHECK/FOREIGN/CONSTRAINT: no effect on the reader
-      } else {
-        val rest = toks.tail
-        val typeToks = rest.takeWhile(t =>
-          !ConstraintStart(t.toUpperCase))
-        val decl = typeToks.mkString(" ")
-        val up = toks.map(_.toUpperCase).mkString(" ")
-        val inlinePk = up.contains("PRIMARY KEY")
-        // The documented quirk (fileformat2 / lang_createtable §rowid,
-        // round-15 fix): column-level `INTEGER PRIMARY KEY DESC` is
-        // NOT a rowid alias — sqlite stores the column for real and
-        // keeps a separate rowid (verified empirically: rowid=1 while
-        // x=100). Only the ASC/unmodified column-level form aliases.
-        // (The TABLE-constraint form `PRIMARY KEY(x DESC)` DOES alias
-        // — the asymmetry is sqlite's, handled below.)
-        val rowidAlias = inlinePk && decl.trim.toUpperCase == "INTEGER" &&
-          !up.contains("PRIMARY KEY DESC")
-        cols += ColumnDef(first, decl,
-          if (inlinePk) 1 else 0, rowidAlias)
-      }
-    }
-    if (tablePk.nonEmpty) {
-      cols = cols.map { c =>
-        val ix = tablePk.indexOf(c.name)
-        if (ix >= 0) c.copy(pkOrdinal = ix + 1,
-          rowidAlias = tablePk.size == 1 &&
-            c.decl.trim.toUpperCase == "INTEGER")
-        else c
-      }
-    }
-    cols.toSeq
   }
 
   // ------------------------------------------------------- Spark layer

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import graft.sources.SqliteFile
+import graft.sources.{SqliteFile, SqliteIndex}
 
 /** One-pointer corruptions that once sent the reader into an endless
   * loop, patched into temp copies of committed fixtures. Each must now
@@ -18,7 +18,9 @@ import graft.sources.SqliteFile
   *  - a chain that ends early, or a payload size larger than the file;
   *  - a root whose rightmost child is the root, under a full scan (the
   *    b-tree walk itself, and so the Spark scan and the migration), and
-  *    one whose leftmost child is the root, under the leaf count.
+  *    one whose leftmost child is the root, under the leaf count;
+  *  - an index root whose rightmost child is the root, under an index
+  *    range probe and the Spark scan's pushed-down probe.
   * Each body runs on a daemon thread and the test gives up after a
   * fixed budget, so a regression fails here rather than hanging the
   * suite.
@@ -186,5 +188,23 @@ class SqliteCorruptionSpec extends SparkFunSuite {
       .foreach(SqliteFile.pagesTouched(huge, _)))
     assert(e2.getMessage.contains(s"page $page: cell payload of 2097151 " +
       "bytes cannot fit"), e2.getMessage)
+  }
+
+  test("an index walk over a root whose rightmost child is itself fails: " +
+      "the range probe and the Spark scan's pushed-down probe") {
+    val ix = SqliteIndex.listIndexes(s"$res/index_fixture.db")
+      .find(_.name == "ix_k").get
+    val root = ix.rootPage
+    val db = corrupted("index_fixture.db") { p =>
+      assert(p.u8(p.hdr(root)) == 0x02, "ix_k's root must be interior")
+      p.put32(p.hdr(root) + 8, root)
+    }
+    val cyclic = s"(?s)page \\d+: index ix_k walk from page $root still reads .*"
+    val probe = failure(SqliteIndex.rangeRowids(db, SqliteFile.header(db), ix,
+      SqliteIndex.KeyRange(Some(90L), loInc = true, None, hiInc = false)))
+    assert(probe.getMessage.matches(cyclic), probe.getMessage)
+    val scan = failure(spark.read.format("sqlite").option("path", db)
+      .option("table", "t").load().filter("k >= 90").count())
+    assert(scan.getMessage.matches(cyclic), scan.getMessage)
   }
 }
