@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.LocalFs
+
 /** Deduplication family for the training-data pipeline (SURVEY.md §2
   * C1-C4). Scale invariant shared by every member: FULL TEXT NEVER
   * SHUFFLES. Signatures (8-byte hashes, 128-long minhash vectors,
@@ -49,7 +51,7 @@ object Dedup {
     val n = new java.util.concurrent.atomic.AtomicLong()
     df => {
       val path = s"$dir/run_$token/mat_${n.getAndIncrement()}"
-      df.write.mode("overwrite").parquet(path)
+      LocalFs.writer(df.write).mode("overwrite").parquet(path)
       df.sparkSession.read.parquet(path)
     }
   }

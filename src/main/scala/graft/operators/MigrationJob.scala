@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, Spark
 import org.apache.spark.sql.functions.{count, lit}
 import graft.sources.{CatalogDiscovery, ChType, PrimaryKeyInference, SchemaMapper}
 import graft.functions.Coercions
-import graft.sinks.ClickHouseDdl
+import graft.sinks.{ClickHouseDdl, LocalFs}
 
 /** Whole-catalog migration pipeline — the reference's main loop
   * (main.py:138-182) re-expressed as one declarative Spark job per
@@ -27,7 +27,12 @@ import graft.sinks.ClickHouseDdl
   *
   * Each table's source is read once: the row count in its report is
   * observed on the write itself, not counted by a second scan. The
-  * catalog loops run their tables concurrently (see [[concurrently]]).
+  * catalog loops run their tables concurrently (see [[concurrently]]),
+  * submitted in catalog order, except that [[migrateSqliteFile]]
+  * submits a file's tables largest first; every loop returns its
+  * reports in catalog order. Parquet staging writes `file:` paths
+  * through [[graft.sinks.LocalFs]], which sets each staged file's and
+  * directory's mode without forking `chmod`.
   */
 object MigrationJob {
 
@@ -61,8 +66,9 @@ object MigrationJob {
                    primaryKey: Option[String] = None,
                    inferPk: Boolean = true,
                    declaredTypes: Map[String, ChType] = Map.empty): TableReport =
-    migrate(df, database, table, primaryKey, inferPk, declaredTypes)(
-      _.option("maxRecordsPerFile", chunkSize).parquet(s"$outDir/$table"))
+    migrate(df, database, table, primaryKey, inferPk, declaredTypes)(w =>
+      LocalFs.writer(w).option("maxRecordsPerFile", chunkSize)
+        .parquet(s"$outDir/$table"))
 
   /** Conform `df`, hand its writer to `write`, and report the rows the
     * write saw (a `count(1)` observation: no second scan of the source)
@@ -174,6 +180,11 @@ object MigrationJob {
     * most `maxPartitions`. With the tables running concurrently, the
     * catalog makes about one task per core, while a large table still
     * splits up to `maxPartitionBytes` a task.
+    *
+    * Tables are submitted largest first (by the same bytes, ties in
+    * catalog order), so the longest reads start at once instead of
+    * queueing behind small ones; the reports still come back in
+    * catalog order.
     */
   def migrateSqliteFile(spark: SparkSession, dbPath: String,
                         database: String, outDir: String,
@@ -188,12 +199,13 @@ object MigrationJob {
     val split = math.max(1L, math.min(conf.filesMaxPartitionBytes,
       math.max(conf.filesOpenCostInBytes,
         bytes.sum / spark.sparkContext.defaultParallelism)))
-    concurrently(spark, tables.zip(bytes)) { case (t, b) =>
+    val largestFirst = tables.zip(bytes).zipWithIndex.sortBy(-_._1._2)
+    concurrently(spark, largestFirst) { case ((t, b), i) =>
       val parts = math.min(maxPartitions, math.max(1L, (b + split - 1) / split))
       val df = SqliteFile.read(spark, dbPath, t, parts.toInt)
-      migrateTable(df, database, t.name.toLowerCase, outDir, chunkSize,
+      i -> migrateTable(df, database, t.name.toLowerCase, outDir, chunkSize,
         orderByOf(t.primaryKey), declaredTypes = SqliteFile.temporalTypes(t))
-    }
+    }.sortBy(_._1).map(_._2)
   }
 
   /** The reference's ACTUAL loop, end-to-end over a live JDBC source

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.LocalFs
+
 /** Training-corpus export (SURVEY.md §2 C27) — the last mile of the
   * pipeline: write the cleaned/mixed corpus as N deterministic shards
   * with a verifiable manifest, so a training job (or a later session)
@@ -65,11 +67,12 @@ object TrainExport {
     val withShard = docs
       .withColumn("shard", shardAssign(col(idCol), nShards, seed))
       .withColumn("_ord", xxhash64(col(idCol), lit(seed)))
-    withShard
+    val sorted = withShard
       .repartition(nShards, col("shard"))
       .sortWithinPartitions("shard", "_ord")
       .drop("_ord")
-      .write.mode("overwrite").partitionBy("shard").parquet(dir)
+    LocalFs.writer(sorted.write).mode("overwrite").partitionBy("shard")
+      .parquet(dir)
     // The stored manifest describes the bytes actually written, not a
     // second scan of `docs`: if the input is not perfectly
     // deterministic across actions (re-read mutated source, unstable
@@ -78,7 +81,8 @@ object TrainExport {
     // stored == verify-recomputed true by construction.
     val spark = docs.sparkSession
     val m = recompute(spark.read.parquet(dir), idCol, tokenCol, seed)
-    m.coalesce(1).write.mode("overwrite").parquet(s"$dir/_manifest")
+    LocalFs.writer(m.coalesce(1).write).mode("overwrite")
+      .parquet(s"$dir/_manifest")
     spark.read.parquet(s"$dir/_manifest")
   }
 

@@ -22,7 +22,7 @@ object PartitionedLake {
     */
   def write(df: DataFrame, path: String, cols: Seq[String],
             maxRecordsPerFile: Long = 1000000L): Unit =
-    df.write
+    LocalFs.writer(df.write)
       .mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(cols: _*)
@@ -60,7 +60,7 @@ object PartitionedLake {
     val merged = graft.operators.ReplacingMerge.optimize(
       spark.read.parquet(partDir), keys, version.map(col), numPartitions)
     val tmpDir = s"$path/.optimize_tmp_$partCol=$partValue"
-    merged.write.mode("overwrite")
+    LocalFs.writer(merged.write).mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(tmpDir)
     swapInPlace(spark, path, partDir, tmpDir)
@@ -112,7 +112,7 @@ object PartitionedLake {
       val withPart = spark.read.parquet(partDir).withColumn(partCol, lit(p))
       val mutated = mutate(withPart).drop(partCol)
       val tmpDir = s"$path/.mutate_tmp_$partCol=$p"
-      mutated.write.mode("overwrite")
+      LocalFs.writer(mutated.write).mode("overwrite")
         .option("maxRecordsPerFile", maxRecordsPerFile)
         .parquet(tmpDir)
       swapInPlace(spark, path, partDir, tmpDir)

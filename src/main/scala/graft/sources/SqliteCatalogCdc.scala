@@ -56,11 +56,14 @@ object SqliteCatalogCdc {
     StructField("json", StringType, nullable = false)))
 
   /** The tables a spec selects right now: every rowid table for "*",
-    * else the named list (refusing WITHOUT ROWID / missing names).
+    * else the named list (refusing WITHOUT ROWID / missing names). A
+    * selected table with a generated column is refused by name
+    * ([[SqliteFile.TableDef.readable]]).
     */
   def select(path: String, spec: String): Seq[SqliteFile.TableDef] = {
     val all = SqliteFile.listTables(path)
-    if (spec.trim == "*") all.filterNot(_.withoutRowid).sortBy(_.name)
+    if (spec.trim == "*")
+      all.filterNot(_.withoutRowid).map(_.readable).sortBy(_.name)
     else spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { n =>
       val t = all.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(
@@ -68,7 +71,7 @@ object SqliteCatalogCdc {
       require(!t.withoutRowid,
         s"$n is WITHOUT ROWID - rowid-watermark CDC needs a rowid " +
           "table; select it out of the list")
-      t
+      t.readable
     }.sortBy(_.name)
   }
 
@@ -282,7 +285,7 @@ private[sources] final class SqliteCatalogCdcStream(path: String,
       else {
         val t = live.getOrElse(name, throw new IllegalStateException(
           s"$name: present in the end offset but not the catalog"))
-        val roots = SqliteFile.subtreeRanges(path, t)
+        val roots = SqliteFile.subtreeRanges(path, h, t)
           .filter { case (_, rLo, rHi) => rHi > loMark && rLo < hiMark }
           .map(_._1)
         SqliteFile.groupSubtrees(roots, maxPartitions)

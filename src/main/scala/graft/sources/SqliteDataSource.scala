@@ -66,7 +66,7 @@ final class SqliteDataSource extends TableProvider
       throw new IllegalArgumentException(
         s"table '$table' not found in $path (have: " +
           s"${tables.map(_.name).mkString(", ")})"))
-    (path, t)
+    (path, t.readable)
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -677,7 +677,7 @@ private[sources] final class SqliteScan(path: String,
       case Some(RowidEq(r)) =>
         // one task, roots pruned to the subtrees whose rowid interval
         // can contain r; the walk itself descends only the spine
-        val roots = SqliteFile.subtreeRanges(path, tdef)
+        val roots = SqliteFile.subtreeRanges(path, h, tdef)
           .filter { case (_, lo, hi) => hi > r - 1 && lo <= r }
           .map(_._1)
         if (roots.isEmpty) Array.empty
@@ -685,7 +685,7 @@ private[sources] final class SqliteScan(path: String,
       case Some(RowidRange(minEx, maxInc)) =>
         // prune to overlapping subtrees, then KEEP the full-scan
         // parallelism: a wide range is a partial scan, not a point read
-        val roots = SqliteFile.subtreeRanges(path, tdef)
+        val roots = SqliteFile.subtreeRanges(path, h, tdef)
           .filter { case (_, lo, hi) => hi > minEx && lo <= maxInc }
           .map(_._1)
         if (roots.isEmpty) Array.empty
@@ -706,7 +706,7 @@ private[sources] final class SqliteScan(path: String,
         Array(SqliteIndexProbePartition(idx, r, tdef.rootPage, h))
       case Some(RowidIn(rs)) =>
         // prune to rowids any subtree can hold, one task (point walks)
-        val ranges = SqliteFile.subtreeRanges(path, tdef)
+        val ranges = SqliteFile.subtreeRanges(path, h, tdef)
         val live = rs.filter(r =>
           ranges.exists { case (_, lo, hi) => hi > r - 1 && lo <= r })
         if (live.isEmpty) Array.empty
@@ -716,7 +716,7 @@ private[sources] final class SqliteScan(path: String,
       case Some(IndexCompositeRange(idx, eq, r)) =>
         Array(SqliteIndexProbePartition(idx, r, tdef.rootPage, h, eq))
       case None =>
-        SqliteFile.groupSubtrees(SqliteFile.subtreeRoots(path, tdef),
+        SqliteFile.groupSubtrees(SqliteFile.subtreeRoots(path, h, tdef),
           maxPartitions).map(SqliteSubtrees(_, h)).toArray
     }
   }
@@ -811,7 +811,7 @@ private[sources] final class SqliteCdcStream(path: String,
     // snapshot the header ONCE per batch: all tasks see the same
     // committed WAL/journal overlay even if the writer keeps going
     val h = SqliteFile.header(path)
-    val roots = SqliteFile.subtreeRanges(path, tdef)
+    val roots = SqliteFile.subtreeRanges(path, h, tdef)
       .filter { case (_, rLo, rHi) => rHi > lo && rLo < hi }
       .map(_._1)
     SqliteFile.groupSubtrees(roots, maxPartitions)

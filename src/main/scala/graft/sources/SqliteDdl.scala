@@ -39,6 +39,8 @@ package graft.sources
   *    still aliases — the asymmetry is sqlite's.
   *  - A WITHOUT ROWID table is one whose text after the column list
   *    holds the words WITHOUT ROWID; it has no rowid alias.
+  *  - A column with an `AS (expr)` clause is generated: STORED when
+  *    the word STORED follows the expression, VIRTUAL otherwise.
   */
 object SqliteDdl {
 
@@ -56,10 +58,12 @@ object SqliteDdl {
     */
   type Collation = Either[String, Boolean]
 
-  /** A column definition: declared name and type, and its collation
-    * (BINARY unless a COLLATE clause says otherwise).
+  /** A column definition: declared name and type, its collation
+    * (BINARY unless a COLLATE clause says otherwise), and for a
+    * generated column its kind, VIRTUAL or STORED.
     */
-  final case class Column(name: String, decl: String, collation: Collation)
+  final case class Column(name: String, decl: String, collation: Collation,
+                          generated: Option[String] = None)
 
   /** One keyspec term: the column as written, DESC, and a COLLATE that
     * overrides the column's own.
@@ -287,6 +291,7 @@ object SqliteDdl {
             unquote(typeToks.head.text)
           else text(sql, typeToks)
         var coll: Collation = Right(false)
+        var generated = Option.empty[String]
         while (i < item.size) {
           item(i).word match {
             case "PRIMARY" => // PRIMARY KEY [ASC|DESC]
@@ -302,12 +307,14 @@ object SqliteDdl {
                 case nocase => nocase
               }
               i += 1
+            case "AS" => generated = Some("VIRTUAL")
+            case "STORED" if generated.isDefined => generated = Some("STORED")
             case "(" => i = closing(item, i)
             case _ =>
           }
           i += 1
         }
-        columns += Column(name, decl, coll)
+        columns += Column(name, decl, coll, generated)
       }
     }
     val trailer = toks.drop(close + 1).map(_.word)

@@ -96,11 +96,27 @@ object SqliteFile {
     def chType: ChType = SchemaMapper.fromSqliteDecl(decl)
   }
 
+  /** A table's stored columns, as `PRAGMA table_info` lists them, and
+    * its generated columns (name, VIRTUAL or STORED), which it leaves
+    * out.
+    */
   final case class TableDef(name: String, rootPage: Int,
                             columns: Seq[ColumnDef], sql: String,
-                            withoutRowid: Boolean = false) {
+                            withoutRowid: Boolean = false,
+                            generated: Seq[(String, String)] = Nil) {
     def primaryKey: Seq[String] =
       columns.filter(_.pkOrdinal > 0).sortBy(_.pkOrdinal).map(_.name)
+
+    /** This table, or a [[GeneratedColumnException]] naming its first
+      * generated column: a VIRTUAL one is absent from the record and a
+      * STORED one shifts the columns after it, and this reader
+      * evaluates no column expressions.
+      */
+    def readable: TableDef = generated.headOption match {
+      case Some((column, kind)) =>
+        throw new GeneratedColumnException(name, column, kind)
+      case None => this
+    }
 
     /** Record-position of each DECLARED column. Rowid tables store
       * records in declared order (identity); WITHOUT ROWID records
@@ -120,6 +136,13 @@ object SqliteFile {
         }.toIndexedSeq
       }
   }
+
+  /** A read of a table with a generated column, refused by name. */
+  final class GeneratedColumnException(val table: String, val column: String,
+                                       val kind: String)
+      extends UnsupportedOperationException(
+        s"$table.$column is a $kind generated column - this reader " +
+          "cannot compute it; read the table through sqlite itself")
 
   // ------------------------------------------------------------ header
 
@@ -546,10 +569,10 @@ object SqliteFile {
     * partitions walk independently. A leaf root is its own subtree.
     * An INDEX interior root (WITHOUT ROWID) also contributes one
     * cells-only slice (encoded as -rootPage) for its OWN records,
-    * which index interiors carry alongside the child pointers.
+    * which index interiors carry alongside the child pointers. Read
+    * against the caller's header `h`, the snapshot its tasks read.
     */
-  def subtreeRoots(path: String, table: TableDef): Seq[Int] = {
-    val h = header(path)
+  def subtreeRoots(path: String, h: Header, table: TableDef): Seq[Int] = {
     val pf = new PageFile(path, h)
     try {
       val n = table.rootPage
@@ -695,12 +718,13 @@ object SqliteFile {
     * incremental scan PLAN-prune whole subtrees before any task runs
     * (only intervals overlapping (watermark, latest] become input
     * partitions). Refuses WITHOUT ROWID tables like [[maxRowid]].
+    * Read against the caller's header `h`, the snapshot its tasks read.
     */
-  def subtreeRanges(path: String, table: TableDef): Seq[(Int, Long, Long)] = {
+  def subtreeRanges(path: String, h: Header,
+                    table: TableDef): Seq[(Int, Long, Long)] = {
     require(!table.withoutRowid,
       s"${table.name} is WITHOUT ROWID - rowid subtree intervals do " +
         "not exist; incremental reads need a rowid table")
-    val h = header(path)
     val pf = new PageFile(path, h)
     try {
       val n = table.rootPage
@@ -769,9 +793,12 @@ object SqliteFile {
         .map { case (name, root, sql) =>
           val t = SqliteDdl.parseCreateTable(sql)
           val (pk, alias) = (t.pkColumns, t.rowidAlias)
-          TableDef(name, root, t.columns.zipWithIndex.map { case (c, i) =>
+          val (generated, stored) =
+            t.columns.zipWithIndex.partition(_._1.generated.isDefined)
+          TableDef(name, root, stored.map { case (c, i) =>
             ColumnDef(c.name, c.decl, pk.indexOf(i) + 1, alias.contains(i))
-          }.toList, sql, t.withoutRowid)
+          }.toList, sql, t.withoutRowid,
+            generated.map { case (c, _) => c.name -> c.generated.get })
         }.toList
     } finally w.close()
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TrainExport
+import graft.sinks.LocalFs
 
 /** Streaming training-corpus export: deliver each micro-batch into its
   * OWN subtree of the sharded layout (`dir/batch=<id>/shard=<s>`) with
@@ -43,18 +44,18 @@ object ExportStream {
                    tokenCol: String, dir: String, nShards: Int,
                    seed: Long = 42L): Unit = {
     val spark = batch.sparkSession
-    batch
+    val sorted = batch
       .withColumn("shard",
         TrainExport.shardAssign(col(idCol), nShards, seed))
       .withColumn("_ord", xxhash64(col(idCol), lit(seed)))
       .repartition(nShards, col("shard"))
       .sortWithinPartitions("shard", "_ord")
       .drop("_ord")
-      .write.mode("overwrite").partitionBy("shard")
+    LocalFs.writer(sorted.write).mode("overwrite").partitionBy("shard")
       .parquet(s"$dir/batch=$batchId")
-    TrainExport.recompute(
-        spark.read.parquet(s"$dir/batch=$batchId"), idCol, tokenCol, seed)
-      .coalesce(1).write.mode("overwrite")
+    val manifest = TrainExport.recompute(
+      spark.read.parquet(s"$dir/batch=$batchId"), idCol, tokenCol, seed)
+    LocalFs.writer(manifest.coalesce(1).write).mode("overwrite")
       .parquet(s"$dir/_manifest/batch=$batchId")
   }
 

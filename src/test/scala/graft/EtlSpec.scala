@@ -287,6 +287,34 @@ class MigrationJobSpec extends SparkFunSuite {
     }
   }
 
+  test("largest table listed last: reports in catalog order, rows and " +
+      "modes as stock Hadoop stages them") {
+    val lpt = "src/test/resources/sqlite/lpt_fixture.db"
+    withTempDir("graft-mig-lpt") { root =>
+      val tables = SqliteFile.listTables(lpt)
+      val h = SqliteFile.header(lpt)
+      val leaves = tables.map(t => SqliteFile.leafPages(lpt, h, t.rootPage))
+      assert(leaves.last > leaves.init.max, leaves)
+      val reports = MigrationJob.migrateSqliteFile(spark, lpt, "db", s"$root/graft")
+      assert(reports.map(_.table) == Seq("one_a", "one_b", "one_c", "big"))
+      assert(reports.map(_.rows) == Seq(3L, 3L, 3L, 4000L))
+      tables.zip(reports).foreach { case (t, r) =>
+        val staged = spark.read.parquet(s"$root/graft/${r.table}")
+        assert(staged.count() == r.rows, t.name)
+        // the same rows written by a stock writer: same names and modes
+        staged.write.parquet(s"$root/stock/${r.table}")
+      }
+      assert(reports.last.ddl.endsWith("ORDER BY id"), reports.last.ddl)
+      val big = spark.read.parquet(s"$root/graft/big")
+        .selectExpr("sum(id)", "count(d)", "min(d)").head
+      // tools/make_lpt_fixture.py: sum(id) over 1..4000, every date parsed
+      assert(big.getLong(0) == 8002000L && big.getLong(1) == 4000L &&
+        big.getDate(2).toString == "2024-01-01", big)
+      assert(LocalFsSpec.modes(s"$root/graft") == LocalFsSpec.modes(s"$root/stock"))
+      assert(poolThreadsAlive().isEmpty)
+    }
+  }
+
   private def partFiles(dir: String): Int =
     new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
 

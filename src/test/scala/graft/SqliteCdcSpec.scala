@@ -59,7 +59,8 @@ class SqliteCdcSpec extends SparkFunSuite {
   }
 
   test("subtreeRanges tile the rowid axis in order") {
-    val r = SqliteFile.subtreeRanges(v(3), events(v(3)))
+    val r = SqliteFile.subtreeRanges(v(3), SqliteFile.header(v(3)),
+      events(v(3)))
     assert(r.size > 1, "multi-level tree expected at page_size=512")
     assert(r.head._2 == Long.MinValue && r.last._3 == Long.MaxValue)
     r.sliding(2).foreach { case Seq((_, _, hi), (_, lo, _)) =>
@@ -101,7 +102,7 @@ class SqliteCdcSpec extends SparkFunSuite {
     }
     assert(e1.getMessage.contains("WITHOUT ROWID"))
     val e2 = intercept[IllegalArgumentException] {
-      SqliteFile.subtreeRanges(fix, wr)
+      SqliteFile.subtreeRanges(fix, SqliteFile.header(fix), wr)
     }
     assert(e2.getMessage.contains("WITHOUT ROWID"))
   }
@@ -172,6 +173,28 @@ class SqliteCdcSpec extends SparkFunSuite {
       assert(t.select(countDistinct("id")).head.getLong(0) === 420L)
       assert(t.select(max("id")).head.getLong(0) === 420L)
     } finally q.stop()
+  }
+
+  test("subtree roots come from the caller's header snapshot " +
+      "when a WAL commit lands after it") {
+    val dir = Files.createTempDirectory("graft-cdc-snap")
+    val db = dir.resolve("live.db").toString
+    try {
+      atomicSwap(s"$res/cdc_wal_v1.db", db)
+      atomicSwap(s"$res/cdc_wal_v1.db-wal", db + "-wal")
+      val t = events(db)
+      val h1 = SqliteFile.header(db)
+      def ranges(path: String) =
+        SqliteFile.subtreeRanges(path, SqliteFile.header(path), t)
+      val v1 = ranges(s"$res/cdc_wal_v1.db")
+      val v2 = ranges(s"$res/cdc_wal_v2.db")
+      assert(v1 != v2, "fixture contract: the v2 commit changes the root")
+      // the writer commits between the caller's parse and the planning
+      atomicSwap(s"$res/cdc_wal_v2.db-wal", db + "-wal")
+      assert(SqliteFile.subtreeRanges(db, h1, t) == v1)
+      assert(SqliteFile.subtreeRoots(db, h1, t) == v1.map(_._1))
+      assert(ranges(db) == v2)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("refusal: a shrunk table (watermark regression) fails the stream " +

@@ -125,6 +125,38 @@ class SqliteDdlSpec extends SparkFunSuite {
     }
   }
 
+  test("a generated column is refused by name, VIRTUAL or STORED; " +
+      "the file's other tables still read") {
+    val gen = s"$res/generated_fixture.db"
+    def ddl(sql: String) = SqliteDdl.parseCreateTable(sql).columns
+      .map(c => c.name -> c.generated)
+    assert(ddl("CREATE TABLE g(a INTEGER, b TEXT GENERATED ALWAYS AS " +
+      "(a || 'x') VIRTUAL, c TEXT, d AS (a * 2), e INT AS (a) STORED, " +
+      "f DEFAULT 1)") == Seq("a" -> None, "b" -> Some("VIRTUAL"),
+      "c" -> None, "d" -> Some("VIRTUAL"), "e" -> Some("STORED"), "f" -> None))
+    // listTables lists the stored columns, as PRAGMA table_info does
+    assert(table(gen, "g_virtual").generated == Seq("b" -> "VIRTUAL"))
+    assert(table(gen, "g_stored").generated == Seq("b" -> "STORED"))
+    Seq("g_virtual" -> "VIRTUAL", "g_stored" -> "STORED").foreach {
+      case (t, kind) =>
+        val e = intercept[SqliteFile.GeneratedColumnException] {
+          SqliteFile.read(spark, gen, t).collect()
+        }
+        assert(e.table == t && e.column == "b" && e.kind == kind)
+        assert(e.getMessage.contains(s"$t.b is a $kind generated column"))
+    }
+    assert(SqliteFile.read(spark, gen, "plain").collect().sortBy(_.getLong(0))
+      .toSeq == Seq(Row(1L, "c1"), Row(2L, "c2"), Row(3L, "c3")))
+    intercept[SqliteFile.GeneratedColumnException] {
+      graft.sources.SqliteCatalogCdc.select(gen, "*")
+    }
+    val out = Files.createTempDirectory("graft-ddl-gen").toString
+    try intercept[SqliteFile.GeneratedColumnException] {
+      MigrationJob.migrateSqliteFile(spark, gen, "db", out)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(out))
+  }
+
   test("rowid alias and key numbering follow sqlite's rules") {
     def ddl(sql: String) = SqliteDdl.parseCreateTable(sql)
     // column-level INTEGER PRIMARY KEY DESC stores a real column ...

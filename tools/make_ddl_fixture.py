@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Generate src/test/resources/sqlite/ddl_fixture.db and
+"""Generate src/test/resources/sqlite/ddl_fixture.db,
+src/test/resources/sqlite/generated_fixture.db and
 src/test/resources/sqlite/table_info.tsv — sqlite's own reading of
 CREATE TABLE text, the ground truth SqliteDdlSpec pins the reader's one
 DDL parser (graft.sources.SqliteDdl) against.
@@ -22,6 +23,15 @@ table-SQL scanner misreads, 3 rows each:
   dup_uq     : UNIQUE(a) repeating a's column-level UNIQUE — sqlite makes
                no index for it, so sqlite_autoindex_dup_uq_2 is UNIQUE(b).
 
+generated_fixture.db holds generated columns, which the reader refuses by
+name (3 rows each, b computed from a):
+  g_virtual : b TEXT GENERATED ALWAYS AS (a || 'x') VIRTUAL between a
+              and c — b is absent from the record;
+  g_stored  : b TEXT AS (a || 'y') STORED — b is in the record;
+  plain     : no generated column, read as usual.
+PRAGMA table_info leaves b out of both (table_xinfo marks it hidden 2
+for VIRTUAL, 3 for STORED).
+
 table_info.tsv lists sqlite's PRAGMA table_info (file, table, column,
 type, pk) for every table of every committed *.db fixture. Each fixture
 is opened through a temp copy (with its -wal / -journal sibling): sqlite
@@ -33,9 +43,6 @@ Run from the repo root: python3 tools/make_ddl_fixture.py
 import glob, os, shutil, sqlite3, tempfile
 
 RES = "src/test/resources/sqlite"
-out = os.path.join(RES, "ddl_fixture.db")
-if os.path.exists(out):
-    os.remove(out)
 
 TABLES = [
     ("alias_case", 'CREATE TABLE alias_case("A" INTEGER, b TEXT, PRIMARY KEY(a))',
@@ -63,21 +70,44 @@ TABLES = [
      [(1, "x1", "x3"), (2, "x2", "x2"), (3, "x3", "x1")]),
 ]
 
-db = sqlite3.connect(out)
-for name, ddl, rows in TABLES:
-    db.execute(ddl)
-    db.executemany(f"INSERT INTO {name} VALUES "
-                   f"({','.join('?' * len(rows[0]))})", rows)
-db.commit()
-for name, _, _ in TABLES:
-    print(name, "table_info:", [(r[1], r[2], r[5]) for r in
-                                db.execute(f"PRAGMA table_info({name})")])
-    print(name, "rows:", db.execute(f"SELECT * FROM {name}").fetchall())
-    for r in db.execute(f"PRAGMA index_list({name})"):
-        print(name, r[1], [(x[2], x[3], x[4]) for x in db.execute(
-            f"PRAGMA index_xinfo('{r[1]}')") if x[1] >= 0])
-db.close()
-print("wrote", out, os.path.getsize(out), "bytes")
+GENERATED = [
+    ("g_virtual", "CREATE TABLE g_virtual(a INTEGER, "
+                  "b TEXT GENERATED ALWAYS AS (a || 'x') VIRTUAL, c TEXT)",
+     "a, c", [(1, "c1"), (2, "c2"), (3, "c3")]),
+    ("g_stored", "CREATE TABLE g_stored(a INTEGER, b TEXT AS (a || 'y') STORED, "
+                 "c TEXT)",
+     "a, c", [(1, "c1"), (2, "c2"), (3, "c3")]),
+    ("plain", "CREATE TABLE plain(a INTEGER, c TEXT)",
+     "a, c", [(1, "c1"), (2, "c2"), (3, "c3")]),
+]
+
+
+def write(path, tables):
+    """Create `path` holding `tables`: (name, ddl, the columns the rows
+    fill or None for all, rows)."""
+    if os.path.exists(path):
+        os.remove(path)
+    db = sqlite3.connect(path)
+    for name, ddl, cols, rows in tables:
+        db.execute(ddl)
+        target = name if cols is None else f"{name}({cols})"
+        db.executemany(f"INSERT INTO {target} VALUES "
+                       f"({','.join('?' * len(rows[0]))})", rows)
+    db.commit()
+    for name, *_ in tables:
+        print(name, "table_xinfo:", [(r[1], r[2], r[5], r[6]) for r in
+                                     db.execute(f"PRAGMA table_xinfo({name})")])
+        print(name, "rows:", db.execute(f"SELECT * FROM {name}").fetchall())
+        for r in db.execute(f"PRAGMA index_list({name})"):
+            print(name, r[1], [(x[2], x[3], x[4]) for x in db.execute(
+                f"PRAGMA index_xinfo('{r[1]}')") if x[1] >= 0])
+    db.close()
+    print("wrote", path, os.path.getsize(path), "bytes")
+
+
+write(os.path.join(RES, "ddl_fixture.db"),
+      [(n, ddl, None, rows) for n, ddl, rows in TABLES])
+write(os.path.join(RES, "generated_fixture.db"), GENERATED)
 
 
 def table_info(path):
