@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -8,7 +9,8 @@ import scala.jdk.CollectionConverters._
 /** Dev profiler (round 17): run one gate warm and report, for the
   * final timed invocation, every Spark job it fired (wall-clock) plus
   * the summed executor task time — separating fixed driver/scheduling
-  * overhead (wall >> task time) from real compute (wall ≈ task/cores).
+  * overhead (wall >> task time) from real compute (wall ≈ task/cores),
+  * and how many generated classes it compiled (`codegen_compiles`).
   * The report is one JSON object.
   *
   * Run: `runMain graft.JobProfile <sfDir> <name> [warmRuns]`.
@@ -51,6 +53,11 @@ object JobProfile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    // generated classes compiled in the timed run: Spark's codegen
+    // cache holds 100 classes, so a warm run that still compiles has
+    // had its classes evicted by other queries
+    val compilations = CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiledBefore = compilations.getCount
     val wall =
       try {
         val t0 = System.nanoTime()
@@ -65,6 +72,7 @@ object JobProfile {
         }
         sec
       } finally spark.sparkContext.removeSparkListener(listener)
+    val compiled = compilations.getCount - compiledBefore
 
     val jobs = jobWall.asScala.toSeq.sortBy(_._1).map { case (id, ms) =>
       s"""{"job":$id,"wall_s":${fmt(ms / 1e3)}}"""
@@ -76,7 +84,7 @@ object JobProfile {
           s""""shuffle_write_mb":${fmt(sw / 1e6)}}"""
     }
     s"""{"query":"$name","wall_s":${fmt(wall)},"tasks":${taskCount.get()},""" +
-      s""""task_s_sum":${fmt(taskTime.get() / 1e3)},""" +
+      s""""task_s_sum":${fmt(taskTime.get() / 1e3)},"codegen_compiles":$compiled,""" +
       s""""jobs":${jobs.mkString("[", ",", "]")},""" +
       s""""stages":${stages.mkString("[", ",", "]")}}"""
   }

@@ -1,6 +1,13 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.types.StructType
 
 /** Loader for the driver-generated test tables (TESTDATA.md).
   *
@@ -12,6 +19,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sets) and `ts_ns` (int64 nanos) — so every downstream query and
   * oracle compares on exact integers, never on raw sub-second
   * timestamps.
+  *
+  * Schema cache. `spark.read.parquet` infers the schema in a one-task
+  * job on every call; [[apply]] pays that once per file version per
+  * JVM. One JVM-wide entry per table path holds the schema Spark itself
+  * inferred (`spark.read.parquet(path).schema`, so its nanos, NTZ and
+  * field-metadata rules are Spark's own), and [[apply]] reads with
+  * `spark.read.schema(cached).parquet(path)`: the same relation, no job.
+  * The entry is keyed by
+  *  - the path, length and modification time of every file Spark lists
+  *    under the path (`InMemoryFileIndex`, the listing a read makes), and
+  *  - every `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` conf
+  *    set on the session, `nanosAsLong` included.
+  * Each [[apply]] lists the path again and re-infers when either part
+  * differs from the entry's, so an added, removed or rewritten file or a
+  * flipped conf is seen on the next read. A rewrite is seen only when
+  * it changes the file's length or its modification time at the
+  * filesystem's granularity: milliseconds on a local disk and HDFS, one
+  * second on S3-style object stores. A rewrite of the same length inside
+  * one tick reads with the earlier schema. The same entry caches
+  * [[spread]]'s footer layout, so a rewritten file gets a fresh spread
+  * decision too.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -35,10 +63,10 @@ object Tables {
     * (dedup_exact 0.67 → 0.82 s), so each call site is an explicit,
     * measured decision. Scale-adaptive by construction: the decision
     * derives from the source files' own footers (row-group count +
-    * byte size, bounded driver-side metadata reads cached per path),
-    * so a production table — many files, many row groups — passes
-    * through untouched and no exchange is added. The partition count
-    * derives from bytes/64 KB clamped to [2, defaultParallelism],
+    * byte size, bounded driver-side metadata reads cached per file
+    * version), so a production table — many files, many row groups —
+    * passes through untouched and no exchange is added. The partition
+    * count derives from bytes/64 KB clamped to [2, defaultParallelism],
     * never a hard-coded cluster constant. Filters and column pruning
     * still reach the scan (Catalyst pushes both through Repartition;
     * plan receipts in plans/r17). Round-robin placement is
@@ -50,15 +78,14 @@ object Tables {
   private val SpreadMaxBytes = 256L << 20
   private val SpreadTargetBytesPerPartition = 64L << 10
 
-  /** (row groups, bytes) summed over files — footer metadata, cached. */
-  private val layoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Long)]
-
   /** Repartition `df` for parallel downstream expression work iff its
     * source files are under-split (fewer row groups than the session's
     * parallelism) and between 16 KiB and 256 MiB, small enough that
     * the exchange is trivially cheap. Identity otherwise — including
-    * on every realistically sized production table.
+    * on every realistically sized production table. A `df` over one
+    * table read through [[apply]] takes its (row groups, bytes) from
+    * that table's [[Meta]] entry; any other `df` scans its footers on
+    * every call.
     */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -66,36 +93,83 @@ object Tables {
     if (files.isEmpty) return df
     val cap = spark.sparkContext.defaultParallelism
     if (cap <= 1) return df
-    // bounded cache key (hash of the file list, not the multi-MB list
-    // itself) INCLUDING the cap, so a partial early-exited scan is only
-    // ever reused under the parallelism it was valid for (ADVICE r17)
-    val key = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      files.sorted.foreach(f => md.update(f.getBytes("UTF-8")))
-      java.util.Base64.getEncoder.encodeToString(md.digest()) + s":$cap"
-    }
-    val (rowGroups, bytes) = layoutCache.getOrElseUpdate(key, {
-      val conf = spark.sessionState.newHadoopConf()
-      // early exit (ADVICE r17): once rg >= cap or b > SpreadMaxBytes the
-      // decision is identity whatever the remaining files hold, so a
-      // many-file production table costs O(few) footer reads, not
-      // O(#files)
-      var rg = 0; var b = 0L
-      val it = files.iterator
-      while (it.hasNext && rg < cap && b <= SpreadMaxBytes) {
-        val p = new org.apache.hadoop.fs.Path(it.next())
-        b += p.getFileSystem(conf).getFileStatus(p).getLen
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try rg += reader.getRowGroups.size finally reader.close()
+    val (rowGroups, bytes) = {
+      val names = files.toSet
+      meta.values.find(_.names == names) match {
+        // per cap: a partial early-exited scan is only valid under the
+        // parallelism it was made for (ADVICE r17)
+        case Some(m) =>
+          m.layout.getOrElseUpdate(cap, footerScan(spark, m.files.iterator, cap))
+        case None =>
+          val conf = spark.sessionState.newHadoopConf()
+          footerScan(spark, files.iterator.map { f =>
+            val p = new Path(f)
+            p.getFileSystem(conf).getFileStatus(p)
+          }, cap)
       }
-      (rg, b)
-    })
+    }
     val n = math.min(cap.toLong,
       math.max(2L, bytes / SpreadTargetBytesPerPartition)).toInt
     if (rowGroups < n && bytes >= SpreadMinBytes && bytes <= SpreadMaxBytes)
       df.repartition(n)
     else df
+  }
+
+  /** (row groups, bytes) summed over `files`' footers. Early exit (ADVICE
+    * r17): once rg >= cap or b > SpreadMaxBytes the decision is identity
+    * whatever the remaining files hold, so a many-file production table
+    * costs O(few) footer reads, not O(#files).
+    */
+  private def footerScan(spark: SparkSession, files: Iterator[FileStatus],
+                         cap: Int): (Int, Long) = {
+    val conf = spark.sessionState.newHadoopConf()
+    var rg = 0; var b = 0L
+    while (files.hasNext && rg < cap && b <= SpreadMaxBytes) {
+      val f = files.next()
+      b += f.getLen
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+      try rg += reader.getRowGroups.size finally reader.close()
+    }
+    (rg, b)
+  }
+
+  /** A table path's file version: (path, length, modification time) of
+    * each listed file, and the session's parquet-reading confs.
+    */
+  private final case class Version(files: Seq[(String, Long, Long)],
+                                   confs: Seq[(String, String)])
+
+  /** What [[apply]] knows of one table path: the version it was read
+    * at, the schema Spark inferred then, and [[spread]]'s footer layout
+    * per parallelism cap.
+    */
+  private final class Meta(val version: Version, val files: Seq[FileStatus],
+                           val schema: StructType) {
+    val names: Set[String] = files.map(_.getPath.toUri.toString).toSet
+    val layout = TrieMap.empty[Int, (Int, Long)]
+  }
+
+  /** One entry per table path, JVM-wide. */
+  private val meta = TrieMap.empty[String, Meta]
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The [[Meta]] entry of `path` under `spark`'s confs, inferring the
+    * schema when the path's version changed since the last read.
+    */
+  private def metaOf(spark: SparkSession, path: String): Meta = {
+    val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val version = Version(
+      files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)),
+      spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted)
+    meta.get(path).filter(_.version == version).getOrElse {
+      val m = new Meta(version, files, spark.read.parquet(path).schema)
+      meta.put(path, m)
+      m
+    }
   }
 
   /** Conf key for [[barrier]]: `checkpoint` (default) | `persist` |
@@ -133,8 +207,9 @@ object Tables {
     }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+    if (!spark.sessionState.conf.contains(NanosAsLong)) spark.conf.set(NanosAsLong, "true")
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(metaOf(spark, path).schema).parquet(path)
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")

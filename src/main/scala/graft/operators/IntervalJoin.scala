@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Bucketized interval join (round 13) — `points.t BETWEEN
@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * refuses when the worst interval would explode past
   * `maxBucketsPerInterval` (a degenerate open-ended interval must not
   * silently materialize millions of rows — coarsen W or split the
-  * interval upstream; the check costs one aggregate over the
-  * INTERVALS relation, which is dimension-sized by assumption).
+  * interval upstream; the check is an observed aggregate on the pass
+  * that checkpoints the INTERVALS relation, no job of its own).
   *
   * Skew note (100 TB): bucket hot spots come from point-time
   * clustering; the equi-join key is the bucket id, so the standard
@@ -46,17 +46,19 @@ object IntervalJoin {
     // is consumed TWICE (the worst-interval guard below, then the
     // broadcast build) — without a barrier its whole upstream plan
     // (often an aggregate over the fact table) executes twice. The
-    // eager checkpoint materializes the bounded rows once (round 18).
+    // eager checkpoint materializes the bounded rows once (round 18),
+    // and the guard's worst span is observed on that same pass.
+    val observed = Observation()
     val iv = intervals.withColumn("__lo", lo.cast("long"))
       .withColumn("__hi", hi.cast("long"))
       .where(col("__lo") <= col("__hi"))
+      .observe(observed,
+        max(expr(s"(__hi div $bucketWidth) - (__lo div $bucketWidth)")).as("worst"))
       .localCheckpoint(true)
-    val worst = iv.agg(
-      max(expr(s"(__hi div $bucketWidth) - (__lo div $bucketWidth)")))
-      .collect()(0)
-    if (!worst.isNullAt(0) && worst.getLong(0) + 1 > maxBucketsPerInterval)
+    val worst = observed.get("worst").asInstanceOf[java.lang.Long]
+    if (worst != null && worst + 1 > maxBucketsPerInterval)
       throw new IllegalStateException(
-        s"IntervalJoin: an interval spans ${worst.getLong(0) + 1} buckets " +
+        s"IntervalJoin: an interval spans ${worst + 1} buckets " +
           s"(> maxBucketsPerInterval=$maxBucketsPerInterval) at width " +
           s"$bucketWidth - coarsen bucketWidth or split the interval " +
           "upstream instead of materializing the explosion")

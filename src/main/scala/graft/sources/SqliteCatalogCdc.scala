@@ -157,7 +157,7 @@ object SqliteCatalogCdc {
     // the exact schemaOf type
     val parse = StructType(tdef.columns.map { c =>
       val dt: DataType =
-        if (SqliteFile.isBlob(c))
+        if (c.isBlob)
           StructType(Seq(StructField("$hex", StringType)))
         else c.chType.spark match {
           case LongType | IntegerType => LongType
@@ -170,7 +170,7 @@ object SqliteCatalogCdc {
       .select(from_json(col("json"), parse).as("__r"))
     val outCols = tdef.columns.map { c =>
       val raw =
-        if (SqliteFile.isBlob(c))
+        if (c.isBlob)
           unhex(col("__r").getField(c.name).getField("$hex"))
         else col("__r").getField(c.name)
       raw.cast(target(c.name).dataType).as(c.name)

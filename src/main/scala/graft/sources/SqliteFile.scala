@@ -93,7 +93,18 @@ object SqliteFile {
 
   final case class ColumnDef(name: String, decl: String, pkOrdinal: Int,
                              rowidAlias: Boolean) {
-    def chType: ChType = SchemaMapper.fromSqliteDecl(decl)
+    /** Resolved once per column, not per cell ([[coerceValue]]). */
+    lazy val chType: ChType = SchemaMapper.fromSqliteDecl(decl)
+
+    /** BLOB-declared (or undeclared — SQLite's BLOB affinity) columns
+      * keep their bytes: the reference's String fallback would mangle
+      * binary through str(); BinaryType preserves it for the multimodal
+      * pipeline, which treats blobs as opaque binary columns anyway.
+      */
+    lazy val isBlob: Boolean = {
+      val d = decl.trim.toUpperCase
+      d.isEmpty || d.contains("BLOB")
+    }
   }
 
   /** A table's stored columns, as `PRAGMA table_info` lists them, and
@@ -805,16 +816,6 @@ object SqliteFile {
 
   // ------------------------------------------------------- Spark layer
 
-  /** BLOB-declared (or undeclared — SQLite's BLOB affinity) columns
-    * keep their bytes: the reference's String fallback would mangle
-    * binary through str(); BinaryType preserves it for the multimodal
-    * pipeline, which treats blobs as opaque binary columns anyway.
-    */
-  private[sources] def isBlob(c: ColumnDef): Boolean = {
-    val d = c.decl.trim.toUpperCase
-    d.isEmpty || d.contains("BLOB")
-  }
-
   /** Spark schema for a table: the reference's declared-type mapping
     * (main.py:125-134 via [[SchemaMapper.fromSqliteDecl]]), except
     * DATE/DATETIME surface as raw STRINGS here — parsing text into
@@ -825,7 +826,7 @@ object SqliteFile {
   def schemaOf(table: TableDef): StructType =
     StructType(table.columns.map { c =>
       val dt =
-        if (isBlob(c)) BinaryType
+        if (c.isBlob) BinaryType
         else c.chType match {
           case ChType.DateTime | ChType.Date => StringType
           case t => t.spark
@@ -847,7 +848,7 @@ object SqliteFile {
       s"$table.${c.name}: cannot coerce ${v.getClass.getSimpleName} " +
         s"value to $want (declared '${c.decl}')")
     if (v == null) null
-    else if (isBlob(c)) v match {
+    else if (c.isBlob) v match {
       case b: Array[Byte] => b
       case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       case _ => fail("binary")

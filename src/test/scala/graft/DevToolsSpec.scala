@@ -55,6 +55,7 @@ class DevToolsSpec extends SparkFunSuite {
     assert(out.get("query").asText == q)
     assert(out.get("wall_s").asDouble > 0.0)
     assert(out.get("jobs").size > 0 && out.get("stages").size > 0)
+    assert(out.get("codegen_compiles").asLong >= 0L)
     assertAlive()
   }
 
