@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** Loader for the driver-generated test tables (TESTDATA.md).
@@ -25,21 +25,22 @@ import org.apache.spark.sql.types.StructType
   * JVM. One JVM-wide entry per table path holds the schema Spark itself
   * inferred (`spark.read.parquet(path).schema`, so its nanos, NTZ and
   * field-metadata rules are Spark's own), and [[apply]] reads with
-  * `spark.read.schema(cached).parquet(path)`: the same relation, no job.
-  * The entry is keyed by
-  *  - the path, length and modification time of every file Spark lists
-  *    under the path (`InMemoryFileIndex`, the listing a read makes), and
+  * `spark.read.schema(cached).parquet(path)`: the same relation, and no
+  * job beyond the listing every read makes (itself a job when the path
+  * holds more than `spark.sql.sources.parallelPartitionDiscovery.
+  * threshold` directories). The entry is keyed by
+  *  - the path, length and modification time of every file that read
+  *    lists under the path, and
   *  - every `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` conf
   *    set on the session, `nanosAsLong` included.
-  * Each [[apply]] lists the path again and re-infers when either part
-  * differs from the entry's, so an added, removed or rewritten file or a
-  * flipped conf is seen on the next read. A rewrite is seen only when
-  * it changes the file's length or its modification time at the
-  * filesystem's granularity: milliseconds on a local disk and HDFS, one
-  * second on S3-style object stores. A rewrite of the same length inside
-  * one tick reads with the earlier schema. The same entry caches
-  * [[spread]]'s footer layout, so a rewritten file gets a fresh spread
-  * decision too.
+  * When either part differs from the entry's, [[apply]] reads again
+  * with Spark's inference and replaces the entry, so an added, removed
+  * or rewritten file or a flipped conf is seen on the next read. A
+  * rewrite is seen only when it changes the file's length or its
+  * modification time at the filesystem's granularity: milliseconds on a
+  * local disk and HDFS, one second on S3-style object stores. A rewrite
+  * of the same length inside one tick reads with the earlier schema.
+  * [[spread]] keys its footer layout on the same file versions.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -82,38 +83,39 @@ object Tables {
     * source files are under-split (fewer row groups than the session's
     * parallelism) and between 16 KiB and 256 MiB, small enough that
     * the exchange is trivially cheap. Identity otherwise — including
-    * on every realistically sized production table. A `df` over one
-    * table read through [[apply]] takes its (row groups, bytes) from
-    * that table's [[Meta]] entry; any other `df` scans its footers on
-    * every call.
+    * on every realistically sized production table. The (row groups,
+    * bytes) are cached per version of `df`'s input files, so a
+    * rewritten file gets a fresh decision.
     */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val files = df.inputFiles
-    if (files.isEmpty) return df
+    val names = df.inputFiles
+    if (names.isEmpty) return df
     val cap = spark.sparkContext.defaultParallelism
     if (cap <= 1) return df
-    val (rowGroups, bytes) = {
-      val names = files.toSet
-      meta.values.find(_.names == names) match {
-        // per cap: a partial early-exited scan is only valid under the
-        // parallelism it was made for (ADVICE r17)
-        case Some(m) =>
-          m.layout.getOrElseUpdate(cap, footerScan(spark, m.files.iterator, cap))
-        case None =>
-          val conf = spark.sessionState.newHadoopConf()
-          footerScan(spark, files.iterator.map { f =>
-            val p = new Path(f)
-            p.getFileSystem(conf).getFileStatus(p)
-          }, cap)
+    val files = inputStatuses(df, names)
+    // bounded cache key (hash of the files' versions, not the multi-MB
+    // list itself) INCLUDING the cap, so a partial early-exited scan is
+    // only ever reused under the parallelism it was valid for (ADVICE r17)
+    val key = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      files.foreach { f =>
+        md.update(s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}\u0000"
+          .getBytes("UTF-8"))
       }
+      java.util.Base64.getEncoder.encodeToString(md.digest()) + s":$cap"
     }
+    val (rowGroups, bytes) =
+      layoutCache.getOrElseUpdate(key, footerScan(spark, files.iterator, cap))
     val n = math.min(cap.toLong,
       math.max(2L, bytes / SpreadTargetBytesPerPartition)).toInt
     if (rowGroups < n && bytes >= SpreadMinBytes && bytes <= SpreadMaxBytes)
       df.repartition(n)
     else df
   }
+
+  /** (row groups, bytes) summed over footers, per [[spread]] key. */
+  private val layoutCache = TrieMap.empty[String, (Int, Long)]
 
   /** (row groups, bytes) summed over `files`' footers. Early exit (ADVICE
     * r17): once rg >= cap or b > SpreadMaxBytes the decision is identity
@@ -133,44 +135,40 @@ object Tables {
     (rg, b)
   }
 
-  /** A table path's file version: (path, length, modification time) of
-    * each listed file, and the session's parquet-reading confs.
+  /** Every file the file relations in `df`'s plan listed when `df` was
+    * built: no filesystem call.
     */
-  private final case class Version(files: Seq[(String, Long, Long)],
-                                   confs: Seq[(String, String)])
+  private def listedFiles(df: DataFrame): Seq[FileStatus] =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case i: PartitioningAwareFileIndex => i.allFiles() }
+      .flatten
 
-  /** What [[apply]] knows of one table path: the version it was read
-    * at, the schema Spark inferred then, and [[spread]]'s footer layout
-    * per parallelism cap.
+  /** The status of each of `df`'s input files `names`, sorted by path:
+    * from the listings `df`'s relations made, and looked up on the
+    * filesystem only for a file no listing holds.
     */
-  private final class Meta(val version: Version, val files: Seq[FileStatus],
-                           val schema: StructType) {
-    val names: Set[String] = files.map(_.getPath.toUri.toString).toSet
-    val layout = TrieMap.empty[Int, (Int, Long)]
-  }
-
-  /** One entry per table path, JVM-wide. */
-  private val meta = TrieMap.empty[String, Meta]
-
-  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-
-  /** The [[Meta]] entry of `path` under `spark`'s confs, inferring the
-    * schema when the path's version changed since the last read.
-    */
-  private def metaOf(spark: SparkSession, path: String): Meta = {
-    val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
-      .allFiles().sortBy(_.getPath.toString)
-    val version = Version(
-      files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)),
-      spark.conf.getAll.toSeq.filter { case (k, _) =>
-        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-      }.sorted)
-    meta.get(path).filter(_.version == version).getOrElse {
-      val m = new Meta(version, files, spark.read.parquet(path).schema)
-      meta.put(path, m)
-      m
+  private def inputStatuses(df: DataFrame, names: Array[String]): Seq[FileStatus] = {
+    val listed = listedFiles(df).map(f => f.getPath.toUri.toString -> f).toMap
+    lazy val conf = df.sparkSession.sessionState.newHadoopConf()
+    names.toSeq.sorted.map { n =>
+      listed.getOrElse(n, { val p = new Path(n); p.getFileSystem(conf).getFileStatus(p) })
     }
   }
+
+  /** What [[apply]] knows of one table path: the (path, length,
+    * modification time) of each file and the parquet confs it was read
+    * at, and the schema Spark inferred then.
+    */
+  private final case class Entry(files: Seq[(String, Long, Long)],
+                                 confs: Seq[(String, String)],
+                                 schema: StructType)
+
+  /** One entry per table path, JVM-wide. */
+  private val entries = TrieMap.empty[String, Entry]
+
+  private def versionOf(df: DataFrame): Seq[(String, Long, Long)] =
+    listedFiles(df).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
 
   /** Conf key for [[barrier]]: `checkpoint` (default) | `persist` |
     * `off`.
@@ -207,9 +205,20 @@ object Tables {
     }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (!spark.sessionState.conf.contains(NanosAsLong)) spark.conf.set(NanosAsLong, "true")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    spark.read.schema(metaOf(spark, path).schema).parquet(path)
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val cached = entries.get(path).filter(_.confs == confs).flatMap { e =>
+      val df = spark.read.schema(e.schema).parquet(path)
+      Option.when(versionOf(df) == e.files)(df)
+    }
+    cached.getOrElse {
+      val df = spark.read.parquet(path)
+      entries.put(path, Entry(versionOf(df), confs, df.schema))
+      df
+    }
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")

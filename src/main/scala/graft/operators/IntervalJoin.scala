@@ -42,12 +42,11 @@ object IntervalJoin {
            bucketWidth: Long,
            maxBucketsPerInterval: Long = 4096L): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive: $bucketWidth")
-    // The intervals relation is dimension-sized by assumption, but it
-    // is consumed TWICE (the worst-interval guard below, then the
-    // broadcast build) — without a barrier its whole upstream plan
-    // (often an aggregate over the fact table) executes twice. The
-    // eager checkpoint materializes the bounded rows once (round 18),
-    // and the guard's worst span is observed on that same pass.
+    // The eager checkpoint is the action that fills the Observation, so
+    // the worst-interval guard below still throws at construction time,
+    // before any explosion is planned. It also materializes the bounded
+    // intervals once (round 18), so the broadcast build does not run
+    // their upstream plan (often an aggregate over the fact table) again.
     val observed = Observation()
     val iv = intervals.withColumn("__lo", lo.cast("long"))
       .withColumn("__hi", hi.cast("long"))

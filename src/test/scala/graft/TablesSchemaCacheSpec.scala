@@ -51,10 +51,9 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
     }
   }
 
-  private val confGrid = for {
-    nanos <- Seq("true", "false")
-    ntz <- Seq("true", "false")
-  } yield Seq(NanosAsLong -> nanos, InferNtz -> ntz)
+  /** `apply` always sets `nanosAsLong`, so only the NTZ conf varies. */
+  private val confGrid =
+    Seq("true", "false").map(ntz => Seq(NanosAsLong -> "true", InferNtz -> ntz))
 
   test("the cached schema is Spark's own for every committed table and the NANOS fixture") {
     for (confs <- confGrid) withConfs(confs: _*) {
@@ -84,10 +83,11 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
     assert(withConfs(InferNtz -> "true")(ts) == TimestampNTZType)
     assert(withConfs(InferNtz -> "false")(ts) == TimestampType)
     assert(withConfs(InferNtz -> "true")(ts) == TimestampNTZType)
-    def nanosTs = Try(Tables(spark, nanosDir, "events").schema("ts").dataType)
-    assert(withConfs(NanosAsLong -> "true")(nanosTs).toOption.contains(LongType))
-    assert(withConfs(NanosAsLong -> "false")(nanosTs).toOption != Some(LongType))
-    assert(withConfs(NanosAsLong -> "true")(nanosTs).toOption.contains(LongType))
+  }
+
+  test("apply reads TIMESTAMP(NANOS) as a Long whatever the session had set") {
+    def nanosTs = Tables(spark, nanosDir, "events").schema("ts").dataType
+    assert(withConfs(NanosAsLong -> "false")(nanosTs) == LongType)
   }
 
   test("a file rewritten in place is re-inferred and re-spread") {
@@ -107,6 +107,8 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
       val small = Tables(spark, dir.toString, "t")
       assert(small.schema == StructType(Seq(StructField("id", LongType))))
       assert(Tables.spread(small) eq small) // under 16 KiB: identity
+      val plain = spark.read.parquet(table.toString) // not read through Tables
+      assert(Tables.spread(plain) eq plain)
 
       // same file name, another schema, over 16 KiB in one row group
       writeTable(spark.range(4000).selectExpr("id", "sha2(cast(id AS STRING), 256) AS s"))
@@ -115,6 +117,8 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
       assert(big.schema == spark.read.parquet(table.toString).schema)
       assert(big.count() == 4000L)
       assert(!(Tables.spread(big) eq big))
+      val plainBig = spark.read.parquet(table.toString)
+      assert(!(Tables.spread(plainBig) eq plainBig))
     } finally deleteTree(dir)
   }
 
