@@ -23,10 +23,18 @@ object Harness {
   private def warmDir: String =
     sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
 
+  /** Compiled codegen classes kept JVM-wide. Spark's cache is one
+    * 100-entry LRU keyed by (class loader, source); a cold pass of
+    * Bench's gate list compiles about 1,900 classes at sf0.001, so at
+    * 100 every warm pass recompiled about 2,500 of them.
+    */
+  private val CodegenCacheEntries = 4096
+
   private def session(): SparkSession = {
     val n = cpus
     val spark = SparkSession.builder()
       .master(s"local[$n]")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
@@ -71,7 +79,8 @@ object Harness {
 
   /** Steady-state measurement: run every gate once at [[warmDir]] first
     * so janino/JIT codegen compilation (a fixed per-query cost,
-    * irrelevant at cluster scale) happens outside the measured window.
+    * irrelevant at cluster scale) happens outside the measured window;
+    * [[CodegenCacheEntries]] keeps what it compiled for the timed passes.
     * NonFatal only: an OOM or linkage error in warm-up must surface.
     */
   def warm(spark: SparkSession, names: Seq[String]): Unit =

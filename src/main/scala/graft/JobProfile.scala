@@ -53,9 +53,10 @@ object JobProfile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    // generated classes compiled in the timed run: Spark's codegen
-    // cache holds 100 classes, so a warm run that still compiles has
-    // had its classes evicted by other queries
+    // generated classes compiled in the timed run: a warm run that
+    // still compiles has had its classes evicted by other queries
+    // (Harness sizes the JVM-wide codegen cache), or generates source
+    // that differs on every run
     val compilations = CodegenMetrics.METRIC_COMPILATION_TIME
     val compiledBefore = compilations.getCount
     val wall =

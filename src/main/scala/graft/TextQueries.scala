@@ -416,11 +416,12 @@ object TextQueries {
     },
 
     // C24c (oracle, round 10): the batch-settled answer of the
-    // STREAMING span dedup (streaming.SpanDedupStream, first-arrival-
-    // wins): each distinct 8-token window is claimed by its earliest
-    // doc (arrival order = doc_id here, making the claim total and
-    // deterministic — the stream's within-micro-batch arbitrariness
-    // disappears at the settled batch answer), and every doc reports
+    // STREAMING span dedup (first-arrival-wins, as the streaming
+    // reference in SpanDedupStreamSpec runs it): each distinct
+    // 8-token window is claimed by its earliest doc (arrival order =
+    // doc_id here, making the claim total and deterministic — the
+    // stream's within-micro-batch arbitrariness disappears at the
+    // settled batch answer), and every doc reports
     // how many of its windows it claimed (win_new) vs arrived-late
     // (win_dup). Spark joins 8-byte window HASHES (scan-stage hashing,
     // co-partitioned claim join — the SpanDedup scale shape); the

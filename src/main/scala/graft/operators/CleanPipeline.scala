@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
 
 /** The shared scrub→score stage of the cleaning pipeline (SURVEY.md §2
-  * C17). Batch (`pipeline_clean`) and streaming
-  * ([[graft.streaming.PipelineStream]]) both build on THIS column
-  * tree, so their equivalence spec compares two plans that share the
-  * stateless prefix by construction and differ only in the dedup
-  * mechanism (keeper window vs watermark state).
+  * C17). Batch `pipeline_clean` and the streaming reference in
+  * StreamingCleanSpec both build on THIS column tree, so their
+  * equivalence spec compares two plans that share the stateless prefix
+  * by construction and differ only in the dedup mechanism (keeper
+  * window vs watermark state).
   *
   * Everything here is codegen'd column arithmetic in the scan stage —
   * no shuffle, no state; at 100 TB this fuses into one pass over the

@@ -77,7 +77,7 @@ object DomainMix {
     * then feed the standard integer [[plan]] arithmetic unchanged.
     *
     * The totals collect is #domains rows — bounded and driver-side by
-    * design (the plan IS a driver-sized artifact, like ExportStream's
+    * design (the plan IS a driver-sized artifact, like an export's
     * manifest); T_j -> double is exact below 2^53 tokens per domain.
     */
   def planTemperature(docs: DataFrame, domainCol: String,

@@ -46,15 +46,18 @@ object IntervalJoin {
     // the worst-interval guard below still throws at construction time,
     // before any explosion is planned. It also materializes the bounded
     // intervals once (round 18), so the broadcast build does not run
-    // their upstream plan (often an aggregate over the fact table) again.
+    // their upstream plan (often an aggregate over the fact table) again,
+    // and counts them for the broadcast decision below.
     val observed = Observation()
     val iv = intervals.withColumn("__lo", lo.cast("long"))
       .withColumn("__hi", hi.cast("long"))
       .where(col("__lo") <= col("__hi"))
       .observe(observed,
-        max(expr(s"(__hi div $bucketWidth) - (__lo div $bucketWidth)")).as("worst"))
+        max(expr(s"(__hi div $bucketWidth) - (__lo div $bucketWidth)")).as("worst"),
+        count(lit(1)).as("rows"))
       .localCheckpoint(true)
     val worst = observed.get("worst").asInstanceOf[java.lang.Long]
+    val rows = observed.get("rows").asInstanceOf[java.lang.Long].longValue
     if (worst != null && worst + 1 > maxBucketsPerInterval)
       throw new IllegalStateException(
         s"IntervalJoin: an interval spans ${worst + 1} buckets " +
@@ -74,8 +77,15 @@ object IntervalJoin {
     // instead, and the join's parallelism collapses to the exploded
     // intervals side's (small, AQE-coalesced) partition count — at
     // 10× data that serialized the ~42M-pair probe onto 4 tasks
-    // (JobProfile receipt in OPTIMIZATION_r18.md).
-    pB.join(broadcast(ivB), Seq("__bkt"))
+    // (JobProfile receipt in OPTIMIZATION_r18.md). The broadcast is
+    // forced only while the explosion's upper bound (rows × worst
+    // buckets) fits autoBroadcastJoinThreshold; past it (or at -1) the
+    // bucket equi-join is left to the planner.
+    val threshold = iv.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bound = rows.toDouble * (if (worst == null) 1L else worst + 1) *
+      ivB.schema.defaultSize
+    val side = if (threshold >= 0 && bound <= threshold) broadcast(ivB) else ivB
+    pB.join(side, Seq("__bkt"))
       .where(col("__t") >= col("__lo") && col("__t") <= col("__hi"))
       .drop("__bkt", "__lo", "__hi", "__t")
   }

@@ -113,7 +113,7 @@ object TrainExport {
   }
 
   /** The stored manifest of an export. The batch writer stores one
-    * merged file; the streaming writer ([[graft.streaming.ExportStream]])
+    * merged file; a streaming writer (ExportStreamSpec's reference)
     * stores one manifest per committed micro-batch under
     * `_manifest/batch=<id>` — merging on read (counts add, checksums
     * XOR) makes both layouts one API, and lets a retried micro-batch
