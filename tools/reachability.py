@@ -40,7 +40,7 @@ EDGE = re.compile(r"^\s+(\S+)\s+->\s+(\S+)\s")
 def top_level(cls):
     """`graft.Foo$Bar$` -> `graft.Foo`."""
     pkg, _, simple = cls.rpartition(".")
-    head = simple.split("$", 1)[0] or simple
+    head = simple.split("$", 1)[0]
     return f"{pkg}.{head}" if pkg else head
 
 
