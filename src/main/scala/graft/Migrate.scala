@@ -21,12 +21,16 @@ import graft.sinks.ClickHouseSink
   * `--sqlite PATH` is sugar for `--jdbc-url jdbc:sqlite:PATH` (the
   * reference's only source; needs org.sqlite.JDBC on the classpath —
   * any JDBC database works through `--jdbc-url`, proven live on Derby
-  * and DuckDB in specs). The extract conforms each table and stages it
-  * as parquet under `--out`; the load phase then either executes
-  * against ClickHouse over JDBC, or with `--dry-run` (or when no
-  * `--clickhouse-host` is given) prints the exact create → insert →
-  * optimize statement sequence the reference would run — the only mode
-  * exercisable in a sandbox with no ClickHouse server.
+  * and DuckDB in specs). [[stage]] conforms each table and stages it
+  * as parquet under `--out`, one report per table. Each report's
+  * [[graft.sinks.ClickHouseSink.LoadPlan]] is then either executed
+  * against ClickHouse over JDBC (create → chunked insert → optimize,
+  * the reference's sequence) or, with `--dry-run` or when no
+  * `--clickhouse-host` is given, printed: the dry run prints the very
+  * statements the live load executes, and reads nothing back.
+  *
+  * `--chunk-size N` (1 to `Int.MaxValue`) bounds both the staged files
+  * and the load's INSERT batches to N rows.
   *
   * `--num-partitions N` (positive) reads each table in at most N
   * partitions. A JDBC table takes N key ranges; a SQLite file's table
@@ -70,11 +74,27 @@ object Migrate {
       "one of --sqlite or --jdbc-url is required")
     require(c.numPartitions > 0,
       s"--num-partitions must be positive, got ${c.numPartitions}")
+    require(c.chunkSize >= 1 && c.chunkSize <= Int.MaxValue,
+      s"--chunk-size must be between 1 and ${Int.MaxValue}, got ${c.chunkSize}")
     c
   }
 
+  /** Conform and stage every table of the source under `cfg.out`; the
+    * reports come back in catalog order.
+    */
+  def stage(spark: SparkSession, cfg: Config): Seq[MigrationJob.TableReport] =
+    if (cfg.sqlitePath.nonEmpty)
+      MigrationJob.migrateSqliteFile(spark, cfg.sqlitePath,
+        cfg.chDatabase, cfg.out, cfg.chunkSize, cfg.numPartitions)
+    else MigrationJob.migrateJdbc(
+      spark, cfg.jdbcUrl, cfg.chDatabase, cfg.out, cfg.chunkSize,
+      cfg.numPartitions)
+
   def main(args: Array[String]): Unit = {
-    val cfg = parse(args)
+    val parsed = parse(args)
+    val cfg =
+      if (parsed.out.nonEmpty) parsed
+      else parsed.copy(out = java.nio.file.Files.createTempDirectory("graft_migrate").toString)
     val hadSession = SparkSession.getDefaultSession.isDefined
     val spark = SparkSession.builder()
       .appName("graft-migrate")
@@ -82,31 +102,14 @@ object Migrate {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
 
-    val out =
-      if (cfg.out.nonEmpty) cfg.out
-      else java.nio.file.Files.createTempDirectory("graft_migrate").toString
-    val reports =
-      if (cfg.sqlitePath.nonEmpty)
-        MigrationJob.migrateSqliteFile(spark, cfg.sqlitePath,
-          cfg.chDatabase, out, cfg.chunkSize, cfg.numPartitions)
-      else MigrationJob.migrateJdbc(
-        spark, cfg.jdbcUrl, cfg.chDatabase, out, cfg.chunkSize,
-        cfg.numPartitions)
-
+    val reports = stage(spark, cfg)
     val dry = cfg.dryRun || cfg.chHost.isEmpty
     reports.foreach { r =>
-      println(s"-- table ${r.table}: ${r.rows} rows staged at $out/${r.table}")
-      val staged = spark.read.parquet(s"$out/${r.table}")
-      val plan = ClickHouseSink.plan(staged, cfg.chHost, cfg.chPort,
-        cfg.chDatabase, r.table, chunkSize = cfg.chunkSize)
-      if (dry) {
-        println(r.ddl)
-        println(plan.insert)
-        println(plan.optimize)
-      } else {
-        ClickHouseSink.write(staged, cfg.chHost, cfg.chPort, cfg.chDatabase,
-          r.table, cfg.chUser, cfg.chPassword, cfg.chunkSize)
-      }
+      val staged = s"${cfg.out}/${r.table}"
+      println(s"-- table ${r.table}: ${r.rows} rows staged at $staged")
+      val plan = ClickHouseSink.plan(r, cfg.chHost, cfg.chPort, cfg.chunkSize)
+      if (dry) Seq(plan.ddl, plan.insert, plan.optimize).foreach(println)
+      else ClickHouseSink.load(spark, plan, staged, cfg.chUser, cfg.chPassword)
     }
     println(s"-- migrated ${reports.size} tables, ${reports.map(_.rows).sum} rows total")
     if (!hadSession) spark.stop()

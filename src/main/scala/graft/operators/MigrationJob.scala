@@ -4,6 +4,7 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionSer
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 import graft.sources.{CatalogDiscovery, ChType, PrimaryKeyInference, SchemaMapper}
 import graft.functions.Coercions
 import graft.sinks.{ClickHouseDdl, LocalFs}
@@ -36,7 +37,21 @@ import graft.sinks.{ClickHouseDdl, LocalFs}
   */
 object MigrationJob {
 
-  final case class TableReport(table: String, rows: Long, ddl: String)
+  /** One migrated table: what was staged and how it loads.
+    *
+    * `schema` is the staged (conformed) schema, which the load reads the
+    * staged files with; `columns` are the target types the DDL declares.
+    * They differ where the conform widens: an Int32 column stages as a
+    * Long, a Float32 one as a Double. `orderBy` is the rendered ORDER BY
+    * expression, `None` for `tuple()`.
+    */
+  final case class TableReport(table: String, rows: Long, database: String,
+                               schema: StructType,
+                               columns: Seq[(String, ChType)],
+                               orderBy: Option[String]) {
+    /** CREATE TABLE … ENGINE = ReplacingMergeTree ORDER BY … */
+    def ddl: String = ClickHouseDdl.createTable(database, table, columns, orderBy)
+  }
 
   /** Coerce every column of `df` to its mapped target type with
     * null-as-default semantics (main.py:81-104).
@@ -72,7 +87,7 @@ object MigrationJob {
 
   /** Conform `df`, hand its writer to `write`, and report the rows the
     * write saw (a `count(1)` observation: no second scan of the source)
-    * with the DDL for the same mapping.
+    * with the conformed schema and the target types of the same mapping.
     */
   private def migrate(df: DataFrame, database: String, table: String,
                       primaryKey: Option[String], inferPk: Boolean,
@@ -81,19 +96,19 @@ object MigrationJob {
     val types = SchemaMapper.mapSchema(df.schema).map { case (n, t) =>
       n -> declaredTypes.getOrElse(n, t)
     }
+    val conformed = conform(df, types)
     val observed = Observation()
-    write(conform(df, types).observe(observed, count(lit(1)).as("rows"))
+    write(conformed.observe(observed, count(lit(1)).as("rows"))
       .write.mode("overwrite"))
     val rows = observed.get("rows").asInstanceOf[Long]
     val orderBy = primaryKey.orElse {
       if (inferPk) PrimaryKeyInference.infer(df, table, rows = Some(rows)).flatMap(orderByOf)
       else None
     }
-    TableReport(table, rows,
-      ClickHouseDdl.createTable(database, table, types, orderBy))
+    TableReport(table, rows, database, conformed.schema, types, orderBy)
   }
 
-  private def orderByOf(pk: Seq[String]): Option[String] = pk match {
+  private def orderByOf(pk: Seq[String]): Option[String] = pk.map(ClickHouseDdl.quote) match {
     case Seq()    => None
     case Seq(one) => Some(one)
     case many     => Some(many.mkString("(", ", ", ")"))
@@ -238,12 +253,12 @@ object MigrationJob {
     * JDBC (`batchsize` = the reference's chunk_size: every executor
     * flushes bounded INSERT batches in parallel — the distributed
     * fetchmany loop). Returns the same TableReports as the staging
-    * path, from the same observed-count write: the ClickHouse DDL
-    * carried in each report is what the identical plan executes
-    * against a real cluster; an offline JDBC engine stands in for
-    * ClickHouse exactly as in the dry-run story, with Spark's target
-    * dialect supplying the local CREATE TABLE. Only a declared key
-    * orders the DDL here; no key is inferred. Each target table is
+    * path, from the same observed-count write. The target table is
+    * created by Spark's JDBC writer in the target dialect's DDL, not
+    * by the report's: the ClickHouse DDL in each report is only
+    * carried, and it is the statement `graft.Migrate`'s load runs for
+    * the same mapping. Only a declared key orders the report's DDL
+    * here; no key is inferred. Each target table is
     * overwritten (dropped or truncated, then filled): if one table
     * fails, the tables writing at the same time are cancelled and may
     * be left empty or partly filled on the target.

@@ -162,18 +162,35 @@ class ReplacingMergeSpec extends SparkFunSuite {
 class DdlSpec extends SparkFunSuite {
   test("createTable emits ReplacingMergeTree DDL (main.py:65-71)") {
     val schema = Tables.events(spark, sf).schema
-    val ddl = ClickHouseDdl.createTable("db", "events", schema, Some("event_id"))
+    val ddl = ClickHouseDdl.createTable("db", "events",
+      SchemaMapper.mapSchema(schema), Some("event_id"))
     assert(ddl.startsWith("CREATE TABLE IF NOT EXISTS db.events ("))
     assert(ddl.contains("event_id Int64"))
     assert(ddl.contains("ts_ns Int64"))
     assert(ddl.contains("value Float64"))
     // DateTime mapping exercised on a real timestamp column:
     val liDdl = ClickHouseDdl.createTable("db", "lineitem",
-      Tables.lineitem(spark, sf).schema, Some("l_orderkey"))
+      SchemaMapper.mapSchema(Tables.lineitem(spark, sf).schema), Some("l_orderkey"))
     assert(liDdl.contains("l_shipdate DateTime"))
     assert(ddl.contains("ENGINE = ReplacingMergeTree ORDER BY event_id"))
-    val noPk = ClickHouseDdl.createTable("db", "t", schema, None)
+    val noPk = ClickHouseDdl.createTable("db", "t", SchemaMapper.mapSchema(schema), None)
     assert(noPk.endsWith("ORDER BY tuple()"))
+  }
+
+  test("identifiers that are not plain are backquoted, ` and \\ escaped") {
+    Seq("a", "_x9", "Ab_1").foreach(n => assert(ClickHouseDdl.quote(n) == n))
+    assert(ClickHouseDdl.quote("my col") == "`my col`")
+    assert(ClickHouseDdl.quote("9lives") == "`9lives`")
+    assert(ClickHouseDdl.quote("a`b") == "`a\\`b`")
+    assert(ClickHouseDdl.quote("a\\b") == "`a\\\\b`")
+    assert(ClickHouseDdl.quote("é") == "`é`")
+    val schema = StructType(Seq(StructField("my col", LongType), StructField("v", StringType)))
+    assert(ClickHouseDdl.createTable("my db", "t-1", SchemaMapper.mapSchema(schema),
+      Some("`my col`")) == "CREATE TABLE IF NOT EXISTS `my db`.`t-1` " +
+      "(`my col` Int64, v String) ENGINE = ReplacingMergeTree ORDER BY `my col`")
+    assert(ClickHouseDdl.insertInto("db", "t", schema) ==
+      "INSERT INTO db.t (`my col`, v) VALUES")
+    assert(ClickHouseDdl.optimizeTable("db", "t 1") == "OPTIMIZE TABLE db.`t 1`")
   }
 }
 

@@ -2,6 +2,10 @@ package graft
 
 import java.sql.DriverManager
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** End-to-end CLI parity check: graft.Migrate's main() run the way a
   * user would (flags in, staged parquet + printed DDL out) against a
   * live embedded Derby — the argparse surface of main.py:184-204
@@ -27,11 +31,66 @@ class MigrateCliSpec extends SparkFunSuite {
   }
 
   test("--num-partitions must be positive") {
-    Seq("0", "-2").foreach { n =>
-      val e = intercept[IllegalArgumentException](Migrate.parse(
-        Array("--sqlite", "/tmp/x.db", "--num-partitions", n)))
-      assert(e.getMessage.contains("--num-partitions"), e.getMessage)
+    Seq("--num-partitions" -> Seq("0", "-2"),
+        "--chunk-size" -> Seq("0", "-2", (Int.MaxValue + 1L).toString))
+      .foreach { case (flag, ns) =>
+        ns.foreach { n =>
+          val e = intercept[IllegalArgumentException](Migrate.parse(
+            Array("--sqlite", "/tmp/x.db", flag, n)))
+          assert(e.getMessage.contains(flag), e.getMessage)
+        }
+      }
+    assert(Migrate.parse(Array("--sqlite", "/tmp/x.db", "--chunk-size",
+      Int.MaxValue.toString)).chunkSize == Int.MaxValue)
+  }
+
+  /** stdout of `Migrate.main(args :+ "--out" :+ dir)`, `dir` printed as `<out>`. */
+  private def dryRun(args: String*): String = {
+    val out = java.nio.file.Files.createTempDirectory("graft_cli_dry").toString
+    val stdout = new java.io.ByteArrayOutputStream()
+    try {
+      Console.withOut(new java.io.PrintStream(stdout, true, "UTF-8")) {
+        Migrate.main((args ++ Seq("--out", out)).toArray)
+      }
+      stdout.toString("UTF-8").replace(out, "<out>")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("the dry-run transcript on fixture.db matches the committed golden file") {
+    val golden = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/test/resources/migrate/fixture_dry_run.txt")), "UTF-8")
+    assert(dryRun("--sqlite", "src/test/resources/sqlite/fixture.db",
+      "--dry-run") == golden)
+  }
+
+  test("the dry run starts no Spark job after the last table's staging write") {
+    // staging jobs carry MigrationJob.concurrently's job tag; a job
+    // started with the marker property flushes the asynchronous bus
+    val marker = "graft.spec.dryRunFlush"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
+        jobs.add(
+          if (prop(marker).isDefined) "marker"
+          else if (prop("spark.job.tags").exists(_.contains("graft-migrate-"))) "staging"
+          else "other")
+      }
     }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      dryRun("--sqlite", "src/test/resources/sqlite/fixture.db", "--dry-run")
+      spark.sparkContext.setLocalProperty(marker, "flush")
+      try spark.range(1).collect()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.contains("marker"), "the marker job was never seen")
+      val run = jobs.asScala.takeWhile(_ != "marker").toSeq
+      assert(run.contains("staging"), run)
+      assert(run.last == "staging", run)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("main() migrates a live Derby catalog end-to-end in dry-run") {

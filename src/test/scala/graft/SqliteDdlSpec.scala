@@ -75,6 +75,10 @@ class SqliteDdlSpec extends SparkFunSuite {
         val ddl = reports.find(_.table == t).get.ddl
         assert(ddl.endsWith(s"ORDER BY $k"), ddl)
       }
+      // a name that is not a plain identifier is backquoted
+      assert(reports.find(_.table == "quoted_col").get.ddl ==
+        "CREATE TABLE IF NOT EXISTS db.quoted_col (id Int64, `my col` String) " +
+          "ENGINE = ReplacingMergeTree ORDER BY id")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(out))
   }
