@@ -1422,7 +1422,6 @@ object AnalyticsQueries {
             (col("value").cast(d2) * 100).cast(LongType))
             .otherwise(0L).as("cents"))
       val mid1 = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-        .localCheckpoint(true)
       val xy = ev.crossJoin(mid1)
         .groupBy(col("user_id"))
         .agg(sum(when(col("day") < col("mid"), col("cents"))
@@ -1511,7 +1510,6 @@ object AnalyticsQueries {
           count(lit(1)).as("freq"),
           sum((col("value").cast(d2) * 100).cast(LongType)).as("cents"))
       val ref1 = pu.agg(max(col("last_day")).as("ref_day"))
-        .localCheckpoint(true)
       def q(metric: Column, asc: Boolean) = ntile(4).over(
         if (asc) Window.orderBy(metric.asc, col("user_id"))
         else Window.orderBy(metric.desc, col("user_id")))

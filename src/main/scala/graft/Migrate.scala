@@ -32,6 +32,9 @@ import graft.sinks.ClickHouseSink
   * `--chunk-size N` (1 to `Int.MaxValue`) bounds both the staged files
   * and the load's INSERT batches to N rows.
   *
+  * `--clickhouse-port N` must be a TCP port, 1 to 65535; a bad port is
+  * refused before anything is staged.
+  *
   * `--num-partitions N` (positive) reads each table in at most N
   * partitions. A JDBC table takes N key ranges; a SQLite file's table
   * takes as many as its bytes need under Spark's file split rule
@@ -49,22 +52,37 @@ object Migrate {
                           out: String = "",
                           dryRun: Boolean = false)
 
+  /** Each flag that takes a value, and how it sets the config. */
+  private val setters: Map[String, (Config, String) => Config] = Map(
+    // round 12: --sqlite reads the FILE FORMAT directly (SqliteFile)
+    // — no JDBC driver needed at all; jdbc:sqlite: urls still work
+    // through --jdbc-url when a driver is on the classpath
+    "--sqlite" -> ((c, v) => c.copy(sqlitePath = v)),
+    "--jdbc-url" -> ((c, v) => c.copy(jdbcUrl = v)),
+    "--clickhouse-host" -> ((c, v) => c.copy(chHost = v)),
+    "--clickhouse-port" -> ((c, v) => c.copy(chPort = v.toInt)),
+    "--clickhouse-user" -> ((c, v) => c.copy(chUser = v)),
+    "--clickhouse-password" -> ((c, v) => c.copy(chPassword = v)),
+    "--clickhouse-database" -> ((c, v) => c.copy(chDatabase = v)),
+    "--chunk-size" -> ((c, v) => c.copy(chunkSize = v.toLong)),
+    "--num-partitions" -> ((c, v) => c.copy(numPartitions = v.toInt)),
+    "--out" -> ((c, v) => c.copy(out = v)))
+
+  /** The config `args` give; every refusal names the flag at fault. */
   private[graft] def parse(args: Array[String]): Config = {
     def loop(rest: List[String], c: Config): Config = rest match {
-      // round 12: --sqlite reads the FILE FORMAT directly (SqliteFile)
-      // — no JDBC driver needed at all; jdbc:sqlite: urls still work
-      // through --jdbc-url when a driver is on the classpath
-      case "--sqlite" :: v :: t => loop(t, c.copy(sqlitePath = v))
-      case "--jdbc-url" :: v :: t => loop(t, c.copy(jdbcUrl = v))
-      case "--clickhouse-host" :: v :: t => loop(t, c.copy(chHost = v))
-      case "--clickhouse-port" :: v :: t => loop(t, c.copy(chPort = v.toInt))
-      case "--clickhouse-user" :: v :: t => loop(t, c.copy(chUser = v))
-      case "--clickhouse-password" :: v :: t => loop(t, c.copy(chPassword = v))
-      case "--clickhouse-database" :: v :: t => loop(t, c.copy(chDatabase = v))
-      case "--chunk-size" :: v :: t => loop(t, c.copy(chunkSize = v.toLong))
-      case "--num-partitions" :: v :: t => loop(t, c.copy(numPartitions = v.toInt))
-      case "--out" :: v :: t => loop(t, c.copy(out = v))
       case "--dry-run" :: t => loop(t, c.copy(dryRun = true))
+      case flag :: t if setters.contains(flag) => t match {
+        case v :: tail =>
+          val next =
+            try setters(flag)(c, v)
+            catch {
+              case _: NumberFormatException =>
+                throw new IllegalArgumentException(s"$flag needs a number, got '$v'")
+            }
+          loop(tail, next)
+        case Nil => throw new IllegalArgumentException(s"$flag needs a value")
+      }
       case Nil => c
       case other :: _ =>
         throw new IllegalArgumentException(s"unknown argument: $other")
@@ -76,6 +94,8 @@ object Migrate {
       s"--num-partitions must be positive, got ${c.numPartitions}")
     require(c.chunkSize >= 1 && c.chunkSize <= Int.MaxValue,
       s"--chunk-size must be between 1 and ${Int.MaxValue}, got ${c.chunkSize}")
+    require(c.chPort >= 1 && c.chPort <= 65535,
+      s"--clickhouse-port must be between 1 and 65535, got ${c.chPort}")
     c
   }
 

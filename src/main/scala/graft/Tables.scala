@@ -191,6 +191,9 @@ object Tables {
     *  - `persist`: StorageLevel.MEMORY_AND_DISK persist — keeps
     *    lineage (fault-tolerant) and spills instead of pinning, at
     *    the cost of possible recomputation under memory pressure.
+    *    Nothing here unpersists it: its blocks are freed only by LRU
+    *    eviction or by the caller's explicit unpersist (or
+    *    `spark.catalog.clearCache()`).
     *  - `off`: no barrier — correct, but the pushed-down filter may
     *    re-evaluate the heavy expression tree below the exchange.
     */

@@ -186,7 +186,7 @@ object TextQueries {
         .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
         .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
         .where(col("c_xy") >= 4)
-      val n1 = bi.agg(sum(col("c_xy")).as("n")).localCheckpoint(true)
+      val n1 = bi.agg(sum(col("c_xy")).as("n"))
       bi.join(broadcast(uni.select(col("w").as("w1"), col("c").as("c_x"))),
           "w1")
         .join(broadcast(uni.select(col("w").as("w2"), col("c").as("c_y"))),

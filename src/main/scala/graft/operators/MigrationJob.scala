@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 import graft.sources.{CatalogDiscovery, ChType, PrimaryKeyInference, SchemaMapper}
@@ -23,8 +23,14 @@ import graft.sinks.{ClickHouseDdl, LocalFs}
   * (see [[migrateSqliteFile]]), up to the caller's `maxPartitions`, so
   * a small table is one task and one staged file, not one per b-tree
   * subtree. DDL for the target engine comes from
-  * ClickHouseDdl; the data lands as parquet (or through any Spark
-  * writer) already conforming to the mapped schema.
+  * ClickHouseDdl; the data lands as parquet already conforming to the
+  * mapped schema.
+  *
+  * Three catalog loops ([[migrateAll]] over parquet files,
+  * [[migrateSqliteFile]] over a SQLite file, [[migrateJdbc]] over a
+  * JDBC catalog) feed one table write, [[migrateTable]]'s staged
+  * parquet write. Loading the staged tables into a target is
+  * `graft.sinks.ClickHouseSink.load`'s job, not this object's.
   *
   * Each table's source is read once: the row count in its report is
   * observed on the write itself, not counted by a second scan. The
@@ -62,14 +68,17 @@ object MigrationJob {
   private def conform(df: DataFrame, types: Seq[(String, ChType)]): DataFrame =
     df.select(Coercions.coerceRow(types): _*)
 
-  /** Migrate one table: conform + bounded-batch write (main.py:157-179).
+  /** Migrate one table: conform + bounded-batch parquet write
+    * (main.py:157-179), and report the rows the write saw (a `count(1)`
+    * observation: no second scan of the source) with the conformed
+    * schema and the target types of the same mapping.
     *
     * ORDER BY resolution (main.py:124): an explicit `primaryKey` wins
-    * (the declared-pk path — PRAGMA via JDBC); otherwise, when
-    * `inferPk`, [[graft.sources.PrimaryKeyInference]] derives a
-    * data-confirmed key from the schema naming convention; otherwise
-    * the DDL falls back to `tuple()` like the reference with a pk-less
-    * table. Composite keys render as `(a, b)`.
+    * (the declared-pk path — PRAGMA via JDBC); otherwise
+    * [[graft.sources.PrimaryKeyInference]] derives a data-confirmed key
+    * from the schema naming convention; otherwise the DDL falls back to
+    * `tuple()` like the reference with a pk-less table. Composite keys
+    * render as `(a, b)`.
     *
     * `declaredTypes` overrides the target type mapped from a column's
     * Spark type, for sources that declare more than their Spark schema
@@ -79,32 +88,19 @@ object MigrationJob {
   def migrateTable(df: DataFrame, database: String, table: String,
                    outDir: String, chunkSize: Long = 10000L,
                    primaryKey: Option[String] = None,
-                   inferPk: Boolean = true,
-                   declaredTypes: Map[String, ChType] = Map.empty): TableReport =
-    migrate(df, database, table, primaryKey, inferPk, declaredTypes)(w =>
-      LocalFs.writer(w).option("maxRecordsPerFile", chunkSize)
-        .parquet(s"$outDir/$table"))
-
-  /** Conform `df`, hand its writer to `write`, and report the rows the
-    * write saw (a `count(1)` observation: no second scan of the source)
-    * with the conformed schema and the target types of the same mapping.
-    */
-  private def migrate(df: DataFrame, database: String, table: String,
-                      primaryKey: Option[String], inferPk: Boolean,
-                      declaredTypes: Map[String, ChType])(
-                      write: DataFrameWriter[Row] => Unit): TableReport = {
+                   declaredTypes: Map[String, ChType] = Map.empty): TableReport = {
     val types = SchemaMapper.mapSchema(df.schema).map { case (n, t) =>
       n -> declaredTypes.getOrElse(n, t)
     }
     val conformed = conform(df, types)
     val observed = Observation()
-    write(conformed.observe(observed, count(lit(1)).as("rows"))
+    LocalFs.writer(conformed.observe(observed, count(lit(1)).as("rows"))
       .write.mode("overwrite"))
+      .option("maxRecordsPerFile", chunkSize)
+      .parquet(s"$outDir/$table")
     val rows = observed.get("rows").asInstanceOf[Long]
-    val orderBy = primaryKey.orElse {
-      if (inferPk) PrimaryKeyInference.infer(df, table, rows = Some(rows)).flatMap(orderByOf)
-      else None
-    }
+    val orderBy = primaryKey.orElse(
+      PrimaryKeyInference.infer(df, table, rows = Some(rows)).flatMap(orderByOf))
     TableReport(table, rows, database, conformed.schema, types, orderBy)
   }
 
@@ -242,39 +238,6 @@ object MigrationJob {
         JdbcCatalog.partitionKey(spark, url, t), numPartitions)
       migrateTable(df, database, t.toLowerCase, outDir, chunkSize,
         orderByOf(JdbcCatalog.primaryKey(url, t)))
-    }
-  }
-
-  /** LIVE JDBC→JDBC migration (round 14 — the write half of the loop
-    * with BOTH ends live, reference main.py:138-179): discover +
-    * pk-partitioned read from the source catalog, conform each table
-    * (null-as-default, wraparound, temporal parsing — exactly what the
-    * staging path runs), then CHUNKED-batch write into the target over
-    * JDBC (`batchsize` = the reference's chunk_size: every executor
-    * flushes bounded INSERT batches in parallel — the distributed
-    * fetchmany loop). Returns the same TableReports as the staging
-    * path, from the same observed-count write. The target table is
-    * created by Spark's JDBC writer in the target dialect's DDL, not
-    * by the report's: the ClickHouse DDL in each report is only
-    * carried, and it is the statement `graft.Migrate`'s load runs for
-    * the same mapping. Only a declared key orders the report's DDL
-    * here; no key is inferred. Each target table is
-    * overwritten (dropped or truncated, then filled): if one table
-    * fails, the tables writing at the same time are cancelled and may
-    * be left empty or partly filled on the target.
-    */
-  def migrateJdbcLive(spark: SparkSession, srcUrl: String, dstUrl: String,
-                      dstProps: java.util.Properties, database: String,
-                      chunkSize: Long = 10000L,
-                      numPartitions: Int = 8): Seq[TableReport] = {
-    import graft.sources.JdbcCatalog
-    concurrently(spark, JdbcCatalog.listTables(srcUrl)) { t =>
-      val df = JdbcCatalog.readTable(spark, srcUrl, t,
-        JdbcCatalog.partitionKey(spark, srcUrl, t), numPartitions)
-      migrate(df, database, t.toLowerCase,
-        orderByOf(JdbcCatalog.primaryKey(srcUrl, t)), inferPk = false,
-        declaredTypes = Map.empty)(
-        _.option("batchsize", chunkSize).jdbc(dstUrl, t.toLowerCase, dstProps))
     }
   }
 }

@@ -14,9 +14,11 @@ import graft.sources.SchemaMapper
   * prints it on a dry run and [[load]] executes it. The INSERT runs
   * through Spark's JDBC writer as a parameterised
   * `INSERT INTO db.t ("c", …) VALUES (?, …)`, batched by `batchSize`
-  * rows; the printed `insert` is its preamble. `load` is tested offline
-  * against a recording JDBC driver; against a cluster, the ClickHouse
-  * JDBC driver on the classpath serves the `jdbc:clickhouse:` URL.
+  * rows; the printed `insert` is its preamble. `load` is the only code
+  * that writes migrated rows to a JDBC target. It is tested offline
+  * against a recording JDBC driver (the statements) and embedded Derby
+  * (the values read back); against a cluster, the ClickHouse JDBC
+  * driver on the classpath serves the `jdbc:clickhouse:` URL.
   */
 object ClickHouseSink {
 

@@ -31,6 +31,8 @@ class BarrierModeSpec extends SparkFunSuite {
     test(s"$name: checkpoint, persist and off barriers are row-identical") {
       val ck = withMode(None)(rows(name)) // default = checkpoint
       val ps = withMode(Some("persist"))(rows(name))
+      // persist mode never unpersists: drop its blocks from the shared session
+      spark.catalog.clearCache()
       val off = withMode(Some("off"))(rows(name))
       assert(ck.nonEmpty)
       assert(ck == ps, "persist mode drifted from checkpoint mode")

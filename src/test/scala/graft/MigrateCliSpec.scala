@@ -28,11 +28,18 @@ class MigrateCliSpec extends SparkFunSuite {
     assert(c.chunkSize == 500L && c.numPartitions == 3 && c.dryRun)
     intercept[IllegalArgumentException](Migrate.parse(Array("--bogus")))
     intercept[IllegalArgumentException](Migrate.parse(Array[String]()))
+    // a value flag given last is refused as missing its value, by name
+    Seq("--out", "--chunk-size", "--clickhouse-host").foreach { flag =>
+      val e = intercept[IllegalArgumentException](Migrate.parse(
+        Array("--sqlite", "/tmp/x.db", flag)))
+      assert(e.getMessage == s"$flag needs a value", e.getMessage)
+    }
   }
 
   test("--num-partitions must be positive") {
-    Seq("--num-partitions" -> Seq("0", "-2"),
-        "--chunk-size" -> Seq("0", "-2", (Int.MaxValue + 1L).toString))
+    Seq("--num-partitions" -> Seq("0", "-2", "abc"),
+        "--chunk-size" -> Seq("0", "-2", (Int.MaxValue + 1L).toString, "abc"),
+        "--clickhouse-port" -> Seq("0", "-1", "65536", "abc"))
       .foreach { case (flag, ns) =>
         ns.foreach { n =>
           val e = intercept[IllegalArgumentException](Migrate.parse(
@@ -42,6 +49,8 @@ class MigrateCliSpec extends SparkFunSuite {
       }
     assert(Migrate.parse(Array("--sqlite", "/tmp/x.db", "--chunk-size",
       Int.MaxValue.toString)).chunkSize == Int.MaxValue)
+    assert(Migrate.parse(Array("--sqlite", "/tmp/x.db", "--clickhouse-port",
+      "65535")).chPort == 65535)
   }
 
   /** stdout of `Migrate.main(args :+ "--out" :+ dir)`, `dir` printed as `<out>`. */

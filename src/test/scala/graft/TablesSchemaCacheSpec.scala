@@ -122,9 +122,8 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
     } finally deleteTree(dir)
   }
 
-  test("building q5_region_revenue again runs no job") {
-    val q5 = SparkEntry.queries("q5_region_revenue")
-    q5(spark, sf) // fills the entries of its six tables
+  /** The number of Spark jobs `body` starts. */
+  private def jobsStartedBy(body: => Unit): Int = {
     val marker = "graft.test.marker"
     val started = new ConcurrentLinkedQueue[Option[String]]()
     val listener = new SparkListener {
@@ -133,7 +132,7 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      q5(spark, sf)
+      body
       // the listener bus is asynchronous and ordered: once a marked
       // job's start is seen, every job started before it has been too
       spark.sparkContext.setLocalProperty(marker, "flush")
@@ -142,10 +141,26 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (!started.asScala.exists(_.isDefined) && System.nanoTime() < deadline)
         Thread.sleep(20)
-      val before = started.asScala.takeWhile(_.isEmpty).size
       assert(started.asScala.exists(_.isDefined), "the marked job was never seen")
-      assert(before == 0, s"$before jobs ran while building q5_region_revenue")
+      started.asScala.takeWhile(_.isEmpty).size
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("building q5_region_revenue again runs no job") {
+    val q5 = SparkEntry.queries("q5_region_revenue")
+    q5(spark, sf) // fills the entries of its six tables
+    val before = jobsStartedBy(q5(spark, sf))
+    assert(before == 0, s"$before jobs ran while building q5_region_revenue")
+  }
+
+  test("building q_rfm, q_cuped and text_pmi again runs no job: " +
+      "their one-row aggregates are joined, not checkpointed") {
+    for (name <- Seq("q_rfm", "q_cuped", "text_pmi")) {
+      val gate = SparkEntry.queries(name)
+      gate(spark, sf) // fills the entries of its tables
+      val jobs = jobsStartedBy(gate(spark, sf))
+      assert(jobs == 0, s"$jobs jobs ran while building $name")
+    }
   }
 
   private def deleteTree(p: Path): Unit =
