@@ -1468,7 +1468,6 @@ object AnalyticsQueries {
             (col("value").cast(d2) * 100).cast(LongType))
             .otherwise(0L).as("cents"))
       val mid1 = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-        .localCheckpoint(true)
       val perUser = ev.crossJoin(mid1)
         .groupBy(col("user_id"))
         .agg(max(pmod(col("user_id"), lit(2L))).as("treated"),
@@ -1482,7 +1481,6 @@ object AnalyticsQueries {
         .select(col("treated"),
           (col("sp").cast("double") / col("n").cast("double")).as("m_pre"),
           (col("so").cast("double") / col("n").cast("double")).as("m_post"))
-        .localCheckpoint(true) // both arm filters read this 2-row frame
       val t = g.where(col("treated") === 1L)
         .select(col("m_pre").as("t_pre"), col("m_post").as("t_post"))
       val c = g.where(col("treated") === 0L)

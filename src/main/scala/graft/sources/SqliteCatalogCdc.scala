@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
@@ -213,14 +215,6 @@ private[sources] final class SqliteCatalogScan(path: String, spec: String,
     new SqliteCatalogCdcStream(path, spec, maxPartitions)
 }
 
-/** One table's slice of a catalog micro-batch: subtree roots bounded
-  * to `(minEx, maxInc]`, decoded under the batch's re-resolved
-  * TableDef, against the batch's shared header snapshot.
-  */
-private[sources] final case class SqliteCatalogSlice(
-    table: SqliteFile.TableDef, roots: Seq[Int], h: SqliteFile.Header,
-    minEx: Long, maxInc: Long) extends InputPartition
-
 private[sources] final class SqliteCatalogCdcStream(path: String,
                                                     spec: String,
                                                     maxPartitions: Int)
@@ -248,16 +242,15 @@ private[sources] final class SqliteCatalogCdcStream(path: String,
     MapOffset(SqliteCatalogCdc.select(path, spec).map(t =>
       t.name -> SqliteFile.maxRowid(path, t).getOrElse(Long.MinValue)).toMap)
 
-  override def deserializeOffset(json: String): StreamOffset = {
-    // flat {"name":123,...} map — parsed with the same minimal
-    // escaping recordJson writes (table names from sqlite_master)
-    val m = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(-?\\d+)".r
-      .findAllMatchIn(json)
-      .map(g => g.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-        -> g.group(2).toLong)
-      .toMap
-    MapOffset(m)
-  }
+  // a flat {"name":123,...} map, read by a full JSON parser so every
+  // escape jsonStr writes comes back as the character it stands for
+  override def deserializeOffset(json: String): StreamOffset =
+    MapOffset(new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      .properties().asScala.map { e =>
+        require(e.getValue.isIntegralNumber && e.getValue.canConvertToLong,
+          s"catalog CDC offset $json: '${e.getKey}' has no rowid watermark")
+        e.getKey -> e.getValue.longValue()
+      }.toMap)
 
   override def planInputPartitions(start: StreamOffset,
                                    end: StreamOffset): Array[InputPartition] = {
@@ -275,22 +268,13 @@ private[sources] final class SqliteCatalogCdcStream(path: String,
         s"$t: table vanished from the catalog mid-stream - its " +
           "watermark cannot be honored; restart from a fresh checkpoint")
     }
+    // one header snapshot for every table of the batch
     val h = SqliteFile.header(path)
     hi.toSeq.sortBy(_._1).flatMap { case (name, hiMark) =>
-      val loMark = lo.getOrElse(name, Long.MinValue)
-      require(hiMark >= loMark,
-        s"$name: rowid watermark regressed ($hiMark < $loMark) - " +
-          "append-only capture violated; restart from a fresh checkpoint")
-      if (hiMark == loMark) Nil
-      else {
-        val t = live.getOrElse(name, throw new IllegalStateException(
-          s"$name: present in the end offset but not the catalog"))
-        val roots = SqliteFile.subtreeRanges(path, h, t)
-          .filter { case (_, rLo, rHi) => rHi > loMark && rLo < hiMark }
-          .map(_._1)
-        SqliteFile.groupSubtrees(roots, maxPartitions)
-          .map(SqliteCatalogSlice(t, _, h, loMark, hiMark))
-      }
+      val t = live.getOrElse(name, throw new IllegalStateException(
+        s"$name: present in the end offset but not the catalog"))
+      SqliteRowidWalks.cdcBatch(path, h, t,
+        lo.getOrElse(name, Long.MinValue), hiMark, maxPartitions)
     }.toArray
   }
 
@@ -302,41 +286,21 @@ private[sources] final class SqliteCatalogCdcStream(path: String,
 }
 
 /** Serializable executor-side factory (the stream object itself holds
-  * driver state and must not ship).
+  * driver state and must not ship): each (rowid, record) becomes one
+  * envelope row under the partition's table.
   */
 private[sources] final class SqliteCatalogReaderFactory(path: String)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val slice = p.asInstanceOf[SqliteCatalogSlice]
-    new PartitionReader[InternalRow] {
-      private val walks = slice.roots.iterator.map(r =>
-        new SqliteFile.TableWalk(path, slice.h, r,
-          slice.minEx, slice.maxInc))
-      private var cur: SqliteFile.TableWalk = _
-      private var row: InternalRow = _
-      private val tblU = UTF8String.fromString(slice.table.name)
-
-      override def next(): Boolean = {
-        while (true) {
-          if (cur == null) {
-            if (!walks.hasNext) return false
-            cur = walks.next()
-          }
-          if (cur.hasNext) {
-            val (rowid, vals) = cur.next()
-            row = new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(Array[Any](tblU, rowid,
-                UTF8String.fromString(SqliteCatalogCdc.recordJson(
-                  slice.table, rowid, vals))))
-            return true
-          }
-          cur.close(); cur = null
-        }
-        false
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit =
-        if (cur != null) { cur.close(); cur = null }
+    val part = p.asInstanceOf[SqliteRowidWalks]
+    val tblU = UTF8String.fromString(part.table.name)
+    new SqliteWalkReader(path, part) {
+      override protected def toRow(rowid: Long,
+                                   vals: IndexedSeq[Any]): InternalRow =
+        new org.apache.spark.sql.catalyst.expressions
+          .GenericInternalRow(Array[Any](tblU, rowid,
+            UTF8String.fromString(SqliteCatalogCdc.recordJson(
+              part.table, rowid, vals))))
     }
   }
 }

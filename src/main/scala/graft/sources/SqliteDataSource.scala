@@ -32,6 +32,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    and AQE sees honest row counts.
   *  - Rows surface as `InternalRow` (UTF8String/primitives) — no
   *    Row-encoder round trip.
+  *  - **Two probe shapes**: the filters a scan can serve from the file
+  *    become either rowid intervals ([[RowidProbe]]: a bounded
+  *    table-tree descent) or key ranges on one index-format b-tree
+  *    ([[KeyProbe]]: a secondary index, or a WITHOUT ROWID table's own
+  *    primary-key tree).
+  *  - **One walk loop**: every read is a sequence of b-tree walks
+  *    yielding (rowid, record) pairs, grouped into one of two
+  *    partition kinds: rowid-bounded subtree walks
+  *    ([[SqliteRowidWalks]]: the full scan, rowid probes, and both CDC
+  *    streams) or key-range walks ([[SqliteKeyWalks]]). One reader
+  *    ([[SqliteWalkReader]]) runs them for the typed scan and for the
+  *    catalog CDC envelope alike.
   *
   * Same scope and refusals as [[SqliteFile]] (rowid + WITHOUT ROWID
   * tables, UTF-8, read-only, shared-FS path on a real cluster).
@@ -82,10 +94,11 @@ final class SqliteDataSource extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val maxParts =
-      Option(opts.get("maxpartitions")).map(_.toInt).getOrElse(32)
-    require(maxParts > 0,
-      s"sqlite source option maxPartitions must be positive, got $maxParts")
+    val maxParts = Option(opts.get("maxpartitions")).fold(32) { s =>
+      s.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException("sqlite source option " +
+          s"maxPartitions must be a positive integer, got $s"))
+    }
     catalogSpec(opts) match {
       case Some(spec) =>
         new SqliteCatalogTable(pathOf(opts), spec, maxParts)
@@ -109,32 +122,52 @@ private[sources] final class SqliteTable(path: String,
     new SqliteScanBuilder(path, tdef, maxPartitions)
 }
 
-/** The pushed probe a scan serves instead of a full walk: a
-  * rowid(-alias) equality or RANGE (bounded table-tree descent, no
-  * index needed), or a secondary-index equality or RANGE on the
-  * leading indexed column (index walk + bounded per-rowid fetches).
+/** The pushed probe a scan serves instead of a full walk. Every probe
+  * is one of two shapes, and each shape has one walk partition:
+  *  - [[RowidProbe]]: rowid(-alias) intervals, served by bounded
+  *    table-tree descents ([[SqliteRowidWalks]]);
+  *  - [[KeyProbe]]: key ranges on one index-format b-tree, served by
+  *    key-ordered descents ([[SqliteKeyWalks]]).
   */
-private[sources] sealed trait SqlitePushedProbe extends Serializable
-private[sources] final case class RowidEq(rowid: Long) extends SqlitePushedProbe
-private[sources] final case class IndexEq(idx: SqliteIndex.IndexDef,
-                                          value: Any) extends SqlitePushedProbe
-private[sources] final case class RowidRange(minEx: Long, maxInc: Long)
-    extends SqlitePushedProbe
-private[sources] final case class IndexRange(idx: SqliteIndex.IndexDef,
-                                             range: SqliteIndex.KeyRange)
-    extends SqlitePushedProbe
-private[sources] final case class RowidIn(rowids: Seq[Long])
-    extends SqlitePushedProbe
-private[sources] final case class IndexIn(idx: SqliteIndex.IndexDef,
-                                          values: Seq[Any])
-    extends SqlitePushedProbe
-/** Composite descent (round 15): leading columns pinned by equality,
-  * the next column ranged — `a = ? AND b BETWEEN ? AND ?` on
-  * `CREATE INDEX ...(a, b)` binds BOTH columns into the walk.
+private[sources] sealed trait SqlitePushedProbe extends Serializable {
+  /** The probe as `explain` shows it after `probe=`. */
+  def describe: String
+}
+
+/** Rowid intervals (minEx, maxInc], ascending: a range is one
+  * interval, a point r is (r−1, r], an IN list is several points.
   */
-private[sources] final case class IndexCompositeRange(
-    idx: SqliteIndex.IndexDef, eqPrefix: Seq[Any],
-    range: SqliteIndex.KeyRange) extends SqlitePushedProbe
+private[sources] final case class RowidProbe(spans: Seq[(Long, Long)])
+    extends SqlitePushedProbe {
+  override def describe: String = spans match {
+    case Seq((lo, hi)) if lo < hi && lo == hi - 1 => s"rowid:$hi"
+    case Seq((lo, hi)) => s"rowid:($lo,$hi]"
+    case _ => s"rowid:in[${spans.size}]"
+  }
+}
+
+/** Key ranges on an index-format b-tree: a secondary index, or the
+  * pseudo-index `pk:<table>` that is a WITHOUT ROWID table's own tree.
+  * `eqPrefix` pins the leading columns by equality and each range
+  * bounds the next one: a point or range is one range, an IN list one
+  * point per value, a composite probe an equality prefix and a range
+  * (`a = ? AND b BETWEEN ? AND ?` on `CREATE INDEX ...(a, b)`).
+  */
+private[sources] final case class KeyProbe(idx: SqliteIndex.IndexDef,
+                                           eqPrefix: Seq[Any],
+                                           ranges: Seq[SqliteIndex.KeyRange])
+    extends SqlitePushedProbe {
+  override def describe: String = {
+    val keys = ranges match {
+      case Seq(SqliteIndex.KeyRange(Some(v), true, Some(w), true))
+          if eqPrefix.isEmpty && SqliteIndex.cmpKey(v, w) == 0 => v.toString
+      case Seq(r) => r.toString
+      case _ => s"in[${ranges.size}]"
+    }
+    if (eqPrefix.isEmpty) s"${idx.name}:$keys"
+    else s"${idx.name}:[${eqPrefix.mkString(",")}]+$keys"
+  }
+}
 
 private[sources] final class SqliteScanBuilder(path: String,
                                                tdef: SqliteFile.TableDef,
@@ -251,7 +284,7 @@ private[sources] final class SqliteScanBuilder(path: String,
       * (minEx, maxInc]; Long values only. None when any value is
       * non-integral or a bound underflows.
       */
-    def foldRowid(fs: Seq[(Filter, Any)]): Option[SqlitePushedProbe] = {
+    def foldRowid(fs: Seq[(Filter, Any)]): Option[RowidProbe] = {
       var minEx = Long.MinValue
       var maxInc = Long.MaxValue
       for ((f, v) <- fs) v match {
@@ -271,9 +304,7 @@ private[sources] final class SqliteScanBuilder(path: String,
         }
         case _ => return None // non-integral rowid compare: leave to Spark
       }
-      val isEq = fs.exists(_._1.isInstanceOf[EqualTo])
-      if (isEq && maxInc == minEx + 1) Some(RowidEq(maxInc))
-      else Some(RowidRange(minEx, maxInc))
+      Some(RowidProbe(Seq((minEx, maxInc))))
     }
 
     import SqliteIndex.{KeyRange, cmpKey}
@@ -313,16 +344,6 @@ private[sources] final class SqliteScanBuilder(path: String,
         hi.map(_._1), hi.forall(_._2)))
     }
 
-    def foldIndex(idx: SqliteIndex.IndexDef,
-                  fs: Seq[(Filter, Any)]): Option[SqlitePushedProbe] =
-      foldKeyRange(fs).map { r =>
-        (r.lo, r.hi) match {
-          case (Some(v), Some(w)) if r.loInc && r.hiInc && cmpKey(v, w) == 0 =>
-            IndexEq(idx, v) // point probe, pinned description
-          case _ => IndexRange(idx, r)
-        }
-      }
-
     val byAttr = cmps.groupBy(_._1)
 
     // IN-lists: each value is one O(depth)-page point probe, so push
@@ -348,9 +369,12 @@ private[sources] final class SqliteScanBuilder(path: String,
         else None
       case _ => None
     }
-    def inRowid(vs: Seq[Any]): Option[SqlitePushedProbe] = {
-      val ls = vs.collect { case l: Long => l }
-      if (ls.size == vs.size) Some(RowidIn(ls.distinct.sorted)) else None
+    // each rowid r is the point interval (r−1, r], which Long.MinValue
+    // has not: such a list stays with Spark, like `= Long.MinValue`
+    def inRowid(vs: Seq[Any]): Option[RowidProbe] = {
+      val ls = vs.collect { case l: Long if l != Long.MinValue => l }
+      if (ls.size != vs.size) None
+      else Some(RowidProbe(ls.distinct.sorted.map(r => (r - 1, r))))
     }
 
     // LIKE 'p%' on an indexed TEXT column ⟺ key ∈ [p, succ(p)) in
@@ -390,8 +414,7 @@ private[sources] final class SqliteScanBuilder(path: String,
     def nocaseLeading(a: String): Option[SqliteIndex.IndexDef] =
       indexes.find(i => i.partial.isEmpty &&
         i.specs.headOption.exists(s => s.name == a && s.nocase))
-    def point(v: Any) = SqliteIndex.KeyRange(Some(v), loInc = true,
-      Some(v), hiInc = true)
+    def point(v: Any) = KeyRange(Some(v), loInc = true, Some(v), hiInc = true)
 
     // rowid alias wins when both qualify (no index pages at all);
     // a composite bind beats a single-column fold (tighter descent);
@@ -409,7 +432,8 @@ private[sources] final class SqliteScanBuilder(path: String,
       // (a NOCASE column's fold order breaks inequality semantics);
       // DESC columns are fine — the walk runs in index order.
       def compositeChoice: Option[Choice] =
-        indexes.iterator.flatMap { ix =>
+        if (byAttr.isEmpty) None // no comparison: no need to list indexes
+        else indexes.iterator.flatMap { ix =>
           val eqCols = ix.specs.map(_.name).takeWhile { n =>
             byAttr.get(n).exists(fs =>
               fs.forall(_._2.isInstanceOf[EqualTo]) &&
@@ -429,7 +453,7 @@ private[sources] final class SqliteScanBuilder(path: String,
                     val cols = eqCols :+ n
                     Choice(cols.toSet,
                       cols.flatMap(c => byAttr(c).map(_._2)).toSet,
-                      IndexCompositeRange(ix, eqVals, r))
+                      KeyProbe(ix, eqVals, Seq(r)))
                   }
               case None if k >= 2 &&
                   SqliteIndex.partialImplied(ix, eqVals.init,
@@ -438,8 +462,7 @@ private[sources] final class SqliteScanBuilder(path: String,
                 // the degenerate closed range
                 Some(Choice(eqCols.toSet,
                   eqCols.flatMap(c => byAttr(c).map(_._2)).toSet,
-                  IndexCompositeRange(ix, eqVals.init,
-                    point(eqVals.last))))
+                  KeyProbe(ix, eqVals.init, Seq(point(eqVals.last)))))
               case None => None // single-col: cmpChoice's job
             }
           }
@@ -450,8 +473,8 @@ private[sources] final class SqliteScanBuilder(path: String,
           foldKeyRange(byAttr(a).map(t => (t._2, t._3))).flatMap { r =>
             binaryLeadings(a)
               .find(SqliteIndex.partialImplied(_, Nil, r))
-              .flatMap(foldIndex(_, byAttr(a).map(t => (t._2, t._3))))
-              .map(p => Choice(Set(a), byAttr(a).map(_._2).toSet, p))
+              .map(i => Choice(Set(a), byAttr(a).map(_._2).toSet,
+                KeyProbe(i, Nil, Seq(r))))
           }
         }.nextOption()
 
@@ -466,18 +489,18 @@ private[sources] final class SqliteScanBuilder(path: String,
               binaryLeadings(a)
                 .find(i => vs.forall(v =>
                   SqliteIndex.partialImplied(i, Nil, point(v))))
-                .map(i => Choice(Set(a), Set(f), IndexIn(i, vs.distinct)))
+                .map(i => Choice(Set(a), Set(f),
+                  KeyProbe(i, Nil, vs.distinct.map(point))))
             }.nextOption()
           }
 
       def prefixChoice: Option[Choice] =
         prefixes.iterator.flatMap { case (a, f, p) =>
           val hi = p.substring(0, p.length - 1) + (p.last + 1).toChar
-          val r = SqliteIndex.KeyRange(
-            Some(p), loInc = true, Some(hi), hiInc = false)
+          val r = KeyRange(Some(p), loInc = true, Some(hi), hiInc = false)
           binaryLeadings(a)
             .find(SqliteIndex.partialImplied(_, Nil, r))
-            .map(i => Choice(Set(a), Set(f), IndexRange(i, r)))
+            .map(i => Choice(Set(a), Set(f), KeyProbe(i, Nil, Seq(r))))
         }.nextOption()
 
       // NOCASE candidate probes (swallow nothing; see Choice doc).
@@ -490,14 +513,16 @@ private[sources] final class SqliteScanBuilder(path: String,
           val eqVals = fs.collect { case (_, _: EqualTo, v) => v }.distinct
           if (eqVals.size == 1 && fs.forall(_._2.isInstanceOf[EqualTo]))
             nocaseLeading(a).map(ix =>
-              Choice(Set.empty, Set.empty, IndexEq(ix, eqVals.head)))
+              Choice(Set.empty, Set.empty,
+                KeyProbe(ix, Nil, Seq(point(eqVals.head)))))
           else None
         }.nextOption()
 
       def nocaseInChoice: Option[Choice] =
         ins.iterator.flatMap { case (a, _, vs) =>
           nocaseLeading(a).map(ix =>
-            Choice(Set.empty, Set.empty, IndexIn(ix, vs.distinct)))
+            Choice(Set.empty, Set.empty,
+              KeyProbe(ix, Nil, vs.distinct.map(point))))
         }.nextOption()
 
       def nocasePrefixChoice: Option[Choice] =
@@ -508,9 +533,8 @@ private[sources] final class SqliteScanBuilder(path: String,
             // (A-Z fold to 0x61-0x7a, still below the 0x7f carry)
             val fp = SqliteIndex.foldAscii(p)
             val hi = fp.substring(0, fp.length - 1) + (fp.last + 1).toChar
-            Choice(Set.empty, Set.empty, IndexRange(ix,
-              SqliteIndex.KeyRange(Some(fp), loInc = true,
-                Some(hi), hiInc = false)))
+            Choice(Set.empty, Set.empty, KeyProbe(ix, Nil, Seq(
+              KeyRange(Some(fp), loInc = true, Some(hi), hiInc = false))))
           }
         }.nextOption()
 
@@ -606,46 +630,107 @@ private[sources] final class SqliteAggReaderFactory(
   }
 }
 
-/** One task's work: a group of b-tree subtree roots, the rowid bound
-  * (unbounded for batch scans, `(start, end]` for a micro-batch), and
-  * the HEADER the planner resolved — snapshotted at plan time so every
+/** One task's work: a sequence of walks. Every partition is one of
+  * two kinds, and both carry the TableDef their rows decode under and
+  * the HEADER the planner resolved, snapshotted at plan time so every
   * task of one batch reads the same WAL/journal overlay state even if
   * the live database advances mid-batch.
   */
-private[sources] final case class SqliteSubtrees(
-    roots: Seq[Int], h: SqliteFile.Header,
-    minEx: Long = Long.MinValue, maxInc: Long = Long.MaxValue)
-    extends InputPartition
+private[sources] sealed trait SqliteWalkPartition extends InputPartition {
+  def table: SqliteFile.TableDef
+  /** The walks, each opened only when the reader reaches it. */
+  def walks(path: String): Iterator[SqliteWalkPartition.Walk]
+}
 
-/** An index probe (point, range, or composite eq-prefix+range) as one
-  * task: the index walk + bounded per-rowid table fetches both run
-  * executor-side against the plan-time header snapshot.
-  */
-private[sources] final case class SqliteIndexProbePartition(
-    idx: SqliteIndex.IndexDef, range: SqliteIndex.KeyRange, tableRoot: Int,
-    h: SqliteFile.Header, eqPrefix: Seq[Any] = Nil) extends InputPartition
+private[sources] object SqliteWalkPartition {
+  /** (rowid, record) pairs off one b-tree descent. */
+  type Walk = Iterator[(Long, IndexedSeq[Any])] with AutoCloseable
+}
 
-/** An IN-list as one task: a sorted set of rowid point walks (rowid
-  * alias IN), or one index point probe per value (indexed column IN).
+/** Rowid-bounded subtree walks: (subtree root, minEx, maxInc] each.
+  * They serve the full scan (unbounded), the rowid probes, and both
+  * CDC streams (`(watermark, latest]`).
   */
-private[sources] final case class SqliteRowidSetPartition(
-    rowids: Seq[Long], tableRoot: Int, h: SqliteFile.Header)
-    extends InputPartition
-private[sources] final case class SqliteIndexInPartition(
-    idx: SqliteIndex.IndexDef, values: Seq[Any], tableRoot: Int,
-    h: SqliteFile.Header) extends InputPartition
+private[sources] final case class SqliteRowidWalks(
+    table: SqliteFile.TableDef, bounds: Seq[(Int, Long, Long)],
+    h: SqliteFile.Header) extends SqliteWalkPartition {
+  override def walks(path: String): Iterator[SqliteWalkPartition.Walk] =
+    bounds.iterator.map { case (root, minEx, maxInc) =>
+      new SqliteFile.TableWalk(path, h, root, minEx, maxInc)
+    }
+}
 
-/** A WITHOUT ROWID pk probe as one task (round 16): the table
-  * b-tree's own key-ordered descent; matching records ARE the rows
-  * (pk-first record order — the reader permutes via recordIndex).
+private[sources] object SqliteRowidWalks {
+  /** Every level-1 subtree of `table`, unbounded: the full scan. */
+  def all(path: String, h: SqliteFile.Header, table: SqliteFile.TableDef,
+          maxPartitions: Int): Seq[SqliteRowidWalks] =
+    group(table, h, SqliteFile.subtreeRoots(path, h, table)
+      .map((_, Long.MinValue, Long.MaxValue)), maxPartitions)
+
+  /** One walk per (interval, subtree) pair that overlap, so a subtree
+    * no interval reaches is pruned before any task runs. The walks
+    * keep the full-scan parallelism: a wide range is a partial scan.
+    */
+  def bounded(path: String, h: SqliteFile.Header,
+              table: SqliteFile.TableDef, spans: Seq[(Long, Long)],
+              maxPartitions: Int): Seq[SqliteRowidWalks] = {
+    val subtrees = SqliteFile.subtreeRanges(path, h, table)
+    group(table, h, for {
+      (minEx, maxInc) <- spans
+      (root, lo, hi) <- subtrees if hi > minEx && lo < maxInc
+    } yield (root, minEx, maxInc), maxPartitions)
+  }
+
+  /** One CDC micro-batch of `table`: the rowids in `(lo, hi]`, where
+    * `lo` is the committed watermark and `hi` the latest one. A
+    * watermark that went backwards means the table shrank or was
+    * replaced, and the batch refuses rather than read rows twice.
+    */
+  def cdcBatch(path: String, h: SqliteFile.Header,
+               table: SqliteFile.TableDef, lo: Long, hi: Long,
+               maxPartitions: Int): Seq[SqliteRowidWalks] = {
+    require(hi >= lo,
+      s"${table.name}: rowid watermark regressed ($hi < $lo) - the " +
+        "source table shrank or was replaced; append-only capture is " +
+        "violated, restart from a fresh checkpoint")
+    if (hi == lo) Nil
+    else bounded(path, h, table, Seq((lo, hi)), maxPartitions)
+  }
+
+  private def group(table: SqliteFile.TableDef, h: SqliteFile.Header,
+                    bounds: Seq[(Int, Long, Long)],
+                    maxPartitions: Int): Seq[SqliteRowidWalks] =
+    SqliteFile.groupSubtrees(bounds, maxPartitions)
+      .map(SqliteRowidWalks(table, _, h))
+}
+
+/** Key-range walks, one task. On a secondary index each range's
+  * matching rowids are collected, deduplicated and sorted, and each
+  * rowid is fetched by one (rowid−1, rowid] table descent. On a
+  * WITHOUT ROWID table each range descends the table's own tree, and
+  * the matching records are the rows (pk-first record order, which
+  * the reader permutes through recordIndex).
   */
-private[sources] final case class SqliteWrProbePartition(
-    tdef: SqliteFile.TableDef, eqPrefix: Seq[Any],
-    range: SqliteIndex.KeyRange, h: SqliteFile.Header)
-    extends InputPartition
-private[sources] final case class SqliteWrInPartition(
-    tdef: SqliteFile.TableDef, values: Seq[Any], h: SqliteFile.Header)
-    extends InputPartition
+private[sources] final case class SqliteKeyWalks(
+    table: SqliteFile.TableDef, probe: KeyProbe, h: SqliteFile.Header)
+    extends SqliteWalkPartition {
+  override def walks(path: String): Iterator[SqliteWalkPartition.Walk] =
+    if (table.withoutRowid)
+      probe.ranges.iterator.map { r =>
+        val w = SqliteIndex.withoutRowidIter(path, h, table,
+          probe.eqPrefix, r)
+        new Iterator[(Long, IndexedSeq[Any])] with AutoCloseable {
+          override def hasNext: Boolean = w.hasNext
+          override def next(): (Long, IndexedSeq[Any]) = (0L, w.next())
+          override def close(): Unit = w.close()
+        }
+      }
+    else
+      probe.ranges.flatMap(r => SqliteIndex.compositeRangeRowids(
+          path, h, probe.idx, probe.eqPrefix, r)._1)
+        .distinct.sorted.iterator.map(rid =>
+          new SqliteFile.TableWalk(path, h, table.rootPage, rid - 1, rid))
+}
 
 private[sources] final class SqliteScan(path: String,
                                         tdef: SqliteFile.TableDef,
@@ -655,76 +740,22 @@ private[sources] final class SqliteScan(path: String,
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String = {
-    val p = probe.map {
-      case RowidEq(r) => s" probe=rowid:$r"
-      case IndexEq(i, v) => s" probe=${i.name}:$v"
-      case RowidRange(lo, hi) => s" probe=rowid:($lo,$hi]"
-      case IndexRange(i, r) => s" probe=${i.name}:$r"
-      case RowidIn(rs) => s" probe=rowid:in[${rs.size}]"
-      case IndexIn(i, vs) => s" probe=${i.name}:in[${vs.size}]"
-      case IndexCompositeRange(i, eq, r) =>
-        s" probe=${i.name}:[${eq.mkString(",")}]+$r"
-    }.getOrElse("")
-    s"sqlite ${tdef.name} cols=[${required.fieldNames.mkString(",")}]$p"
-  }
+  override def description(): String =
+    s"sqlite ${tdef.name} cols=[${required.fieldNames.mkString(",")}]" +
+      probe.map(p => s" probe=${p.describe}").getOrElse("")
 
   override def planInputPartitions(): Array[InputPartition] = {
     val h = SqliteFile.header(path)
-    def point(v: Any) =
-      SqliteIndex.KeyRange(Some(v), loInc = true, Some(v), hiInc = true)
-    probe match {
-      case Some(RowidEq(r)) =>
-        // one task, roots pruned to the subtrees whose rowid interval
-        // can contain r; the walk itself descends only the spine
-        val roots = SqliteFile.subtreeRanges(path, h, tdef)
-          .filter { case (_, lo, hi) => hi > r - 1 && lo <= r }
-          .map(_._1)
-        if (roots.isEmpty) Array.empty
-        else Array(SqliteSubtrees(roots, h, r - 1, r))
-      case Some(RowidRange(minEx, maxInc)) =>
-        // prune to overlapping subtrees, then KEEP the full-scan
-        // parallelism: a wide range is a partial scan, not a point read
-        val roots = SqliteFile.subtreeRanges(path, h, tdef)
-          .filter { case (_, lo, hi) => hi > minEx && lo <= maxInc }
-          .map(_._1)
-        if (roots.isEmpty) Array.empty
-        else SqliteFile.groupSubtrees(roots, maxPartitions)
-          .map(SqliteSubtrees(_, h, minEx, maxInc)).toArray
-      // WITHOUT ROWID: the "index" IS the table — descend it directly
-      case Some(IndexEq(_, v)) if tdef.withoutRowid =>
-        Array(SqliteWrProbePartition(tdef, Nil, point(v), h))
-      case Some(IndexRange(_, r)) if tdef.withoutRowid =>
-        Array(SqliteWrProbePartition(tdef, Nil, r, h))
-      case Some(IndexIn(_, vs)) if tdef.withoutRowid =>
-        Array(SqliteWrInPartition(tdef, vs, h))
-      case Some(IndexCompositeRange(_, eq, r)) if tdef.withoutRowid =>
-        Array(SqliteWrProbePartition(tdef, eq, r, h))
-      case Some(IndexEq(idx, v)) =>
-        Array(SqliteIndexProbePartition(idx, point(v), tdef.rootPage, h))
-      case Some(IndexRange(idx, r)) =>
-        Array(SqliteIndexProbePartition(idx, r, tdef.rootPage, h))
-      case Some(RowidIn(rs)) =>
-        // prune to rowids any subtree can hold, one task (point walks)
-        val ranges = SqliteFile.subtreeRanges(path, h, tdef)
-        val live = rs.filter(r =>
-          ranges.exists { case (_, lo, hi) => hi > r - 1 && lo <= r })
-        if (live.isEmpty) Array.empty
-        else Array(SqliteRowidSetPartition(live, tdef.rootPage, h))
-      case Some(IndexIn(idx, vs)) =>
-        Array(SqliteIndexInPartition(idx, vs, tdef.rootPage, h))
-      case Some(IndexCompositeRange(idx, eq, r)) =>
-        Array(SqliteIndexProbePartition(idx, r, tdef.rootPage, h, eq))
-      case None =>
-        SqliteFile.groupSubtrees(SqliteFile.subtreeRoots(path, h, tdef),
-          maxPartitions).map(SqliteSubtrees(_, h)).toArray
-    }
+    (probe match {
+      case None => SqliteRowidWalks.all(path, h, tdef, maxPartitions)
+      case Some(RowidProbe(spans)) =>
+        SqliteRowidWalks.bounded(path, h, tdef, spans, maxPartitions)
+      case Some(p: KeyProbe) => Seq(SqliteKeyWalks(tdef, p, h))
+    }).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SqliteReaderFactory(path, tdef.name,
-      tdef.columns.toIndexedSeq, tdef.recordIndex,
-      required.fieldNames.toIndexedSeq)
+    new SqliteReaderFactory(path, required.fieldNames.toIndexedSeq)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -777,13 +808,6 @@ private[sources] final class SqliteCdcStream(path: String,
 
   override def planInputPartitions(start: StreamOffset,
                                    end: StreamOffset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[RowidOffset].rowid
-    val hi = end.asInstanceOf[RowidOffset].rowid
-    require(hi >= lo,
-      s"${tdef.name}: rowid watermark regressed ($hi < $lo) - the " +
-        "source table shrank or was replaced; append-only capture is " +
-        "violated, restart from a fresh checkpoint")
-    if (hi == lo) return Array.empty
     // Schema-drift guard (round 15): re-resolve the table each batch
     // and require every ORIGINAL column to still sit at its original
     // record position under its original name. ALTER TABLE ADD COLUMN
@@ -808,108 +832,80 @@ private[sources] final class SqliteCdcStream(path: String,
         "the supported evolution - restart the stream to project new " +
         "columns)")
     }
-    // snapshot the header ONCE per batch: all tasks see the same
-    // committed WAL/journal overlay even if the writer keeps going
-    val h = SqliteFile.header(path)
-    val roots = SqliteFile.subtreeRanges(path, h, tdef)
-      .filter { case (_, rLo, rHi) => rHi > lo && rLo < hi }
-      .map(_._1)
-    SqliteFile.groupSubtrees(roots, maxPartitions)
-      .map(SqliteSubtrees(_, h, lo, hi)).toArray
+    SqliteRowidWalks.cdcBatch(path, SqliteFile.header(path), tdef,
+      start.asInstanceOf[RowidOffset].rowid,
+      end.asInstanceOf[RowidOffset].rowid, maxPartitions).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SqliteReaderFactory(path, tdef.name,
-      tdef.columns.toIndexedSeq, tdef.recordIndex,
-      required.fieldNames.toIndexedSeq)
+    new SqliteReaderFactory(path, required.fieldNames.toIndexedSeq)
 
   override def commit(end: StreamOffset): Unit = ()
   override def stop(): Unit = ()
 }
 
+/** The one walk-and-emit loop: runs a partition's walks in order and
+  * turns each (rowid, record) into a row. The typed reader and the
+  * catalog envelope reader differ only in [[toRow]].
+  */
+private[sources] abstract class SqliteWalkReader(path: String,
+                                                 part: SqliteWalkPartition)
+    extends PartitionReader[InternalRow] {
+  protected def toRow(rowid: Long, vals: IndexedSeq[Any]): InternalRow
+
+  private lazy val walks = part.walks(path)
+  private var cur: SqliteWalkPartition.Walk = _
+  private var row: InternalRow = _
+
+  override def next(): Boolean = {
+    while (true) {
+      if (cur == null) {
+        if (!walks.hasNext) return false
+        cur = walks.next()
+      }
+      if (cur.hasNext) {
+        val (rowid, vals) = cur.next()
+        row = toRow(rowid, vals)
+        return true
+      }
+      cur.close(); cur = null
+    }
+    false
+  }
+  override def get(): InternalRow = row
+  // a walk closes itself once exhausted; this covers early termination
+  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+}
+
+/** Typed rows: each required column, pruned on the driver, decoded
+  * from its record position ([[SqliteFile.columnValue]]).
+  */
 private[sources] final class SqliteReaderFactory(path: String,
-                                                 table: String,
-                                                 cols: IndexedSeq[SqliteFile.ColumnDef],
-                                                 recIdx: IndexedSeq[Int],
                                                  required: IndexedSeq[String])
     extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val part = p.asInstanceOf[SqliteWalkPartition]
+    val table = part.table.name
+    val cols = part.table.columns.toIndexedSeq
+    val recIdx = part.table.recordIndex
     // (RECORD position — declared order for rowid tables, the
     // pk-first permutation for WITHOUT ROWID — and the ColumnDef)
-    // per REQUIRED output slot; pruning decided on the driver,
-    // applied per record here
+    // per REQUIRED output slot
     val slots = required.map { n =>
       val i = cols.indexWhere(_.name == n)
       require(i >= 0, s"pruned column $n not in $table")
       (recIdx(i), cols(i))
     }
-    // WITHOUT ROWID pk probes (round 16) produce the matching RECORDS
-    // directly — the table b-tree's entries ARE the rows, so there is
-    // no per-rowid fetch phase at all. Round 17 (ADVICE): records
-    // STREAM off the walk (withoutRowidIter) instead of materializing
-    // the match set at reader creation — an unselective pk range now
-    // holds one page path in memory, like the rowid TableWalk.
-    val wrWalkers = scala.collection.mutable.ArrayBuffer.empty[AutoCloseable]
-    val wrRecords: Option[Iterator[IndexedSeq[Any]]] = p match {
-      case wr: SqliteWrProbePartition =>
-        val w = SqliteIndex.withoutRowidIter(path, wr.h, wr.tdef,
-          wr.eqPrefix, wr.range)
-        wrWalkers += w
-        Some(w)
-      case wr: SqliteWrInPartition =>
-        Some(wr.values.iterator.flatMap { v =>
-          val w = SqliteIndex.withoutRowidIter(path, wr.h, wr.tdef, Nil,
-            SqliteIndex.KeyRange(Some(v), loInc = true,
-              Some(v), hiInc = true))
-          wrWalkers += w
-          w
-        })
-      case _ => None
-    }
-
-    // every other partition kind reduces to a sequence of bounded
-    // TableWalks: subtree groups walk their roots (optionally
-    // rowid-bounded); an index probe walks one (rowid−1, rowid]
-    // spine per matched rowid
-    lazy val walkPlan: Iterator[SqliteFile.TableWalk] = p match {
-      case part: SqliteSubtrees =>
-        part.roots.iterator.map(r =>
-          new SqliteFile.TableWalk(path, part.h, r, part.minEx, part.maxInc))
-      case probe: SqliteIndexProbePartition =>
-        val (rowids, _) = SqliteIndex.compositeRangeRowids(
-          path, probe.h, probe.idx, probe.eqPrefix, probe.range)
-        rowids.sorted.iterator.map(rid =>
-          new SqliteFile.TableWalk(path, probe.h, probe.tableRoot,
-            rid - 1, rid))
-      case set: SqliteRowidSetPartition =>
-        set.rowids.iterator.map(rid =>
-          new SqliteFile.TableWalk(path, set.h, set.tableRoot,
-            rid - 1, rid))
-      case in: SqliteIndexInPartition =>
-        in.values.flatMap { v =>
-          SqliteIndex.rangeRowids(path, in.h, in.idx,
-            SqliteIndex.KeyRange(Some(v), loInc = true,
-              Some(v), hiInc = true))._1
-        }.distinct.sorted.iterator.map(rid =>
-          new SqliteFile.TableWalk(path, in.h, in.tableRoot,
-            rid - 1, rid))
-      case other => throw new IllegalStateException(
-        s"unknown sqlite partition ${other.getClass.getName}")
-    }
-    new PartitionReader[InternalRow] {
-      private lazy val walks = walkPlan
-      private var cur: SqliteFile.TableWalk = _
-      private var row: InternalRow = _
-
+    new SqliteWalkReader(path, part) {
       private def toCatalyst(v: Any): Any = v match {
         case null => null
         case s: String => UTF8String.fromString(s)
         case other => other // Long, Double, Array[Byte]
       }
 
-      private def materialize(rowid: Long,
-                              vals: IndexedSeq[Any]): InternalRow = {
+      override protected def toRow(rowid: Long,
+                                   vals: IndexedSeq[Any]): InternalRow = {
         val out = new Array[Any](slots.length)
         var j = 0
         while (j < slots.length) {
@@ -920,33 +916,6 @@ private[sources] final class SqliteReaderFactory(path: String,
         }
         new org.apache.spark.sql.catalyst.expressions
           .GenericInternalRow(out)
-      }
-
-      override def next(): Boolean = wrRecords match {
-        case Some(it) =>
-          if (!it.hasNext) false
-          else { row = materialize(0L, it.next()); true }
-        case None =>
-          while (true) {
-            if (cur == null) {
-              if (!walks.hasNext) return false
-              cur = walks.next()
-            }
-            if (cur.hasNext) {
-              val (rowid, vals) = cur.next()
-              row = materialize(rowid, vals)
-              return true
-            }
-            cur.close(); cur = null
-          }
-          false
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit = {
-        if (cur != null) { cur.close(); cur = null }
-        // WR walkers self-close at exhaustion; this covers early
-        // termination (close() is idempotent)
-        wrWalkers.foreach(_.close())
       }
     }
   }

@@ -644,13 +644,13 @@ object SqliteFile {
     } finally pf.close()
   }
 
-  /** Subtree roots packed into at most `maxPartitions` runs of
-    * neighbouring roots: one run per Spark task.
+  /** Subtree walks packed into at most `maxPartitions` runs of
+    * neighbouring walks: one run per Spark task.
     */
-  private[sources] def groupSubtrees(roots: Seq[Int],
-                                     maxPartitions: Int): Seq[Seq[Int]] =
-    roots.grouped(
-      math.max(1, (roots.size + maxPartitions - 1) / maxPartitions)).toSeq
+  private[sources] def groupSubtrees[A](walks: Seq[A],
+                                        maxPartitions: Int): Seq[Seq[A]] =
+    walks.grouped(
+      math.max(1, (walks.size + maxPartitions - 1) / maxPartitions)).toSeq
 
   /** The largest rowid in a rowid table — the incremental-read
     * watermark. O(tree depth): follows the rightmost pointer spine to
@@ -665,7 +665,7 @@ object SqliteFile {
   /** As above against a CALLER-snapshotted header, so two spine walks
     * of one result row (MIN and MAX of the agg pushdown) read the
     * same committed WAL/journal overlay even under a concurrent
-    * writer (round-16 ADVICE fix — the SqliteSubtrees discipline).
+    * writer (round-16 ADVICE fix — the SqliteWalkPartition discipline).
     */
   def maxRowid(path: String, h: Header, table: TableDef): Option[Long] =
     spineRowid(path, h, table, rightmost = true)

@@ -830,7 +830,7 @@ object SqliteIndex {
 
   /** As above with a caller-snapshotted header — the DSv2 scan passes
     * the plan-time header so every task of one batch sees the same
-    * committed WAL/journal overlay (the SqliteSubtrees discipline).
+    * committed WAL/journal overlay (the SqliteWalkPartition discipline).
     * Equality is the degenerate closed range [v, v]: the range walk's
     * descent decisions are IDENTICAL to the original point walk
     * (closed hull ≡ prev ≤ v ∧ cur ≥ v), so the spec-pinned

@@ -1,5 +1,7 @@
 package graft.sources
 
+import SqliteFile.be
+
 /** Reader for SQLite's ROLLBACK-JOURNAL file format (round 14 —
   * https://www.sqlite.org/fileformat2.html §3, "The Rollback Journal";
   * the symmetric twin of round 13's [[SqliteWal]]): a non-empty
@@ -51,12 +53,6 @@ object SqliteJournal {
 
   private val Magic =
     Array(0xd9, 0xd5, 0x05, 0xf9, 0x20, 0xa1, 0x63, 0xd7).map(_.toByte)
-
-  private def be(b: Array[Byte], off: Int, n: Int): Long = {
-    var v = 0L; var i = 0
-    while (i < n) { v = (v << 8) | (b(off + i) & 0xffL); i += 1 }
-    v
-  }
 
   /** sqlite pager_cksum: nonce + every-200th byte from the tail. */
   private[sources] def recordCksum(nonce: Long, page: Array[Byte]): Long = {

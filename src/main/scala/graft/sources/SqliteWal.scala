@@ -1,5 +1,7 @@
 package graft.sources
 
+import SqliteFile.be
+
 /** Reader for SQLite's write-ahead-log FILE FORMAT (round 13 —
   * https://www.sqlite.org/fileformat2.html §4, "WAL File Format"):
   * replays the COMMITTED frame prefix of a `-wal` sibling so
@@ -48,12 +50,6 @@ object SqliteWal {
   final case class WalInfo(pageSize: Int, dbPages: Int,
                            overrides: Map[Int, Long],
                            frames: Int, committed: Int)
-
-  private def be(b: Array[Byte], off: Int, n: Int): Long = {
-    var v = 0L; var i = 0
-    while (i < n) { v = (v << 8) | (b(off + i) & 0xffL); i += 1 }
-    v
-  }
 
   /** One cumulative checksum step over n bytes (n % 8 == 0): word
     * pairs in the byte order the wal magic selected, mod 2^32.

@@ -184,6 +184,11 @@ class SqliteFileSpec extends SparkFunSuite {
       assert(e.getMessage.contains("maxPartitions") &&
         e.getMessage.contains(s"got $n"), e.getMessage)
     }
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("sqlite").option("path", db).option("table", "big")
+        .option("maxPartitions", "abc").load().count())
+    assert(e.getMessage.contains("maxPartitions") &&
+      e.getMessage.contains("got abc"), e.getMessage)
   }
 
   test("journal siblings (round 14): cold/garbage journals are ignored, " +

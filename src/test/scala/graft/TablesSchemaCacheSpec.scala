@@ -163,6 +163,24 @@ class TablesSchemaCacheSpec extends SparkFunSuite {
     }
   }
 
+  test("building q_did again runs no job; it answers one row, and none " +
+      "when an arm is empty") {
+    val did = SparkEntry.queries("q_did")
+    did(spark, sf) // fills the entry of its one table
+    val jobs = jobsStartedBy(did(spark, sf))
+    assert(jobs == 0, s"$jobs jobs ran while building q_did")
+    assert(did(spark, sf).count() == 1)
+    // only even users: the treated arm (user_id % 2 = 1) is empty
+    val dir = Files.createTempDirectory("q_did_one_arm")
+    try {
+      Tables.events(spark, sf).where("user_id % 2 = 0")
+        .selectExpr("event_id", "timestamp_micros(ts_us) AS ts", "user_id",
+          "event_type", "value", "props")
+        .write.parquet(dir.resolve("events.parquet").toString)
+      assert(did(spark, dir.toString).count() == 0)
+    } finally deleteTree(dir)
+  }
+
   private def deleteTree(p: Path): Unit =
     Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
 }
