@@ -271,10 +271,14 @@ private[sources] final class SqliteCatalogCdcStream(path: String,
     // one header snapshot for every table of the batch
     val h = SqliteFile.header(path)
     hi.toSeq.sortBy(_._1).flatMap { case (name, hiMark) =>
-      val t = live.getOrElse(name, throw new IllegalStateException(
-        s"$name: present in the end offset but not the catalog"))
-      SqliteRowidWalks.cdcBatch(path, h, t,
-        lo.getOrElse(name, Long.MinValue), hiMark, maxPartitions)
+      val loMark = lo.getOrElse(name, Long.MinValue)
+      live.get(name) match {
+        case Some(t) =>
+          SqliteRowidWalks.cdcBatch(path, h, t, loMark, hiMark, maxPartitions)
+        case None if hiMark == loMark => Nil // dropped with nothing to read
+        case None => throw new IllegalStateException(
+          s"$name: present in the end offset but not the catalog")
+      }
     }.toArray
   }
 

@@ -665,7 +665,7 @@ object SqliteFile {
   /** As above against a CALLER-snapshotted header, so two spine walks
     * of one result row (MIN and MAX of the agg pushdown) read the
     * same committed WAL/journal overlay even under a concurrent
-    * writer (round-16 ADVICE fix — the SqliteWalkPartition discipline).
+    * writer (the same plan-time snapshot a SqliteWalkPartition holds).
     */
   def maxRowid(path: String, h: Header, table: TableDef): Option[Long] =
     spineRowid(path, h, table, rightmost = true)

@@ -30,4 +30,16 @@ class SqliteCatalogOffsetSpec extends AnyFunSuite {
       assert(e.getMessage.contains("'t'"), e.getMessage)
     }
   }
+
+  test("an end-offset table gone from the catalog is skipped only when " +
+      "it has nothing new to read") {
+    val live = new SqliteCatalogCdcStream(
+      "src/test/resources/sqlite/index_fixture.db", "*", maxPartitions = 4)
+    val start = live.deserializeOffset("{}")
+    assert(live.planInputPartitions(start,
+      live.deserializeOffset(s"{\"gone\":${Long.MinValue}}")).isEmpty)
+    val e = intercept[IllegalStateException](live.planInputPartitions(start,
+      live.deserializeOffset("{\"gone\":5}")))
+    assert(e.getMessage.contains("gone"), e.getMessage)
+  }
 }
