@@ -1121,7 +1121,7 @@ object AnalyticsQueries {
       // re-evaluating means a second full events scan + collect_set
       val aud = Tables.events(s, d).groupBy("event_type")
         .agg(sort_array(collect_set(col("user_id"))).as("users"))
-        .localCheckpoint(true)
+        .transform(Tables.materialize)
       val a = aud.select(col("event_type").as("type_a"),
         col("users").as("users_a"))
       val b = aud.select(col("event_type").as("type_b"),
@@ -1168,7 +1168,7 @@ object AnalyticsQueries {
     // event-type transition graph — which journey state holds the
     // steady-state mass. Edge derivation = one lag-window pass + one
     // (src,dst) count shuffle; 12 power-iteration supersteps run on
-    // the bounded edge relation with per-superstep localCheckpoint
+    // the bounded edge relation with a per-superstep checkpoint
     // (the Pregel lineage discipline). All-integer fixed point: the
     // DuckDB recursive CTE replays every division bit-for-bit.
     "q_pagerank" -> Q { (s, d) =>
@@ -1210,9 +1210,9 @@ object AnalyticsQueries {
           .over(Window.partitionBy(col("user_id"))))
         .where(col("_n") <= 256)
         .drop("_n")
-        .localCheckpoint(true) // 3 readers: both join sides + counts
+        .transform(Tables.materialize) // 3 readers: both join sides + counts
       val nUsers1 = capped.select(col("user_id")).distinct()
-        .agg(count(lit(1)).as("n_users")).localCheckpoint(true)
+        .agg(count(lit(1)).as("n_users")).transform(Tables.materialize)
       val cnt = capped.groupBy(col("item")).agg(count(lit(1)).as("cnt"))
       val a = capped.select(col("user_id"), col("item").as("item_a"))
       val b = capped.select(col("user_id"), col("item").as("item_b"))
@@ -1285,7 +1285,7 @@ object AnalyticsQueries {
             (col("value").cast(d2) * 100).cast(LongType))
             .otherwise(0L).as("cents"))
       val coh = ev.groupBy("user_id").agg(min("w").as("cw"))
-        .localCheckpoint(true) // read by the grid AND the size agg
+        .transform(Tables.materialize) // read by the grid AND the size agg
       val sizes = coh.groupBy(col("cw")).agg(count(lit(1)).as("cohort_users"))
       val grid = ev.join(coh, "user_id")
         .groupBy(col("cw").as("cohort_week"),
@@ -1378,7 +1378,7 @@ object AnalyticsQueries {
       val shufflePartitions =
         s.conf.get("spark.sql.shuffle.partitions").toInt
       val ranged = dist.repartitionByRange(shufflePartitions, col("x"))
-        .localCheckpoint(true)
+        .transform(Tables.materialize)
       val withPid = ranged.withColumn("pid", spark_partition_id())
       val pidCounts = withPid.groupBy("pid")
         .agg(sum(col("c")).as("pc"))

@@ -157,8 +157,8 @@ object DedupQueries {
       // collapses into the single-row-group scan task and evaluates
       // the count-regex tree serially there, twice (once for the
       // filter, once for the projected quality). The barriered rows
-      // are (doc_id, quality) — ~16 B/row; mode + scale notes:
-      // Tables.barrier (conf graft.pipeline.barrier, r18).
+      // are (doc_id, quality) — ~16 B/row, materialized by
+      // Tables.barrier's default mode (Tables.materialize).
       val base = Tables.spread(Tables.documents(s, d)).select(
         col("doc_id"),
         length(col("text")).cast("long").as("n_chars"),

@@ -170,36 +170,47 @@ object Tables {
   private def versionOf(df: DataFrame): Seq[(String, Long, Long)] =
     listedFiles(df).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
 
+  /** The one materialization rule for a reused or fenced intermediate:
+    * an eager reliable `checkpoint` when the SparkContext has a
+    * checkpoint directory (`setCheckpointDir`, or Spark's own
+    * `spark.checkpoint.dir`), else an eager `localCheckpoint`.
+    *
+    * Both truncate lineage. With a directory the rows are files there,
+    * so a lost executor costs a re-read, not the query; Spark removes
+    * those files only when `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * is on. Without one the rows are executor-local blocks: the plan
+    * and the local-mode behaviour are those of `localCheckpoint`, and a
+    * lost executor fails any query that still reads them. Every
+    * checkpoint in the library goes through here (a source-scan spec
+    * pins that).
+    */
+  def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
+
   /** Conf key for [[barrier]]: `checkpoint` (default) | `persist` |
     * `off`.
     */
   val BarrierModeKey = "graft.pipeline.barrier"
 
   /** Plan barrier for a computed heavy projection that a pushed-down
-    * filter would otherwise re-evaluate below the exchange (the r17
-    * pipeline_clean pathology — guide §4's double-evaluation over a
-    * computed column). Three modes (VERDICT r17 #8), all
-    * ROW-IDENTICAL (spec-pinned in BarrierModeSpec):
+    * filter would otherwise re-evaluate below the exchange (the
+    * pipeline_clean pathology: a filter over a computed column
+    * evaluated twice). All three modes are row-identical
+    * (BarrierModeSpec):
     *
-    *  - `checkpoint` (default): `localCheckpoint(eager)` — cheapest
-    *    barrier, but it TRUNCATES LINEAGE (a lost executor past the
-    *    barrier fails the query instead of recomputing) and pins the
-    *    projection in executor block storage. Sizing: callers pass
-    *    ID-plus-scalars projections (~16-40 B/row), so even 10¹⁰ docs
-    *    checkpoint ~400 GB cluster-wide — real but bounded; at that
-    *    scale prefer `persist`.
-    *  - `persist`: StorageLevel.MEMORY_AND_DISK persist — keeps
-    *    lineage (fault-tolerant) and spills instead of pinning, at
-    *    the cost of possible recomputation under memory pressure.
-    *    Nothing here unpersists it: its blocks are freed only by LRU
-    *    eviction or by the caller's explicit unpersist (or
+    *  - `checkpoint` (default): [[materialize]]. Sizing: callers pass
+    *    ID-plus-scalars projections (~16-40 B/row).
+    *  - `persist`: MEMORY_AND_DISK persist, which keeps lineage and
+    *    spills. Nothing here unpersists it: its blocks are freed by LRU
+    *    eviction or by the caller's unpersist (or
     *    `spark.catalog.clearCache()`).
-    *  - `off`: no barrier — correct, but the pushed-down filter may
-    *    re-evaluate the heavy expression tree below the exchange.
+    *  - `off`: no barrier; correct, but the pushed-down filter may
+    *    re-evaluate the heavy expression below the exchange.
     */
   def barrier(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption(BarrierModeKey).getOrElse("checkpoint") match {
-      case "checkpoint" => df.localCheckpoint(eager = true)
+      case "checkpoint" => materialize(df)
       case "persist" =>
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       case "off" => df

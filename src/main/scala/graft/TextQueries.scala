@@ -345,8 +345,8 @@ object TextQueries {
       // evaluating the whole scrub-regex tree serially there (and a
       // second time above for the projection). The barrier makes scrub
       // run once, parallel, post-exchange; the stored rows are
-      // (doc_id, n_tokens, quality, h) — ~32 B/row. Mode + scale
-      // notes: Tables.barrier (conf graft.pipeline.barrier, r18).
+      // (doc_id, n_tokens, quality, h) — ~32 B/row, materialized by
+      // Tables.barrier's default mode (Tables.materialize).
       val scored = Tables.barrier(graft.operators.CleanPipeline.scored(
         docsIn(s, d).select("doc_id", "text")))
       val w = Window.partitionBy("h").orderBy("doc_id")
@@ -434,7 +434,7 @@ object TextQueries {
           explode(graft.operators.Contamination.wordShingles(col("text"), 8))
             .as("_w"))
         .select(col("doc_id"), xxhash64(col("_w")).as("_wh"))
-        .localCheckpoint(true)
+        .transform(Tables.materialize)
       val claims = rows.groupBy("_wh").agg(min("doc_id").as("claimant"))
       rows.join(claims, "_wh")
         .groupBy("doc_id")
@@ -591,7 +591,7 @@ object TextQueries {
       // scores feed the count, the boundary agg AND the labeling
       // join — persist once (the multiply-referenced-intermediate rule)
       val scores = graft.operators.QualityRules.lmScore(
-        Tables.documents(s, d), "doc_id", "text").localCheckpoint(true)
+        Tables.documents(s, d), "doc_id", "text").transform(Tables.materialize)
       graft.operators.QualityRules.ccnetBuckets(scores, "doc_id")
         .orderBy("doc_id")
     },
@@ -606,7 +606,7 @@ object TextQueries {
     // broadcast of the 1-row boundary frame + one shuffle to shards.
     "pipeline_ccnet_export" -> Q { (s, d) =>
       val scores = graft.operators.QualityRules.lmScore(
-        Tables.documents(s, d), "doc_id", "text").localCheckpoint(true)
+        Tables.documents(s, d), "doc_id", "text").transform(Tables.materialize)
       val kept = graft.operators.QualityRules
         .ccnetBuckets(scores, "doc_id")
         .filter(col("bucket") =!= "tail")

@@ -219,7 +219,7 @@ object HllPortable {
   def pairwiseOverlap(df: DataFrame, groupCol: String, value: Column): DataFrame = {
     // registers: #groups × ≤1024 rows — materialize once, reused by
     // the per-group estimates and both sides of every pair merge
-    val regs = registers(df, Seq(groupCol), value).localCheckpoint(true)
+    val regs = registers(df, Seq(groupCol), value).transform(graft.Tables.materialize)
     val est = estimateFromRegisters(regs, Seq(groupCol), "uniq")
     val groups = regs.select(col(groupCol)).distinct()
     val pairs = groups.select(col(groupCol).as("g_a"))

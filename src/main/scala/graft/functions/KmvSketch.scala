@@ -118,13 +118,13 @@ object KmvSketch {
       .where(col("s").isin(labelA, labelB) && col("v").isNotNull)
       .select(col("s"), h40(col("v")).as("h"))
       .distinct() // dedup at the 40-bit level — the sketch's domain
-    // localCheckpoint: BOTH label filters below read this 2-row
+    // materialize: BOTH label filters below read this 2-row
     // relation — without it each side re-derives the sketch from a
     // full scan (the multiply-referenced-intermediate rule; plan-
     // pinned in KmvSketchSpec)
     val sk = hashed.groupBy(col("s"))
       .agg(kmin(k)(col("h")).as("ks"), count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .transform(graft.Tables.materialize)
     val a = sk.where(col("s") === labelA)
       .select(col("ks").as("ka"), col("cnt").as("exact_a"))
     val b = sk.where(col("s") === labelB)

@@ -181,7 +181,7 @@ object ChAnalytics {
     // would re-run the full input aggregation a second time
     val bounds = src.groupBy(col("grp"))
       .agg(min(col("__o")).as("__lo"), max(col("__o")).as("__hi"))
-      .localCheckpoint(true)
+      .transform(graft.Tables.materialize)
     guardGrid(bounds, step, maxRowsPerSeries, "withFillInterpolate")
     val grid = bounds.select(col("grp"),
       explode(sequence(col("__lo"), col("__hi"), lit(step))).as("__o"))
@@ -223,7 +223,7 @@ object ChAnalytics {
       value.as("__v"))
     val bounds = src.groupBy(col("grp"))
       .agg(min(col("__o")).as("__lo"), max(col("__o")).as("__hi"))
-      .localCheckpoint(true) // see withFillInterpolate
+      .transform(graft.Tables.materialize) // see withFillInterpolate
     guardGrid(bounds, step, maxRowsPerSeries, "withFillLocf")
     val grid = bounds.select(col("grp"),
       explode(sequence(col("__lo"), col("__hi"), lit(step))).as("__o"))

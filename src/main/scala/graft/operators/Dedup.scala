@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.LocalFs
+import graft.Tables.materialize
 
 /** Deduplication family for the training-data pipeline (SURVEY.md §2
   * C1-C4). Scale invariant shared by every member: FULL TEXT NEVER
@@ -11,50 +11,13 @@ import graft.sinks.LocalFs
   * 64-bit simhashes) are computed map-side in one scan; only
   * (key, doc_id, signature) tuples cross the network. Candidate
   * generation is always bucket-equi-join (never cross join), so pair
-  * count is bounded by bucket occupancy, not n².
+  * count is bounded by bucket occupancy, not n². Multiply-referenced
+  * intermediates (signature tables, per-round label tables: read by
+  * self-joins, estimate joins and convergence checks) go through
+  * [[graft.Tables.materialize]]; without it Spark recomputes the whole
+  * upstream per reference.
   */
 object Dedup {
-
-  // ------------------------------------------------------ materialization
-
-  /** Strategy for materializing multiply-referenced intermediates (the
-    * signature tables and per-iteration label tables). Needed because
-    * those tables are consumed 2+ times (self-joins, estimate joins,
-    * convergence checks) — without materialization Spark would
-    * recompute the whole upstream per reference.
-    */
-  type Persist = DataFrame => DataFrame
-
-  /** Executor-local blocks (`localCheckpoint`): fastest, zero I/O
-    * outside the executors — but the blocks die with an executor, and
-    * with them the job. The right default for local / interactive use.
-    */
-  val localPersist: Persist = _.localCheckpoint(eager = true)
-
-  /** Cluster-durable: write-then-read parquet under `dir` (HDFS/S3 at
-    * scale). Survives executor loss — a lost task re-reads the
-    * materialized table instead of killing the 100-TB dedup. The
-    * tables persisted this way are signatures and labels (8-100 bytes
-    * a row), thousands of times smaller than the text, so the extra
-    * I/O is noise next to the corpus scan.
-    *
-    * Each call owns a unique `run_<token>` subdirectory, so two
-    * Persist instances over the same `dir` (concurrent jobs, retried
-    * drivers) never clobber each other's materializations (ADVICE r6).
-    * LIFECYCLE IS CALLER-OWNED: intermediates stay referenced by the
-    * returned DataFrames' lineage, so nothing here can know when
-    * deletion is safe — delete `dir` (or the run subdir) once the
-    * results are consumed, as the dedup specs do.
-    */
-  def reliablePersist(dir: String): Persist = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val n = new java.util.concurrent.atomic.AtomicLong()
-    df => {
-      val path = s"$dir/run_$token/mat_${n.getAndIncrement()}"
-      LocalFs.writer(df.write).mode("overwrite").parquet(path)
-      df.sparkSession.read.parquet(path)
-    }
-  }
 
   // ------------------------------------------------- cost-based side joins
 
@@ -276,7 +239,7 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.5, nHashes: Int = 128,
-                   bands: Int = 32, persist: Persist = localPersist,
+                   bands: Int = 32,
                    maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
     require(nHashes == graft.functions.MinHash128.NumHashes,
       "the fused signature kernel is fixed at 128 hashes")
@@ -284,8 +247,8 @@ object Dedup {
     // and estimate would otherwise recompute signatures per reference;
     // at cluster scale this is a checkpoint of the signature table,
     // thousands of times smaller than the text)
-    minhashPairsFromSigs(persist(signatures(docs, idCol, textCol)),
-      threshold, nHashes, bands, persist, maxCandidates)
+    minhashPairsFromSigs(materialize(signatures(docs, idCol, textCol)),
+      threshold, nHashes, bands, maxCandidates)
   }
 
   /** [[minhashPairs]] from a PRECOMPUTED (doc_id, sig) table — the
@@ -303,7 +266,6 @@ object Dedup {
     */
   def minhashPairsFromSigs(sigs: DataFrame, threshold: Double = 0.5,
                            nHashes: Int = 128, bands: Int = 32,
-                           persist: Persist = localPersist,
                            maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
     val rowsPerBand = nHashes / bands
     // candidates travel as BARE ID PAIRS (16 bytes/row) through the
@@ -312,7 +274,7 @@ object Dedup {
     // dropDuplicates (the previous form) shuffled ~2 KB per duplicate
     // band hit — the dominant cost on low-entropy corpora where
     // candidates are plentiful.
-    val banded = persist(sigs.select(col("doc_id"),
+    val banded = materialize(sigs.select(col("doc_id"),
         explode(expr(s"transform(sequence(0, ${bands - 1}), " +
           s"b -> named_struct('band', b, 'bh', xxhash64(slice(sig, b * $rowsPerBand + 1, $rowsPerBand))))")).as("bb"))
       .select(col("doc_id"), col("bb.band"), col("bb.bh")))
@@ -389,17 +351,16 @@ object Dedup {
     */
   def minhashVerifiedPairs(docs: DataFrame, idCol: String, textCol: String,
                            threshold: Double = 0.5,
-                           persist: Persist = localPersist,
                            maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
     // ONE corpus scan computes both per-doc artifacts (round 10 —
     // signatures for the candidate stage, sorted gram sets for the
     // exact verify; separately they each re-read and re-parsed the
     // text), materialized together; the selects below hit the blocks
-    val both = persist(graft.Tables.spread(docs).select(col(idCol).as("doc_id"),
+    val both = materialize(graft.Tables.spread(docs).select(col(idCol).as("doc_id"),
       graft.functions.MinHash128.signature(col(textCol)).as("sig"),
       graft.functions.ShingleSet.sorted(col(textCol)).as("ngs")))
     val cand = minhashPairsFromSigs(both.select("doc_id", "sig"), threshold,
-      persist = persist, maxCandidates = maxCandidates)
+      maxCandidates = maxCandidates)
     val sets = both.select("doc_id", "ngs")
     val szA = size(col("ngs_a")); val szB = size(col("ngs_b"))
     val need = floor(lit(threshold / (1.0 + threshold)) *
@@ -507,9 +468,8 @@ object Dedup {
   def connectedComponents(pairs: DataFrame,
                           aCol: String = "doc_a", bCol: String = "doc_b",
                           maxIter: Int = 50,
-                          persist: Persist = localPersist,
                           smallGraphEdges: Long = SmallGraphEdges): DataFrame =
-    connectedComponentsWithRounds(pairs, aCol, bCol, maxIter, persist,
+    connectedComponentsWithRounds(pairs, aCol, bCol, maxIter,
       smallGraphEdges)._1
 
   /** Small-graph fast-path gate (round 16, the PageRank precedent):
@@ -532,7 +492,7 @@ object Dedup {
     */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
-      maxIter: Int = 50, persist: Persist = localPersist,
+      maxIter: Int = 50,
       smallGraphEdges: Long = SmallGraphEdges): (DataFrame, Int) = {
     // driver-side union-find fast path: integral ids only (every
     // dedup caller keys on long doc ids; other key types take the
@@ -620,9 +580,9 @@ object Dedup {
       }
     }
 
-    val nodes = persist(pairs.select(col(aCol).as("n"))
+    val nodes = materialize(pairs.select(col(aCol).as("n"))
       .union(pairs.select(col(bCol).as("n"))).distinct())
-    var edges = persist(pairs
+    var edges = materialize(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct())
@@ -660,7 +620,7 @@ object Dedup {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val next = persist(smallStar(largeStar(edges)))
+      val next = materialize(smallStar(largeStar(edges)))
       // canonical distinct sets: equal counts + empty one-way except
       // <=> set equality. The count gates the except: while the loop
       // is still moving, counts differ and each round pays ONE action,
@@ -693,10 +653,9 @@ object Dedup {
     */
   def minhashClusters(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.5,
-                      persist: Persist = localPersist,
                       maxCandidates: Long = DefaultMaxCandidates): DataFrame =
-    connectedComponents(persist(minhashPairs(docs, idCol, textCol, threshold,
-      persist = persist, maxCandidates = maxCandidates)), persist = persist)
+    connectedComponents(materialize(minhashPairs(docs, idCol, textCol, threshold,
+      maxCandidates = maxCandidates)))
 
   /** Cluster-representative selection (SURVEY §2 C26): keep the
     * highest-QUALITY member of each near-dup cluster, not the smallest
@@ -712,11 +671,10 @@ object Dedup {
     */
   def keepBest(docs: DataFrame, idCol: String, textCol: String,
                quality: Column, threshold: Double = 0.5,
-               persist: Persist = localPersist,
                maxCandidates: Long = DefaultMaxCandidates): DataFrame =
     keepBestWithClusters(docs, idCol,
-      minhashClusters(docs, idCol, textCol, threshold, persist,
-        maxCandidates), quality)
+      minhashClusters(docs, idCol, textCol, threshold, maxCandidates),
+      quality)
 
   /** [[keepBest]] against PRECOMPUTED cluster labels (any DataFrame of
     * (idCol, cluster_id) — normally [[minhashClusters]]' output,
@@ -759,9 +717,8 @@ object Dedup {
     * pigeonhole), then exact hamming via bit_count(xor).
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3,
-                   persist: Persist = localPersist): DataFrame = {
-    val sigs = persist(docs.select(col(idCol).as("doc_id"), simhash(col(textCol)).as("sh")))
+                   maxHamming: Int = 3): DataFrame = {
+    val sigs = materialize(docs.select(col(idCol).as("doc_id"), simhash(col(textCol)).as("sh")))
     val banded = sigs.select(col("doc_id"), col("sh"),
         explode(expr("transform(sequence(0, 3), " +
           "k -> named_struct('band', k, 'bh', (sh >> (k * 16)) & 65535))")).as("bb"))
@@ -787,11 +744,10 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         threshold: Double = 0.4,
-                        persist: Persist = localPersist,
                         strategy: String = "auto",
                         maxCandidates: Long = DefaultMaxCandidates): DataFrame =
     exactSetPairs(docs, idCol, textCol, threshold, ordered = false,
-      persist, strategy, maxCandidates)
+      strategy, maxCandidates)
 
   /** Exact n-gram CONTAINMENT pairs (SURVEY §2 C28) — the ASYMMETRIC
     * overlap c(a→b) = |A∩B| / |A| that Jaccard misses: a short doc
@@ -802,11 +758,10 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double = 0.9,
-                       persist: Persist = localPersist,
                        strategy: String = "auto",
                        maxCandidates: Long = DefaultMaxCandidates): DataFrame =
     exactSetPairs(docs, idCol, textCol, threshold, ordered = true,
-      persist, strategy, maxCandidates)
+      strategy, maxCandidates)
 
   /** Shared core of the exact set-overlap pair joins.
     *
@@ -863,10 +818,10 @@ object Dedup {
     */
   private def exactSetPairs(docs: DataFrame, idCol: String, textCol: String,
                             threshold: Double, ordered: Boolean,
-                            persist: Persist, strategy: String,
+                            strategy: String,
                             maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sets = persist(graft.Tables.spread(docs).select(col(idCol).as("doc_id"),
+    val sets = materialize(graft.Tables.spread(docs).select(col(idCol).as("doc_id"),
       graft.functions.ShingleSet.sorted(col(textCol)).as("ngs")))
     val inverted = sets.select(col("doc_id"), size(col("ngs")).as("sz"),
       explode(col("ngs")).as("ng"))
@@ -989,7 +944,7 @@ object Dedup {
       }
       else if (resolved == "lsh") {
         val cand = minhashPairs(docs, idCol, textCol, threshold,
-            persist = persist, maxCandidates = maxCandidates)
+            maxCandidates = maxCandidates)
           .select("doc_a", "doc_b")
         mergeVerify(
           sideJoin(sideJoin(cand, la, "doc_a", setBytes), rb, "doc_b", setBytes))

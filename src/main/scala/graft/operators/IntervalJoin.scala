@@ -55,7 +55,7 @@ object IntervalJoin {
       .observe(observed,
         max(expr(s"(__hi div $bucketWidth) - (__lo div $bucketWidth)")).as("worst"),
         count(lit(1)).as("rows"))
-      .localCheckpoint(true)
+      .transform(graft.Tables.materialize)
     val worst = observed.get("worst").asInstanceOf[java.lang.Long]
     val rows = observed.get("rows").asInstanceOf[java.lang.Long].longValue
     if (worst != null && worst + 1 > maxBucketsPerInterval)

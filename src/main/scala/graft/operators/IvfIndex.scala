@@ -173,7 +173,7 @@ object IvfIndex {
     val v = (if (ratio > 1L)
         all.where(pmod(xxhash64(lit(0x5eedL), col("v")), lit(ratio)) === 0L)
       else all)
-      .localCheckpoint(true) // read once; every iteration reuses it
+      .transform(graft.Tables.materialize) // read once; every iteration reuses it
     val seedRows = v
       .groupBy(pmod(xxhash64(col("v")), lit(nList.toLong)).as("b"))
       .agg(min(col("v")).as("v"))
@@ -217,7 +217,7 @@ object IvfIndex {
     }
     // the checkpointed sample's blocks are released by the
     // ContextCleaner once this frame is unreachable (Dataset.unpersist
-    // does NOT reach localCheckpoint blocks — it only uncaches
+    // does NOT reach checkpoint blocks — it only uncaches
     // CacheManager entries); the returned model holds no reference
     model
   }
@@ -273,7 +273,7 @@ object IvfIndex {
       else all)
     val withC1 = sampled
       .withColumn("c1", assignCell(col("v"), m1))
-      .localCheckpoint(true)
+      .transform(graft.Tables.materialize)
     // per-super-cell seeding: salted hash buckets, lexicographic min
     val seedRows = withC1
       .groupBy(col("c1"),
@@ -478,7 +478,7 @@ object IvfIndex {
                   r2: Double, nProbe: Int = 2, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     val indexed = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("_cv"),
-      assignCell(col(vecCol), model).as("cell")).localCheckpoint(true)
+      assignCell(col(vecCol), model).as("cell")).transform(graft.Tables.materialize)
     val pc = probes.select(col(idCol).as("probe_id"),
       explode(probeCells(col(vecCol), model, nProbe)).as("cell"))
     val pv = probes.select(col(idCol).as("probe_id"), col(vecCol).as("_pv"))

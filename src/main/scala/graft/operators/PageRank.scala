@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * map-side-combined (src,dst) count shuffle over raw rows. The
   * iteration runs on the EDGE relation only (#distinct node pairs),
   * each superstep one shuffle join on src + one partial-agg on dst,
-  * with `localCheckpoint` truncating lineage per superstep (the
+  * with [[graft.Tables.materialize]] truncating lineage per superstep (the
   * Pregel discipline — without it the plan doubles per iteration).
   * Ranks are #nodes rows; at dimension-table size Spark's AQE
   * broadcasts the rank side of the join on its own.
@@ -83,7 +83,7 @@ object PageRank {
       .select(col("src"), col("dst"), expr(s"(w * $P30) div outw").as("p30"))
       .union(nodes.select(col("node").as("src"), col("node").as("dst"),
         lit(0L).as("p30")))
-      .localCheckpoint(true)
+      .transform(graft.Tables.materialize)
     val nEdges = eAug.count() // bounded action on the checkpointed relation
 
     if (nEdges <= smallGraphEdges) {
@@ -109,7 +109,7 @@ object PageRank {
 
     // ---- distributed Pregel loop ---------------------------------
     // N as a 1-row bounded relation (the 1-row crossJoin composition)
-    val n1 = nodes.agg(count(lit(1)).as("n")).localCheckpoint(true)
+    val n1 = nodes.agg(count(lit(1)).as("n")).transform(graft.Tables.materialize)
     // Per-node teleport mass derives from the SAME damping parameter
     // as the contribution term — (1-d)·Scale — so teleport + damped
     // mass sums to 1 for ANY damping100, not just the default 85
@@ -117,7 +117,7 @@ object PageRank {
     val teleport = expr(s"(${(100L - damping100) * Scale / 100}L div n)")
     var r = nodes.crossJoin(n1)
       .select(col("node"), expr(s"${Scale}L div n").as("r"))
-      .localCheckpoint(true)
+      .transform(graft.Tables.materialize)
     for (_ <- 1 to iters) {
       val contrib = r.join(eAug, col("node") === col("src"))
         .groupBy(col("dst"))
@@ -126,7 +126,7 @@ object PageRank {
         .select(col("dst").as("node"),
           (teleport + expr(s"(${damping100}L * csum) div 100"))
             .as("r"))
-        .localCheckpoint(true)
+        .transform(graft.Tables.materialize)
     }
     r.select(col("node"), col("r").as("rank_ppb"))
   }

@@ -70,20 +70,17 @@ object PqIndex {
   def lut(vec: Column, model: PqModel): Column =
     graft.functions.VectorOps.pqLut(vec, model.subCentroids)
 
-  /** EAGER: materialize the coded corpus BEFORE the serving join —
-    * the coded corpus IS the index (ids + cells + m-byte codes; what
-    * a production deployment stores), and leaving it lazy lets
-    * whole-stage codegen defer the encode/assignment projection into
-    * the join's emit path, re-evaluating it PER CANDIDATE instead of
-    * per corpus row. Measured (AnnDiag, round 12, 20k-vector mog
-    * corpus, 100 probes, nProbe 16): topKIvf2 28.2 s → 0.20 s (140×;
-    * the two-level assignment tree is the expensive deferred expr),
-    * topKIvf ~2× from the deferred PqCodes alone. localCheckpoint
-    * truncates lineage; blocks release via the ContextCleaner once
-    * the serve result is unreachable.
-    */
-  private def materializeIndex(coded: DataFrame): DataFrame =
-    coded.localCheckpoint(true)
+  // EAGER: every encode below materializes the coded corpus
+  // (graft.Tables.materialize) BEFORE the serving join — the coded
+  // corpus IS the index (ids + cells + m-byte codes; what a production
+  // deployment stores), and leaving it lazy lets whole-stage codegen
+  // defer the encode/assignment projection into the join's emit path,
+  // re-evaluating it PER CANDIDATE instead of per corpus row. Measured
+  // (AnnDiag, round 12, 20k-vector mog corpus, 100 probes, nProbe 16):
+  // topKIvf2 28.2 s → 0.20 s (140×; the two-level assignment tree is
+  // the expensive deferred expr), topKIvf ~2× from the deferred PqCodes
+  // alone.
+  //
   // Callers wrap the corpus in Tables.spread BEFORE the encode
   // projection (round 18): the checkpoint pins the scan's partition
   // count, so an under-split corpus file would both encode serially
@@ -98,7 +95,7 @@ object PqIndex {
     */
   def topK(corpus: DataFrame, probes: DataFrame, model: PqModel, k: Int,
            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val coded = materializeIndex(graft.Tables.spread(corpus)
+    val coded = graft.Tables.materialize(graft.Tables.spread(corpus)
       .select(col(idCol).as("vec_id"),
         encode(col(vecCol), model).as("codes")))
     val p = probes.select(col(idCol).as("probe_id"),
@@ -139,7 +136,7 @@ object PqIndex {
   def topKIvf(corpus: DataFrame, probes: DataFrame, ivf: IvfIndex.Model,
               model: PqModel, k: Int, nProbe: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val coded = materializeIndex(graft.Tables.spread(corpus)
+    val coded = graft.Tables.materialize(graft.Tables.spread(corpus)
       .select(col(idCol).as("vec_id"),
         encode(col(vecCol), model).as("codes"),
         IvfIndex.assignCell(col(vecCol), ivf).as("cell")))
@@ -161,7 +158,7 @@ object PqIndex {
   def topKIvf2(corpus: DataFrame, probes: DataFrame, ivf2: IvfIndex.Model2,
                model: PqModel, k: Int, nProbe1: Int = 2, nProbe: Int = 4,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val coded = materializeIndex(graft.Tables.spread(corpus)
+    val coded = graft.Tables.materialize(graft.Tables.spread(corpus)
       .select(col(idCol).as("vec_id"),
         encode(col(vecCol), model).as("codes"),
         IvfIndex.assignCell2(col(vecCol), ivf2).as("cell")))
@@ -249,7 +246,7 @@ object PqIndex {
                       ivf: IvfIndex.Model, model: PqModel, k: Int,
                       nProbe: Int = 4, idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    val coded = materializeIndex(graft.Tables.spread(corpus)
+    val coded = graft.Tables.materialize(graft.Tables.spread(corpus)
       .withColumn("cell", IvfIndex.assignCell(col(vecCol), ivf))
       .select(col(idCol).as("vec_id"), col("cell"),
         encode(residual(col(vecCol), ivf, col("cell")), model).as("codes")))

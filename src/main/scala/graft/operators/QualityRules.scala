@@ -156,8 +156,7 @@ object QualityRules {
     * oracle groups the bigram STRINGS, so a pass also proves the
     * hashing collision-free on the corpus.
     */
-  def lmScore(docs: DataFrame, idCol: String, textCol: String,
-              persist: Dedup.Persist = Dedup.localPersist): DataFrame = {
+  def lmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = tokens(col(textCol))
     // letCol-bound token array: one tokenize per row, not per bigram
     val bigrams = graft.functions.TextFunctions.letCol(toks)(t =>
@@ -166,9 +165,9 @@ object QualityRules {
     // the (id, hash) table feeds BOTH the count build and the score
     // join; Spark cannot reuse the exchange across them (the count
     // side prunes the id column -> a different scan), so without the
-    // persist seam the tokenize+shingle+hash pipeline runs twice --
+    // materialization the tokenize+shingle+hash pipeline runs twice --
     // the same recomputation the span/minhash families fixed
-    val bi = persist(docs.where(size(toks) >= 2)
+    val bi = graft.Tables.materialize(docs.where(size(toks) >= 2)
       .select(col(idCol), explode(bigrams).as("_bg"))
       .select(col(idCol), xxhash64(col("_bg")).as("_h")))
     val cnt = bi.groupBy("_h").agg(count(lit(1)).as("_cnt"))

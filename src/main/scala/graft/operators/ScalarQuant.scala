@@ -98,12 +98,10 @@ object ScalarQuant {
       element_at(mn, i + 1) + (c.cast("double") + lit(0.5)) * element_at(w, i + 1))
   }
 
-  /** EAGER coded index, same rationale as [[PqIndex]]: the coded
-    * corpus IS the index; leaving it lazy lets codegen re-encode per
-    * candidate inside the serving join (the round-12 140× bug class).
-    */
-  private def materializeIndex(coded: DataFrame): DataFrame =
-    coded.localCheckpoint(true)
+  // EAGER coded index (graft.Tables.materialize at each encode below),
+  // same rationale as PqIndex: the coded corpus IS the index; leaving it
+  // lazy lets codegen re-encode per candidate inside the serving join
+  // (the round-12 140× bug class).
 
   /** Shared asymmetric-distance scoring + (ad2 asc, vec_id) ranking:
     * exact probe vs bucket-midpoint reconstruction, folded in the
@@ -135,7 +133,7 @@ object ScalarQuant {
     // spread (round 18): the coded index inherits the scan's partition
     // count through the checkpoint; an under-split corpus file would
     // serialize the n×p ADC sweep onto one core. Identity at scale.
-    val coded = materializeIndex(graft.Tables.spread(corpus)
+    val coded = graft.Tables.materialize(graft.Tables.spread(corpus)
       .select(col(idCol).as("vec_id"),
         encode(col(vecCol), model).as("codes")))
     val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("_pv"))
@@ -153,7 +151,7 @@ object ScalarQuant {
   def topKIvf(corpus: DataFrame, probes: DataFrame, ivf: IvfIndex.Model,
               model: SqModel, k: Int, nProbe: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val coded = materializeIndex(graft.Tables.spread(corpus)
+    val coded = graft.Tables.materialize(graft.Tables.spread(corpus)
       .select(col(idCol).as("vec_id"),
         encode(col(vecCol), model).as("codes"),
         IvfIndex.assignCell(col(vecCol), ivf).as("cell")))

@@ -33,12 +33,12 @@ object SpanDedup {
     * it feeds both the frequency count and the join-back, and Spark
     * does NOT reuse the exchange — the count side prunes the id column
     * so the scans differ — which re-ran the whole tokenize+shingle+
-    * hash pipeline per consumer). 16 bytes/window of executor-local
-    * blocks; at cluster scale pass [[graft.operators.Dedup.reliablePersist]].
+    * hash pipeline per consumer) through [[graft.Tables.materialize]]:
+    * 16 bytes/window, reliably checkpointed when Spark has a
+    * checkpoint directory.
     */
-  def report(docs: DataFrame, idCol: String, textCol: String, w: Int,
-             persist: Dedup.Persist = Dedup.localPersist): DataFrame = {
-    val pairs = persist(graft.Tables.spread(docs)
+  def report(docs: DataFrame, idCol: String, textCol: String, w: Int): DataFrame = {
+    val pairs = graft.Tables.materialize(graft.Tables.spread(docs)
       .select(col(idCol),
         explode(Contamination.wordShingles(col(textCol), w)).as("_win"))
       .select(col(idCol), xxhash64(col("_win")).as("_wh")))
@@ -65,10 +65,9 @@ object SpanDedup {
     * the rebuild is pure executor-side HOF array work. A doc's state
     * is bounded by its own window count.
     */
-  def scrub(docs: DataFrame, idCol: String, textCol: String, w: Int,
-            persist: Dedup.Persist = Dedup.localPersist): DataFrame = {
+  def scrub(docs: DataFrame, idCol: String, textCol: String, w: Int): DataFrame = {
     val toks = tokenized(docs, idCol, textCol)
-    val dupStarts = dupStartRows(toks, idCol, w, persist)
+    val dupStarts = dupStartRows(toks, idCol, w)
       .groupBy(col(idCol)).agg(collect_list(col("_s")).as("_starts"))
     toks.join(dupStarts, Seq(idCol), "left")
       .withColumn("_starts", coalesce(col("_starts"), typedlit(Seq.empty[Int])))
@@ -99,11 +98,10 @@ object SpanDedup {
     * partitions, rows stream through with no arrays and no driver
     * involvement.
     */
-  def runs(docs: DataFrame, idCol: String, textCol: String, w: Int,
-           persist: Dedup.Persist = Dedup.localPersist): DataFrame = {
+  def runs(docs: DataFrame, idCol: String, textCol: String, w: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy(col(idCol)).orderBy(col("_s"))
-    dupStartRows(tokenized(docs, idCol, textCol), idCol, w, persist)
+    dupStartRows(tokenized(docs, idCol, textCol), idCol, w)
       .withColumn("_prev", lag(col("_s"), 1).over(byDoc))
       .withColumn("_new",
         when(col("_prev").isNull || col("_s") - col("_prev") > w, 1L)
@@ -132,12 +130,12 @@ object SpanDedup {
     * co-partitioned on the hash.
     */
   private def dupStartRows(toks: DataFrame, idCol: String,
-                           w: Int, persist: Dedup.Persist): DataFrame = {
+                           w: Int): DataFrame = {
     // 0-based window starts: s covers tokens s .. s+w-1. Materialized
     // once — the frequency count and the join-back both consume it,
     // and the pruned count-side scan defeats exchange reuse (same
     // round-10 finding as report()); 24 bytes/window
-    val g = persist(toks
+    val g = graft.Tables.materialize(toks
       .filter(size(col("_tk")) >= w)
       .select(col(idCol), explode(expr(
         s"transform(sequence(0, size(_tk) - $w), " +

@@ -135,8 +135,9 @@ object SqliteFile {
       * declared order (fileformat2 §2.3) — this permutation maps them
       * back. ALTER-added columns sit last in BOTH orders, so the
       * short-record NULL-padding rule survives the permutation.
+      * Computed once per TableDef: CDC emits one JSON record per row.
       */
-    def recordIndex: IndexedSeq[Int] =
+    lazy val recordIndex: IndexedSeq[Int] =
       if (!withoutRowid) columns.indices.toIndexedSeq
       else {
         val nPk = columns.count(_.pkOrdinal > 0)

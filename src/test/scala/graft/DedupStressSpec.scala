@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirScope
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -297,22 +298,21 @@ class DedupStressSpec extends SparkFunSuite {
   }
 
   test("dedup results identical under local and reliable persistence") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mat").toString
-    try {
-      // the slice that contains the planted duplicates AND their
-      // originals (limit() could miss every pair)
-      val docs = corpus.filter(col("doc_id") % 40 === 1 ||
-        col("doc_id") >= 100000000L)
-      val local = Dedup.minhashClusters(docs, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val durable = Dedup.minhashClusters(docs, "doc_id", "text",
-          persist = Dedup.reliablePersist(dir))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(local == durable)
-      assert(local.nonEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    // the slice that contains the planted duplicates AND their
+    // originals (limit() could miss every pair)
+    val docs = corpus.filter(col("doc_id") % 40 === 1 ||
+      col("doc_id") >= 100000000L)
+    def clusters() = Dedup.minhashClusters(docs, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = clusters()
+    val durable = CheckpointDirScope.withCheckpointDir(spark.sparkContext) { dir =>
+      val got = clusters()
+      assert(CheckpointDirScope.filesUnder(dir) > 0,
+        "no reliable checkpoint written under the checkpoint directory")
+      got
     }
+    assert(local == durable)
+    assert(local.nonEmpty)
   }
 
   test("ngram jaccard prefix filtering stays bounded") {

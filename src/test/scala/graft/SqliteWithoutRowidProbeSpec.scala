@@ -130,10 +130,15 @@ class SqliteWithoutRowidProbeSpec extends SparkFunSuite {
       s"plan lost the candidate probe:\n$plan")
     assert(plan.contains("Filter"),
       s"candidate probe must keep the binary post-filter:\n$plan")
-    // the stored variant is 'KEY-00505' only if (505/97)%3 == 1 — it
-    // is: the binary filter keeps exactly the matching-case row
+    // the fixture stores key i in case CASES((i / 97) % 3) of
+    // (Key, KEY, key): (505 / 97) % 3 == 2, so the NOCASE candidate
+    // exists as 'key-00505' and the binary re-filter drops it
+    val candidates = scanReference(db, tdef("wr3"))
+      .filter("upper(k) = 'KEY-00505'").collect().map(_.getString(0)).toSeq
+    assert(candidates == Seq("key-00505"))
     val scan = scanReference(db, tdef("wr3"))
       .filter("k = 'KEY-00505'").collect().map(_.getLong(1)).toSeq
+    assert(scan.isEmpty)
     assert(q.collect().map(_.getLong(1)).toSeq == scan)
   }
 
